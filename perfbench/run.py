@@ -1,7 +1,7 @@
 """RAG-serving benchmark for customkb_spark.
 
     python3 perfbench/run.py --workload serve_interactive --seed 1 \\
-        --seconds 20 --trace 0
+        --seconds 18 --trace 0
 
 Every run starts from a fresh copy of a knowledgebase (KB) of synthetic
 documents, built once per checkout by the engine in it (cached under
@@ -56,7 +56,8 @@ WORKLOADS = ("serve_interactive", "ingest_append")
 TOP_K = 5  # http_api default
 MAX_CHARS = 3000  # http_api default
 RECALL_K = 10
-WARMUP_REQUESTS = 3
+WARMUP_REQUESTS = 5
+WARMUP_APPENDS = 1
 STREAM_LEN = 1000  # upper bound on requests in one run
 RECALL_QUERIES = 10
 PROBE_QUERIES = 4
@@ -261,11 +262,25 @@ class Bench:
 
     # -------------------------------------------------------- set-up
     def setup(self) -> None:
-        from customkb_spark.config import KBConfig
         from customkb_spark.kb import KnowledgeBase
+
+        cached = self._cached_kb()
+        self.build = json.loads((cached / "build.json").read_text())
+        self.start_session()
+        self._capture_fused_hits()
+        if self.args.trace:
+            self.tracer = Tracer(self.sc)
+            self._install_spans()
+            self.tracer.enabled = True
+        shutil.copytree(cached, "kb", ignore=shutil.ignore_patterns("build.json"))
+        self.kb = KnowledgeBase(self.spark, "kb", self.cfg)
+
+    def start_session(self) -> None:
+        from customkb_spark.config import KBConfig
         from customkb_spark.session import get_spark
 
         self.inputs = gen.Inputs(self.args.seed)
+        self.cfg = KBConfig(query_top_k=TOP_K)
         t = _now()
         self.spark = get_spark(
             app_name="perfbench",
@@ -283,23 +298,6 @@ class Bench:
         self.metrics["session.start_s"] = _now() - t
         _log(self.t_start, "session started")
         self.sc = self.spark.sparkContext
-        self._capture_fused_hits()
-        if self.args.trace:
-            self.tracer = Tracer(self.sc)
-            self._install_spans()
-            self.tracer.enabled = True
-        self.cfg = KBConfig(query_top_k=TOP_K)
-        cached = self._cached_kb()
-        self.build = json.loads((cached / "build.json").read_text())
-        shutil.copytree(cached, "kb", ignore=shutil.ignore_patterns("build.json"))
-        self.kb = KnowledgeBase(self.spark, "kb", self.cfg)
-        first = self.inputs.distinct_queries(1)[0]
-        if not self.kb.query(first):
-            raise RuntimeError("first query on the KB returned no context")
-        # the timed operations leave the base KB's vector index as it is
-        # (appends extend it), so its recall is checked up front
-        self.recall_value = self.recall()
-        _log(self.t_start, "KB answers queries; recall checked")
 
     def _cold_build(self, kb_dir: str) -> dict:
         """documents → ``database`` → ``embed`` → ``build_bm25`` → the
@@ -340,22 +338,30 @@ class Bench:
             out[step] = t[i + 1] - t[i]
         out["total_s"] = t[-1] - t[0]
         _log(self.t_start, f"KB built: {out['chunks']} chunks in {out['total_s']:.2f}s")
+        # the timed operations leave the base KB's vector index as it is
+        # (appends extend it), so its recall is a property of the build
+        out["recall_at_10"] = self.recall(kb_dir)
+        _log(self.t_start, "recall checked")
         return out
 
     def _cached_kb(self) -> Path:
         """The base KB, built once per checkout by this engine version
-        (on a miss, here), with the cold build's step times in its
-        ``build.json``. Every run starts from a copy of it."""
+        (on a miss, by a child process, so that the run itself goes on
+        in a JVM as fresh as every other run's), with the cold build's
+        step times in its ``build.json``. Every run starts from a copy
+        of it."""
         h = hashlib.sha256()
-        for f in sorted((ROOT / "customkb_spark").rglob("*.py")) + [HERE / "gen.py"]:
+        for f in sorted((ROOT / "customkb_spark").rglob("*.py")) + sorted(HERE.glob("*.py")):
             h.update(f.relative_to(ROOT).as_posix().encode() + f.read_bytes())
         cache = ROOT / ".perfbench_work" / "cache"
         kb = cache / f"kb-{h.hexdigest()[:16]}"
         if not kb.is_dir():
             tmp = cache / f"tmp-{os.getpid()}"
             try:
-                timings = self._cold_build(str(tmp))
-                (tmp / "build.json").write_text(json.dumps(timings))
+                subprocess.run(
+                    [sys.executable, str(HERE / "run.py"), "--build-kb", str(tmp)],
+                    stdout=sys.stderr, check=True,
+                )
                 tmp.rename(kb)
             except OSError:
                 if not kb.is_dir():  # not a concurrent build that won
@@ -416,6 +422,10 @@ class Bench:
     def serve_interactive(self) -> None:
         from customkb_spark import http_api
 
+        first = self.inputs.distinct_queries(1)[0]
+        if not self.kb.query(first):
+            raise RuntimeError("first query on the KB returned no context")
+        _log(self.t_start, "KB answers queries")
         self.stream = stream = self.inputs.interactive_stream(STREAM_LEN)
         for q in self.inputs.distinct_queries(WARMUP_REQUESTS):
             t = _now()
@@ -465,12 +475,23 @@ class Bench:
             self.input_bytes += nbytes
             return n > 0 and token in ctx, dt
 
+        # the first append of a fresh JVM also starts the Python workers
+        # and compiles the write path; it takes about twice as long as the
+        # next
+        stream = batches()
+        for batch in itertools.islice(stream, WARMUP_APPENDS):
+            ok, dt = op(batch)
+            if not ok:
+                raise RuntimeError("warm-up append is not visible to the next query")
+            _log(self.t_start, f"warm-up append: {dt:.3f}s")
+        self.input_bytes = 0
         self.chunks_bytes0 = _dir_bytes("kb/chunks")
-        self._timed_loop(batches(), op)
+        self._timed_loop(stream, op)
 
     def _timed_loop(self, ops, op) -> None:
-        """Closed loop: run ``op`` on each input until ``--seconds`` have
-        passed. ``op`` returns (ok, latency or None for its own wall
+        """Closed loop: run ``op`` on each input while the next one, if it
+        takes as long as the last, ends within ``--seconds`` (the first
+        always runs). ``op`` returns (ok, latency or None for its own wall
         time)."""
         tr = self.tracer
         block = TRACE_BLOCK.get(self.args.workload)
@@ -479,8 +500,9 @@ class Bench:
         if tr is not None:
             tr.phase = "run"
         deadline = _now() + self.args.seconds
+        last = 0.0
         for i, x in enumerate(ops):
-            if _now() >= deadline:
+            if i and _now() + last > deadline:
                 break
             traced = tr is not None and (block is None or (i // block) % 2 == 0)
             if tr is not None:
@@ -497,7 +519,9 @@ class Bench:
                 traceback.print_exc()
                 self.failed += 1
                 continue
-            dt = out[1] if out[1] is not None else _now() - t
+            finally:
+                last = _now() - t
+            dt = out[1] if out[1] is not None else last
             if not out[0]:
                 print(f"check failed on operation {i}: {x!r}", file=sys.stderr)
                 self.failed += 1
@@ -521,7 +545,7 @@ class Bench:
         vindex = load_vector_index(self.spark, "kb/vindex", vectors, source_dir="kb/vectors")
         return HybridIndex.build(chunks, vectors, cfg=self.cfg, vindex=vindex)
 
-    def recall(self) -> float:
+    def recall(self, kb_dir: str) -> float:
         """ANN recall@10 of the served vector tier: overlap of its top-10
         (``VectorIndexTier.topk``, the call the single-query path makes)
         with the exact cosine top-10 over every stored vector, computed
@@ -529,12 +553,7 @@ class Bench:
         queries (the same for every seed, so the value only moves when
         the engine does). Fusion adds the same BM25 list on both sides,
         so a tier that loses neighbours is the only way to lose fused
-        hits.
-
-        The probe vectors come from the engine's batch embedder, which
-        also starts the Python workers; otherwise the first append's
-        ``embed`` would start them inside its timed cycle, and whether a
-        second cycle fits in the run would hinge on that."""
+        hits. The probe vectors come from the engine's batch embedder."""
         import numpy as np
         import pandas as pd
 
@@ -551,13 +570,15 @@ class Bench:
             frame, "qid", "query_text", cfg.vector_model, cfg.vector_dimensions
         ).collect()
         qvecs = np.array([r["vector"] for r in sorted(embedded, key=lambda r: r["id"])])
-        vectors = self.spark.read.parquet("kb/vectors")
+        vectors = self.spark.read.parquet(f"{kb_dir}/vectors")
         rows = vectors.collect()
         ids = np.array([r["id"] for r in rows])
         mat = np.array([r["vector"] for r in rows], dtype=np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
         sims = qvecs.astype(np.float64) @ mat.T
-        tier = load_vector_index(self.spark, "kb/vindex", vectors, source_dir="kb/vectors")
+        tier = load_vector_index(
+            self.spark, f"{kb_dir}/vindex", vectors, source_dir=f"{kb_dir}/vectors"
+        )
         hits = []
         for qv, sim in zip(qvecs.tolist(), sims):
             served = (
@@ -669,7 +690,7 @@ class Bench:
             metrics = {
                 "setup_s": self.metrics["setup_s"],
                 "latency_p50_s": statistics.median(lat),
-                "recall_at_10": self.recall_value,
+                "recall_at_10": self.build["recall_at_10"],
                 "peak_rss_mb": self.metrics["peak_rss_mb"],
             }
             units = END_TO_END
@@ -730,6 +751,22 @@ class Bench:
             stop_spark(self.spark)
 
 
+def build_kb(out: Path) -> int:
+    """Build the base KB into ``out``, with ``build.json``."""
+    work = ROOT / ".perfbench_work" / f"build-{os.getpid()}"
+    work.mkdir(parents=True)
+    bench = Bench(argparse.Namespace(seed=0, trace=0), _now())
+    try:
+        _prepare_env(work)
+        bench.start_session()
+        timings = bench._cold_build(str(out))
+        (out / "build.json").write_text(json.dumps(timings))
+    finally:
+        bench.close()
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
 def main(argv=None) -> int:
     t_start = _now()
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -764,4 +801,6 @@ def main(argv=None) -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--build-kb"]:
+        sys.exit(build_kb(Path(sys.argv[2])))
     sys.exit(main())

@@ -322,6 +322,19 @@ def cmd_optimize(args) -> int:
     chunks = os.path.join(args.kb_dir, "chunks")
     if os.path.isdir(chunks) and not read_only:
         optimize_chunks(spark, chunks)
+    if not read_only:
+        # each request adds a file to both per-request tables: fold
+        # the log to one file per day, the query cache to one file of
+        # its unexpired rows
+        from customkb_spark.embedding.query_cache import prune_expired
+        from customkb_spark.plans.querylog import compact_query_log
+
+        compact_query_log(os.path.join(args.kb_dir, "query_log"))
+        prune_expired(
+            spark,
+            os.path.join(args.kb_dir, "query_emb_cache"),
+            _kb(args).cfg.query_cache_ttl_days,
+        )
     if not read_only and getattr(args, "reindex", False):
         # drop the persisted vector-index tier so the next build
         # re-selects flat/IVF/IVFPQ for the CURRENT corpus size (a

@@ -1,15 +1,25 @@
 """Query-embedding TTL cache — reference query/embedding.py:30-141.
 
 The reference caches single-query embeddings as per-key JSON files with
-a 7-day TTL (query_cache_ttl_days). The Spark equivalent is a small
-keyed parquet table
+a 7-day TTL (query_cache_ttl_days). Here they are a small keyed parquet
+table
 
     <kb_dir>/query_emb_cache/  (cache_key, embedding, created_at)
 
-probed DRIVER-side before the provider call — a single-query embed is
-inherently a driver operation (one vector), so the probe is a pushed
-filter on the key column, not a join. Key scheme is the reference's
-exactly: f'{model}_{sha256(query_text)}' (query/embedding.py:30-44).
+read and written driver-side with pyarrow; no Spark job runs for a
+probe or a save. Key scheme is the reference's exactly:
+f'{model}_{sha256(query_text)}' (query/embedding.py:30-44).
+
+One tier, in process memory (``_MEMO``). The first probe of a table
+loads it once, keeping the freshest row per key; every later probe is a
+dict lookup. The TTL applies at probe time, so expired rows stay in the
+table until ``prune_expired`` (run by ``customkb optimize``) rewrites it.
+A save adds one file, renamed into place (``functions/parquet_rows.py``):
+the entry is in the table for any reader when the call returns, and in
+this process's memory at once. Rows another process saves after this
+one loaded the table are misses here until the next load (a new
+process, or ``prune_expired`` in this one); a miss only costs a
+provider call.
 
 The batch path doesn't use this table: batch query embedding goes
 through the J5 emb_cache read-through join (embedding/cache.py), which
@@ -20,28 +30,66 @@ a repeated query skips the provider round-trip entirely.
 from __future__ import annotations
 
 import hashlib
+import os
+import threading
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-QUERY_CACHE_SCHEMA = "cache_key string, embedding array<double>, created_at double"
+from customkb_spark.functions import cache_stats
+from customkb_spark.functions.parquet_rows import (
+    compact,
+    data_files,
+    read_files,
+    write_rows,
+)
 
-# In-process memory tier over the parquet table — the reference's
-# embedding cache is two-tier (memory + disk, embedding/cache.py:49-120)
-# and its QUERY cache rides the same design; here the memory tier turns
-# a repeated single query's probe into a dict lookup instead of a Spark
-# job round (measured ~0.5-1 s/query at the kb100k scale point, VERDICT
-# r7 #3). Keyed (path, cache_key) so distinct KBs never cross-hit;
-# bounded FIFO so a long-lived session can't grow it unboundedly.
-_MEMO: dict[tuple[str, str], tuple[list[float], float]] = {}
+# the table layout
+QUERY_CACHE_SCHEMA = pa.schema(
+    [
+        ("cache_key", pa.string()),
+        ("embedding", pa.list_(pa.float64())),
+        ("created_at", pa.float64()),
+    ]
+)
+
+# table path → {cache_key: (embedding, created_at)}, the freshest row
+# per key. Keyed by path so distinct KBs never cross-hit; each table's
+# entries are bounded (first-loaded evicted first) so a long-lived session
+# can't grow it without limit — an evicted key is a miss. _LOCK makes
+# each update's read-modify-write atomic across request threads.
+_MEMO: dict[str, dict[str, tuple[list[float], float]]] = {}
 _MEMO_MAX = 4096
+_LOCK = threading.Lock()
 
 
-def _memo_put(path: str, key: str, embedding: list[float], created_at: float) -> None:
-    if len(_MEMO) >= _MEMO_MAX:
-        _MEMO.pop(next(iter(_MEMO)))
-    _MEMO[(path, key)] = (embedding, created_at)
+def _memo_put(
+    entries: dict[str, tuple[list[float], float]],
+    key: str,
+    embedding: list[float],
+    created_at: float,
+) -> None:
+    with _LOCK:
+        old = entries.get(key)
+        if old is None or old[1] <= created_at:
+            entries[key] = (embedding, created_at)
+        if len(entries) > _MEMO_MAX:
+            entries.pop(next(iter(entries)))
+
+
+def _load(path: str) -> dict[str, tuple[list[float], float]]:
+    table = read_files(data_files(path), QUERY_CACHE_SCHEMA).sort_by("created_at")
+    entries: dict[str, tuple[list[float], float]] = {}
+    for key, emb, created_at in zip(
+        table["cache_key"].to_pylist(),
+        table["embedding"].to_pylist(),
+        table["created_at"].to_pylist(),
+    ):
+        _memo_put(entries, key, emb, created_at)
+    _MEMO[path] = entries
+    return entries
 
 
 def query_cache_key(query_text: str, model: str) -> str:
@@ -58,54 +106,24 @@ def probe_query_embedding(
     now: float | None = None,
 ) -> list[float] | None:
     """Freshest unexpired cached embedding for the query, or None.
-
-    The key filter pushes down to the parquet scan; with the table
-    written sorted/partitioned by key prefix this is a metadata-pruned
-    point lookup even when the cache grows large. Expired rows are
-    ignored (the reference deletes the file on expired read; here
-    ``prune_expired`` does compaction separately, keeping reads
-    read-only)."""
-    import os
-
-    from customkb_spark.functions import cache_stats
-
+    Expired rows are ignored (the reference deletes the file on expired
+    read; here ``prune_expired`` does compaction separately, keeping
+    reads read-only)."""
     now = time.time() if now is None else now
-    key = query_cache_key(query_text, model)
     if not os.path.isdir(path):
         # existence check BEFORE the memo (ADVICE r8): a backing table
         # deleted/pruned by another process must read as a miss, not a
-        # process-memory hit — drop the stale memo rows for this path
-        for k in [k for k in _MEMO if k[0] == path]:
-            _MEMO.pop(k, None)
-        cache_stats.record(cache_stats.QUERY_TTL_CACHE, misses=1)
-        return None
-    memo = _MEMO.get((path, key))
-    if memo is not None and memo[1] > now - ttl_days * 86400.0:
-        cache_stats.record(cache_stats.QUERY_TTL_CACHE, hits=1)
-        return list(memo[0])
-    rows = (
-        # explicit schema: the table's layout is this module's own
-        # constant, and schema inference would cost a footer-read JOB
-        # per probe — at the interactive scale point that job round is
-        # ~10% of total query latency (VERDICT r8 #4)
-        spark.read.schema(QUERY_CACHE_SCHEMA)
-        .parquet(path)
-        .filter(
-            (F.col("cache_key") == key)
-            & (F.col("created_at") > F.lit(now - ttl_days * 86400.0))
-        )
-        .orderBy(F.desc("created_at"))
-        .limit(1)
-        .collect()
-    )
-    cache_stats.record(
-        cache_stats.QUERY_TTL_CACHE, hits=1 if rows else 0, misses=0 if rows else 1
-    )
-    if not rows:
-        return None
-    emb = [float(x) for x in rows[0]["embedding"]]
-    _memo_put(path, key, emb, float(rows[0]["created_at"]))
-    return emb
+        # process-memory hit
+        _MEMO.pop(path, None)
+        entries = {}
+    else:
+        entries = _MEMO.get(path)
+        if entries is None:
+            entries = _load(path)
+    hit = entries.get(query_cache_key(query_text, model))
+    fresh = hit is not None and hit[1] > now - ttl_days * 86400.0
+    cache_stats.record(cache_stats.QUERY_TTL_CACHE, hits=int(fresh), misses=int(not fresh))
+    return list(hit[0]) if fresh else None
 
 
 def save_query_embedding(
@@ -118,34 +136,33 @@ def save_query_embedding(
 ) -> None:
     """Append-only write-back (reference save_query_embedding_to_cache,
     query/embedding.py:116-141)."""
-    now = time.time() if now is None else now
+    now = float(time.time() if now is None else now)
     key = query_cache_key(query_text, model)
-    row = [(key, [float(x) for x in embedding], float(now))]
-    spark.createDataFrame(row, QUERY_CACHE_SCHEMA).write.mode("append").parquet(path)
-    _memo_put(path, key, [float(x) for x in embedding], float(now))
+    emb = [float(x) for x in embedding]
+    write_rows(
+        pa.Table.from_pydict(
+            {"cache_key": [key], "embedding": [emb], "created_at": [now]},
+            schema=QUERY_CACHE_SCHEMA,
+        ),
+        path,
+    )
+    entries = _MEMO.get(path)
+    if entries is not None:  # an unloaded table picks the row up on load
+        _memo_put(entries, key, emb, now)
 
 
 def prune_expired(
     spark: SparkSession, path: str, ttl_days: float = 7, now: float | None = None
 ) -> int:
-    """Compact the cache table down to unexpired rows (the reference
-    removes expired files on read; a distributed cache prunes in one
-    rewrite pass instead). Returns rows kept."""
-    import os
-
-    if not os.path.isdir(path):
+    """Compact the cache table into one file of its unexpired rows (the
+    reference removes expired files on read; here one rewrite pass
+    does it). The next probe reloads the table. Returns rows kept."""
+    files = data_files(path)
+    if not files:
         return 0
     now = time.time() if now is None else now
-    fresh = (
-        spark.read.parquet(path)
-        .filter(F.col("created_at") > F.lit(now - ttl_days * 86400.0))
-        .localCheckpoint()
-    )
-    n = fresh.count()
-    fresh.write.mode("overwrite").parquet(path)
-    # drop this table's memo rows: expired entries must not survive the
-    # compaction in the memory tier (the TTL guard would still catch
-    # them, but the memo should never outlive its backing table)
-    for k in [k for k in _MEMO if k[0] == path]:
-        _MEMO.pop(k, None)
-    return n
+    table = read_files(files, QUERY_CACHE_SCHEMA)
+    fresh = table.filter(pc.greater(table["created_at"], now - ttl_days * 86400.0))
+    compact(path, fresh, files)
+    _MEMO.pop(path, None)
+    return fresh.num_rows

@@ -2,12 +2,12 @@
 (tested there in tests/unit/utils/test_security_utils.py).
 
 Driver-side helpers for single strings (query entry points, config
-loads, log writes) plus column-expression twins for the two that run
-over data at scale (query sanitation in batch query sets, masking in
-the query-log sink). The SQLite-specific pieces (safe_sql_in_query)
-don't exist here — Spark/DuckDB plans are parameterized by
-construction — but the name/table validation survives as guards on
-user-supplied identifiers (KB names, table paths).
+loads, log writes) plus a column-expression twin for the one that runs
+over data at scale (query sanitation in batch query sets). The
+SQLite-specific pieces (safe_sql_in_query) don't exist here —
+Spark/DuckDB plans are parameterized by construction — but the
+name/table validation survives as guards on user-supplied identifiers
+(KB names, table paths).
 """
 
 from __future__ import annotations
@@ -71,17 +71,6 @@ def mask_sensitive_data(text: str) -> str:
     for pattern, repl in _MASK_RULES:
         text = pattern.sub(repl, text)
     return text
-
-
-def mask_sensitive_col(col: Column | str) -> Column:
-    """Column twin for the query-log sink: the SAME rules as the
-    driver-side masker (derived from _MASK_RULES, not re-stated, so
-    the two paths cannot desynchronize), applied as a JVM-side
-    regexp_replace chain — no Python in the write path."""
-    c = F.col(col) if isinstance(col, str) else col
-    for pattern, repl in _MASK_RULES:
-        c = F.regexp_replace(c, pattern.pattern, repl)
-    return c
 
 
 def validate_table_name(table_name: str) -> bool:

@@ -63,7 +63,10 @@ class KBConfig:
     # PQ) — so auto prefers ivfsq whenever n·dims bytes fit here and
     # falls back to ivfpq (pq_m bytes/vector, 8-32× smaller) when they
     # don't. 1 GiB default suits local[32]; on a real cluster set to
-    # executors × the cache slice you can spare.
+    # executors × the cache slice you can spare. The same budget gates
+    # the in-process serving index (plans/resident.py): when its size
+    # estimate fits, single queries run from Python memory with no
+    # Spark job; over it, they run as Spark plans.
     index_memory_budget_mb: int = 1024
     ivf_centroid_multiplier: int = 4
     max_centroids: int = 256

@@ -16,9 +16,12 @@ Semantics preserved from the reference:
   pending set, embed_manager.py:586) — expressed as an anti-join
   against the vectors table instead of a mutable flag column, so the
   append-only tables need no MERGE.
-- ``query`` builds the hybrid index from the tables and runs the full
-  fused-retrieval pipeline; ``context_only`` mirrors the reference's
-  --context-only flag, otherwise the (stubbed) LLM answers.
+- ``query`` builds the hybrid index from the tables once per write and
+  runs the full fused-retrieval pipeline; ``context_only`` mirrors the
+  reference's --context-only flag, otherwise the (stubbed) LLM answers.
+  Within ``cfg.index_memory_budget_mb`` the index is also held in
+  process memory (plans/resident.py) and a query runs no Spark job; over
+  it, the Spark plans of plans/hybrid.py serve. Every write drops both.
 
 At 100 TB: write the chunks table BUCKETED by ``sourcedoc``
 (plans/layout.py — bucketBy into the catalog, per-bucket sorted by
@@ -41,6 +44,7 @@ from customkb_spark.config import KBConfig
 from customkb_spark.embedding.embedder import embed_texts
 from customkb_spark.ingest.pipeline import documents_to_chunks
 from customkb_spark.plans import hybrid as HY
+from customkb_spark.plans import resident as RI
 from customkb_spark.plans.answer import generate_answer
 from customkb_spark.plans.formatters import format_references
 from customkb_spark.plans.querylog import log_query
@@ -52,6 +56,7 @@ class KnowledgeBase:
         self.kb_dir = kb_dir
         self.cfg = cfg or KBConfig()
         self._index: HY.HybridIndex | None = None
+        self._resident: RI.ResidentIndex | None = None
 
     # ---------------------------------------------------------- paths
     def _p(self, name: str) -> str:
@@ -423,6 +428,7 @@ class KnowledgeBase:
                         pass
         self._cached_chunks = None
         self._index = None
+        self._resident = None
 
     def _build_index(self) -> HY.HybridIndex:
         if self._index is None:
@@ -447,6 +453,8 @@ class KnowledgeBase:
                 IS.save_vector_index(
                     self._index.vindex, vpath, source_dir=self._p("vectors")
                 )
+            # None over the memory budget: then Spark plans serve
+            self._resident = RI.ResidentIndex.load(self._index, self.cfg)
         return self._index
 
     def query(
@@ -474,9 +482,10 @@ class KnowledgeBase:
         reference string before answering."""
         t0 = time.time()
         index = self._build_index()
+        cfg, resident = self.cfg, self._resident
         rerank_cache = None
         rerank_sink = None
-        if self.cfg.enable_reranking:
+        if cfg.enable_reranking:
             rerank_cache = (
                 self._read("rerank_cache") if self._exists("rerank_cache") else None
             )
@@ -488,28 +497,28 @@ class KnowledgeBase:
                 if rows.limit(1).count():
                     rows.write.mode("append").parquet(self._p("rerank_cache"))
 
-        ctx = HY.query(
-            index,
-            query_text,
-            self.cfg,
-            categories=categories,
-            query_cache_path=self._p("query_emb_cache"),
-            rerank_cache=rerank_cache,
-            rerank_cache_sink=rerank_sink,
-            # the formatter orders driver-side; the plan-side sort would
-            # cost an extra exchange + AQE round per query (r8 #4)
-            ordered=False,
-        )
-        # ONE action for everything downstream: the context rows are
-        # ≤ k·(scope+1) by construction, so collecting them feeds the
-        # formatter AND the log count without a checkpoint + count pair
-        # of extra scheduler rounds (VERDICT r8 #4)
-        with HY._no_aqe(self.spark):
-            ctx_rows = ctx.select(
-                *[c for c in ("sourcedoc", "doc_id") if c in ctx.columns],
-                "sid",
-                "text",
-            ).collect()
+        if resident is None:  # over the memory budget: Spark plans
+            ctx = HY.query(
+                index, query_text, cfg, categories=categories,
+                query_cache_path=self._p("query_emb_cache"),
+                rerank_cache=rerank_cache, rerank_cache_sink=rerank_sink,
+            )
+            keys = [c for c in ("sourcedoc", "doc_id") if c in ctx.columns]
+            ctx_rows = ctx.select(*keys, "sid", "text").collect()
+        else:
+            text, qvec = HY.embed_query(
+                query_text, cfg, self._p("query_emb_cache"), self.spark
+            )
+            terms = HY.query_terms(text, cfg.bm25_min_token_length, cfg.language)
+            fused_rows = resident.search(terms, qvec, cfg)
+            if cfg.enable_reranking:
+                fused = self.spark.createDataFrame(
+                    [(r["id"], r["score"]) for r in fused_rows], "id long, score double"
+                )
+                fused_rows = HY.rerank(
+                    index, fused, query_text, cfg, rerank_cache, rerank_sink
+                ).collect()
+            ctx_rows = HY.retrieve_context_hits(resident, fused_rows, cfg, categories)
         reference_string = format_references(ctx_rows, fmt)
         if log:
             try:
@@ -621,4 +630,14 @@ class KnowledgeBase:
         from customkb_spark.functions import cache_stats
 
         out["cache_stats"] = cache_stats.snapshot()
+        if self._resident is not None:
+            out["resident_index"] = {
+                "state": "resident",
+                "bytes": self._resident.nbytes,
+                "rows": self._resident.n_rows,
+            }
+        elif not RI.fits(out["chunks"], self.cfg):
+            out["resident_index"] = "over_budget"
+        else:
+            out["resident_index"] = "not_loaded"
         return out

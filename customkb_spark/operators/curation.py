@@ -2261,7 +2261,7 @@ def dsir_log_weights(
     # r9: both branches consume a per-(doc, bucket) histogram instead
     # of the raw token stream (guide §2.3). Column pruning keeps the
     # two histogram subtrees canonically distinct, so the tokenize+md5
-    # scan still runs once per branch (plans/r09/dsir_importance_*.txt)
+    # scan still runs once per branch (see ``explain()`` of this plan)
     # — the measured win is that the broadcast-join probe and both
     # downstream aggregates now process ≤ 16^n rows per doc rather than
     # one row per token (~50× fewer decimal-sum/join evaluations at the

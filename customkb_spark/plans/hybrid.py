@@ -12,14 +12,22 @@ lifecycle (SURVEY.md §3.3) as one declarative pipeline:
 Batch mode (`query_batch`) runs the same plan for a whole DataFrame of
 queries at once — the shape that matters on a cluster: one corpus scan
 serves every query via the broadcast k-NN join.
+
+Single queries: ``query`` is the Spark form, used when the index
+exceeds ``cfg.index_memory_budget_mb`` (and by the flagship entry).
+Within the budget, ``KnowledgeBase.query`` scores with the
+in-memory kernel (``plans/resident.py``) and looks the context
+up with :func:`retrieve_context_hits`; both paths embed the query
+through :func:`embed_query`.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.config import KBConfig
@@ -29,6 +37,7 @@ from customkb_spark.operators import bm25 as B
 from customkb_spark.operators import fusion as FU
 from customkb_spark.operators.range_join import context_range_join
 from customkb_spark.operators.topk import brute_force_topk
+from customkb_spark.plans.resident import ResidentIndex
 
 
 @dataclass
@@ -82,36 +91,52 @@ class HybridIndex:
         )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_aqe(spark):
-    """Disable adaptive execution for one interactive collect.
-
-    AQE re-optimizes per shuffle stage by materializing each as its own
-    JOB — the right trade on a real multi-stage scan, pure scheduler
-    overhead on the interactive path's k-row plans (measured at the
-    kb100k point: the fused head collects in 2 jobs/2.0 s with AQE off
-    vs 3 jobs/2.9 s with it on; the plans are fixed-shape and tiny, so
-    AQE has nothing to re-plan). Session-scoped conf, restored in
-    finally; the batch paths keep AQE — their shuffles are the case it
-    exists for."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def query_terms(query_text: str, min_len: int = 2, language: str = "en") -> list[str]:
     """Query-side twin of the index tokenizer (text.bm25_token_set) —
     the query MUST tokenize identically to the postings index
     (including the language-gated stopword drop) or compound terms
     ('state-of-the-art', '3.14') would never match."""
     return [t for t in X.bm25_tokenize_py(query_text, language) if len(t) >= min_len]
+
+
+def embed_query(
+    query_text: str,
+    cfg: KBConfig,
+    query_cache_path: str | None = None,
+    spark: SparkSession | None = None,
+    query_vec: list[float] | None = None,
+) -> tuple[str, list[float]]:
+    """(sanitized query text, query vector) for both single-query paths.
+
+    Reference sanitize_query_text first: control chars never reach the
+    tokenizer or provider; empty or oversized queries raise. With
+    ``query_cache_path`` the query-embedding TTL cache (reference
+    query/embedding.py:76-141) is probed before the provider call and a
+    miss is saved. A given ``query_vec`` skips the embedding."""
+    from customkb_spark.functions.security import sanitize_query_text
+
+    query_text = sanitize_query_text(query_text)
+    if not query_text:  # control-chars-only strips to nothing
+        raise ValueError("Query text cannot be empty")
+    if query_vec is not None:
+        return query_text, list(map(float, query_vec))
+    if query_cache_path:
+        from customkb_spark.embedding.query_cache import probe_query_embedding
+
+        query_vec = probe_query_embedding(
+            spark, query_cache_path, query_text,
+            cfg.vector_model, cfg.query_cache_ttl_days,
+        )
+    if query_vec is None:
+        provider = get_provider(cfg.vector_model, cfg.vector_dimensions)
+        query_vec = provider.get_embeddings([query_text])[0].tolist()
+        if query_cache_path:
+            from customkb_spark.embedding.query_cache import save_query_embedding
+
+            save_query_embedding(
+                spark, query_cache_path, query_text, cfg.vector_model, query_vec
+            )
+    return query_text, list(map(float, query_vec))
 
 
 def hybrid_search(
@@ -121,39 +146,12 @@ def hybrid_search(
     cfg: KBConfig | None = None,
     query_cache_path: str | None = None,
 ) -> DataFrame:
-    """Fused (id, score) top-k for one query.
-
-    With ``query_cache_path`` the query-embedding TTL cache (reference
-    query/embedding.py:76-141) is probed before the provider call; a
-    repeated query within the TTL never reaches the provider."""
-    from customkb_spark.functions.security import sanitize_query_text
-
-    # reference security_utils.sanitize_query_text at the query entry:
-    # control chars never reach tokenization/the embedding provider,
-    # oversized/empty queries raise before any job is planned
-    query_text = sanitize_query_text(query_text)
-    if not query_text:  # control-chars-only strips to nothing
-        raise ValueError("Query text cannot be empty")
+    """Fused (id, score) top-k for one query (embedding: :func:`embed_query`)."""
     cfg = cfg or KBConfig()
-    if query_vec is None:
-        spark = index.vectors.sparkSession
-        if query_cache_path:
-            from customkb_spark.embedding.query_cache import probe_query_embedding
-
-            query_vec = probe_query_embedding(
-                spark, query_cache_path, query_text,
-                cfg.vector_model, cfg.query_cache_ttl_days,
-            )
-        if query_vec is None:
-            provider = get_provider(cfg.vector_model, cfg.vector_dimensions)
-            query_vec = provider.get_embeddings([query_text])[0].tolist()
-            if query_cache_path:
-                from customkb_spark.embedding.query_cache import save_query_embedding
-
-                save_query_embedding(
-                    spark, query_cache_path, query_text, cfg.vector_model, query_vec
-                )
-    qv = list(map(float, query_vec))
+    query_text, qv = embed_query(
+        query_text, cfg, query_cache_path,
+        index.vectors.sparkSession if query_cache_path else None, query_vec,
+    )
     if index.vindex is not None:
         vec_hits = index.vindex.topk(qv, cfg.query_top_k, cfg.faiss_nprobe)
     else:
@@ -213,152 +211,56 @@ def retrieve_context(
 
 
 def retrieve_context_hits(
-    index: HybridIndex,
+    index: ResidentIndex,
     fused_rows: list,
     cfg: KBConfig | None = None,
     categories: list[str] | None = None,
-    ordered: bool = True,
-) -> DataFrame:
-    """Single-query context retrieval from COLLECTED fused hits — the
-    interactive fast path (VERDICT r7 #3b).
+) -> list:
+    """Context rows (*keys, hit_sid, sid, text) of one query's fused
+    hits, looked up in an in-memory index (``plans/resident.py``)
+    — the reference's SQLite point lookups (query/search.py:567-606).
 
-    ``fused_rows``: the k fused (id, score) rows already on the driver
-    — the reference's own shape (FAISS returns ids, SQLite fetches
-    rows, query/search.py:567-606), and k ≤ query_top_k, so the
-    collect is a constant, never corpus-sized.
-
-    Why not :func:`retrieve_context`: with the hits as a PLAN SUBTREE,
-    the final action decomposes into ~11 scheduler rounds (AQE stages +
-    broadcast-exchange jobs for the id-lookup join and the bounds
-    broadcast) — measured as the dominant share of a 13-job interactive
-    query whose latency is round-scheduling, not data. With the hits as
-    a driver-LOCAL relation, the id lookup is one pushed-filter scan of
-    the cached chunks table and the window expansion broadcasts a
-    LocalTableScan (no job), so hits → ordered context costs two
-    scheduler rounds total. Semantics are identical (same keys, same
-    shrink rule, same inner-join drop of ids absent from chunks); the
-    batch path keeps the fully-plan-side :func:`query_batch` shape.
-
-    ``ordered=False`` (VERDICT r8 #4) drops the final global sort: the
-    interactive formatter re-orders the ≤ k·(scope+1) rows driver-side
-    anyway, and the plan-side orderBy costs an extra exchange + AQE
-    round per query for an ordering nothing consumes. Keep the default
-    for any caller that hands the frame onward.
-    """
-    import math
-
+    ``fused_rows``: the k fused rows, each with ``r["id"]`` and
+    ``r["score"]``. Same semantics as :func:`retrieve_context`: ids
+    absent from the chunks are dropped, the category filter applies to
+    the hit, a NULL document key matches nothing, windows are ±scope/2
+    sids within the hit's document (shrunk below the similarity
+    threshold), and rows come in (keys, hit_sid, sid) order, one per
+    (hit, chunk) pair."""
     cfg = cfg or KBConfig()
-    has_cat = "primary_category" in index.chunks.columns
-    if categories and not has_cat:
+    chunks = index.chunks
+    if categories and "primary_category" not in chunks.column_names:
         raise ValueError(
             "category filter requested but the chunks table has no "
             "primary_category column — run categorize/import first"
         )
-    keys = (
-        ("sourcedoc", "doc_id")
-        if "doc_id" in index.chunks.columns
-        else ("sourcedoc",)
-    )
-    out_cols = [*keys, "hit_sid", "sid", "text"]
-    sid_t = index.chunks.schema["sid"].dataType
-    # schema twin of retrieve_context's output, even when empty
-    empty = index.chunks.filter(F.lit(False)).select(
-        *keys,
-        F.col("sid").alias("hit_sid"),
-        "sid",
-        F.col("originaltext").alias("text"),
-    )
-    if not fused_rows:
-        return empty
-    score_by_id = {r["id"]: r["score"] for r in fused_rows}
-    lookup_cols = ["id", *keys, "sid"] + (["primary_category"] if has_cat else [])
-    hit_rows = (
-        index.chunks.filter(
-            F.col("id").isin([r["id"] for r in fused_rows])
-        )
-        .select(*lookup_cols)
-        .collect()
-    )
-    if categories:
-        hit_rows = [r for r in hit_rows if r["primary_category"] in categories]
-    if not hit_rows:
-        return empty
     # python twin of operators.range_join.context_range
     half = cfg.query_context_scope // 2
     shrunk = max(int(math.ceil(half * cfg.low_similarity_scope_factor)), 1)
-    bounds = []
-    for r in hit_rows:
-        score = score_by_id.get(r["id"])
-        eff = (
-            shrunk
-            if score is not None and score < cfg.similarity_threshold
-            else half
-        )
-        bounds.append(
-            tuple(r[k] for k in keys) + (r["sid"], max(r["sid"] - eff, 0), r["sid"] + eff)
-        )
-    # LITERAL hit windows (VERDICT r8 #4): the ≤ k bounds are inlined
-    # as an array-of-structs expression instead of a createDataFrame
-    # relation. A python-list DataFrame is parallelize-backed, so
-    # broadcasting it for the join costs a collect JOB plus a broadcast
-    # exchange; a literal array costs neither — the window expansion
-    # becomes ONE map-side scan of the chunks table (filter + explode),
-    # no join round at all. Literal types are CAST to the chunks
-    # table's own key/sid types (ADVICE r8 — the values come from
-    # collected chunks rows, so they match by construction). A chunk
-    # row overlapping several hit windows emits one context row per
-    # (hit, chunk) pair via explode, exactly like the former inner
-    # join; a NULL key never matches (join semantics preserved).
-    key_ts = [index.chunks.schema[k].dataType for k in keys]
-    hit_structs = F.array(*[
-        F.struct(
-            *[
-                F.lit(b[i]).cast(key_ts[i]).alias(f"h_{k}")
-                for i, k in enumerate(keys)
-            ],
-            F.lit(b[len(keys)]).cast(sid_t).alias("hit_sid"),
-            F.lit(b[len(keys) + 1]).cast(sid_t).alias("lo"),
-            F.lit(b[len(keys) + 2]).cast(sid_t).alias("hi"),
-        )
-        for b in bounds
-    ])
-
-    def _match(h):
-        c = F.col("sid").between(h["lo"], h["hi"])
-        for k in keys:
-            c = (F.col(k) == h[f"h_{k}"]) & c
-        return c
-
-    # coarse pushdown prune: the per-row array filter is exact, but the
-    # scan itself should only read row groups the hit documents and the
-    # global sid envelope can touch
-    sid_off = len(keys)
-    lo_min = min(b[sid_off + 1] for b in bounds)
-    hi_max = max(b[sid_off + 2] for b in bounds)
-    docs = [b[0] for b in bounds if b[0] is not None]
-    if not docs:
-        return empty  # every hit has a NULL sourcedoc: nothing can match
-    out = (
-        index.chunks.filter(
-            F.col("sourcedoc").isin(docs)
-            & F.col("sid").between(F.lit(lo_min), F.lit(hi_max))
-        )
-        .withColumn("_hits", F.filter(hit_structs, _match))
-        .filter(F.size("_hits") > 0)
-        .select(
-            *keys,
-            F.explode("_hits").alias("_h"),
-            "sid",
-            F.col("originaltext").alias("text"),
-        )
-        .select(
-            *keys,
-            F.col("_h.hit_sid").alias("hit_sid"),
-            "sid",
-            "text",
-        )
-    )
-    return out.orderBy(*out_cols[:-1]) if ordered else out
+    hits = []
+    for r, row in zip(fused_rows, index.rows_of([r["id"] for r in fused_rows])):
+        if row < 0 or any(not chunks[k][row].is_valid for k in index.keys):
+            continue
+        if categories and chunks["primary_category"][row].as_py() not in categories:
+            continue
+        low = r["score"] is not None and r["score"] < cfg.similarity_threshold
+        hits.append((row, shrunk if low else half))
+    positions, hit_sids = [], []
+    for row, eff in sorted(hits):  # row order is (keys, sid) order
+        doc = index.doc_of_row[row]
+        start, end = index.doc_offsets[doc], index.doc_offsets[doc + 1]
+        sids = index.sid[start:end]
+        sid = int(index.sid[row])
+        lo = start + np.searchsorted(sids, max(sid - eff, 0), "left")
+        hi = start + np.searchsorted(sids, sid + eff, "right")
+        positions.extend(range(lo, hi))
+        hit_sids.extend([sid] * (hi - lo))
+    ctx = chunks.select([*index.keys, "sid", "originaltext"]).take(positions).to_pylist()
+    make = Row(*index.keys, "hit_sid", "sid", "text")
+    return [
+        make(*[c[k] for k in index.keys], h, c["sid"], c["originaltext"])
+        for c, h in zip(ctx, hit_sids)
+    ]
 
 
 def hybrid_search_batch(
@@ -572,6 +474,53 @@ def rag_batch(
     return answer_batch(pairs, query_col="query_text")
 
 
+def rerank(
+    index: HybridIndex,
+    fused: DataFrame,
+    query_text: str,
+    cfg: KBConfig,
+    rerank_cache: DataFrame | None = None,
+    rerank_cache_sink=None,
+) -> DataFrame:
+    """The fused head re-ordered by the rerank stage (M3/T4): (id,
+    score) of the top ``query_top_k`` by final rank. ``rerank_cache``
+    (pair_key, rerank_score) short-circuits already-scored pairs and
+    ``rerank_cache_sink(new_entries_df)`` receives the write-back rows
+    (reference rerank_manager.py:48-119)."""
+    from customkb_spark.operators.rerank import rerank_hits, rerank_hits_cached
+
+    q_terms = query_terms(query_text, min_len=1, language=cfg.language)
+    if rerank_cache is not None or rerank_cache_sink is not None:
+        from customkb_spark.functions import cache_stats
+
+        probe_stats: dict = {}
+        reranked, new_entries = rerank_hits_cached(
+            fused,
+            index.chunks,
+            query_text,
+            q_terms,
+            rerank_cache,
+            cfg.reranking_top_k,
+            id_col="id",
+            text_col="originaltext",
+            stats=probe_stats,
+        )
+        if probe_stats:
+            cache_stats.record(cache_stats.RERANK_CACHE, **probe_stats)
+        if rerank_cache_sink is not None:
+            rerank_cache_sink(new_entries)
+    else:
+        reranked = rerank_hits(
+            fused,
+            index.chunks,
+            q_terms,
+            cfg.reranking_top_k,
+            id_col="id",
+            text_col="originaltext",
+        )
+    return reranked.orderBy("final_rank").limit(cfg.query_top_k).select("id", "score")
+
+
 def query(
     index: HybridIndex,
     query_text: str,
@@ -581,59 +530,13 @@ def query(
     query_cache_path: str | None = None,
     rerank_cache: DataFrame | None = None,
     rerank_cache_sink=None,
-    ordered: bool = True,
 ) -> DataFrame:
-    """Full pipeline: text in → ordered context rows out
-    (the reference's --context-only semantics, processing.py:262-264).
-    With cfg.enable_reranking the fused head is re-ordered by the
-    rerank stage (M3/T4) before context retrieval; ``rerank_cache``
-    (pair_key, rerank_score) short-circuits already-scored pairs and
-    ``rerank_cache_sink(new_entries_df)`` receives the write-back rows
-    (reference rerank_manager.py:48-119). ``ordered=False`` skips the
-    plan-side context sort for consumers that re-order driver-side
-    (KnowledgeBase.query's formatter — VERDICT r8 #4)."""
+    """Full pipeline as one Spark plan: text in → ordered context rows
+    (*keys, hit_sid, sid, text) out (the reference's --context-only
+    semantics, processing.py:262-264). With cfg.enable_reranking the
+    fused head passes through :func:`rerank` before context retrieval."""
     fused = hybrid_search(index, query_text, query_vec, cfg, query_cache_path)
     cfg = cfg or KBConfig()
     if cfg.enable_reranking:
-        from customkb_spark.operators.rerank import rerank_hits, rerank_hits_cached
-
-        q_terms = query_terms(query_text, min_len=1, language=cfg.language)
-        if rerank_cache is not None or rerank_cache_sink is not None:
-            from customkb_spark.functions import cache_stats
-
-            probe_stats: dict = {}
-            reranked, new_entries = rerank_hits_cached(
-                fused,
-                index.chunks,
-                query_text,
-                q_terms,
-                rerank_cache,
-                cfg.reranking_top_k,
-                id_col="id",
-                text_col="originaltext",
-                stats=probe_stats,
-            )
-            if probe_stats:
-                cache_stats.record(cache_stats.RERANK_CACHE, **probe_stats)
-            if rerank_cache_sink is not None:
-                rerank_cache_sink(new_entries)
-        else:
-            reranked = rerank_hits(
-                fused,
-                index.chunks,
-                q_terms,
-                cfg.reranking_top_k,
-                id_col="id",
-                text_col="originaltext",
-            )
-        fused = (
-            reranked.orderBy("final_rank")
-            .limit(cfg.query_top_k)
-            .select("id", "score")
-        )
-    # interactive fast path: the fused head is ≤ query_top_k rows —
-    # collect it and retrieve context from the literal hit set (see
-    # retrieve_context_hits; the batch path stays fully plan-side)
-    with _no_aqe(index.chunks.sparkSession):
-        fused_rows = fused.collect()
-    return retrieve_context_hits(index, fused_rows, cfg, categories, ordered=ordered)
+        fused = rerank(index, fused, query_text, cfg, rerank_cache, rerank_cache_sink)
+    return retrieve_context(index, fused, cfg, categories)

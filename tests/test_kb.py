@@ -162,6 +162,12 @@ def test_verify_reports_index_freshness(spark, tmp_path, documents):
     # language change makes the persisted postings the wrong index
     kb.cfg.language = "de"
     assert kb.verify()["bm25_index"] == "stale"
+    # the in-memory serving index is loaded by the first query
+    assert v["resident_index"] == "not_loaded"
+    kb.embed()
+    kb.query("spark data", log=False)
+    resident = kb.verify()["resident_index"]
+    assert resident["state"] == "resident" and resident["rows"] == v["chunks"]
 
 
 def test_column_profile_hll_tier(spark):

@@ -73,7 +73,7 @@ def test_minhash_signatures_partial_agg_exchange(spark, documents):
     # r9: signatures run over exploded shingle rows with a groupBy(id)
     # min — the plan must keep the map-side partial aggregate so the
     # ONE exchange carries ~a row per doc, never the shingle stream
-    # (plans/r09/minhash_lsh_dedup_after.txt)
+    # (asserted on the formatted plan below)
     sigs = D.minhash_signatures(documents, "doc_id", "text", 16, 3)
     plan = explain_str(sigs, "formatted")
     tree = plan.split("\n\n", 1)[0]  # node tree, before the detail blocks

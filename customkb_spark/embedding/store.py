@@ -14,7 +14,10 @@ verifies/rebuilds it). The Spark-first equivalents:
   assigned to the EXISTING centroids — same as FAISS ``add`` after
   ``train``. ``index_drift`` reports per-cluster assignment distance so
   callers know when the frozen centroids have drifted enough to
-  retrain (the reference's verify-indexes analogue for ANN).
+  retrain (the reference's verify-indexes analogue for ANN);
+- one verdict (``_tier_verdict``: fresh / appendable / stale) judges a
+  saved tier against the vectors table; ``load_vector_index`` acts on
+  it and ``index_freshness`` reports it.
 
 At 100 TB: appends write only the affected cluster partitions; a
 retrain decision is a stats read, never a full rescan.
@@ -269,131 +272,124 @@ def _write_meta(spark, path, kind, n, id_col, vec_col, fp, src_fp=None) -> None:
     )
 
 
-def index_freshness(spark: SparkSession, path: str, vectors: DataFrame) -> str:
-    """Report-only freshness verdict for a saved tier, using the SAME
-    rules ``load_vector_index`` applies at query time (so ``verify``
-    never disagrees with what a query would do):
+def _tier_verdict(
+    spark: SparkSession, path: str, vectors: DataFrame, meta,
+    source_dir: str | None = None,
+) -> tuple[str, str | None]:
+    """The one freshness rule for a saved tier: ``(verdict, fp_now)``,
+    each step run only when the one before cannot decide:
 
-    - ``"fresh"`` — fingerprint matches (or flat tier: nothing to go
-      stale);
-    - ``"appendable"`` — ivf, content changed but purely by appends
-      (a query absorbs them FAISS-``add``-style);
-    - ``"stale"`` — in-place mutation / ivfpq change / pre-fingerprint
-      meta: a query would rebuild;
-    - ``"absent"`` — no readable saved index.
+    1. with ``source_dir`` (the directory ``vectors`` was read from), an
+       unchanged ``dir_fingerprint`` listing proves the content
+       unchanged (parquet files are immutable) → ``"fresh"``, no scan;
+    2. the content fingerprint — not a row count: vectors re-embedded
+       under the same ids must never serve stale neighbors — equals the
+       saved one → ``"fresh"``;
+    3. ivf/ivfsq only: the previously-indexed ids' content is unchanged,
+       so the change is a PURE append → ``"appendable"`` (FAISS ``add``
+       against the frozen centroids / SQ grid). ivfpq is rebuilt
+       instead: its residual codebooks drift fastest as the corpus
+       grows, and a rebuild doubles as the retrain ``index_drift``
+       would recommend.
+
+    Anything else (in-place mutation, pre-fingerprint meta) is
+    ``"stale"``; a flat tier is always ``"fresh"`` (the raw vectors
+    table IS the index). ``fp_now`` is the vectors' current content
+    fingerprint (None for flat or pre-fingerprint meta).
     """
+    fp_old = getattr(meta, "fp", None)
+    if meta.kind == "flat":
+        return "fresh", None
+    if fp_old is None:
+        return "stale", None
+    src_fp_old = getattr(meta, "src_fp", None)
+    if src_fp_old is not None and dir_fingerprint(source_dir) == src_fp_old:
+        return "fresh", fp_old
+    fp_now = content_fingerprint(vectors, meta.id_col, meta.vec_col)
+    if fp_now == fp_old:
+        return "fresh", fp_now
+    if meta.kind not in ("ivf", "ivfsq"):
+        return "stale", fp_now
+    indexed_ids = spark.read.parquet(f"{path}/indexed").select(meta.id_col)
+    old_subset = vectors.join(indexed_ids, meta.id_col, "left_semi")
+    if content_fingerprint(old_subset, meta.id_col, meta.vec_col) == fp_old:
+        return "appendable", fp_now
+    return "stale", fp_now
+
+
+def index_freshness(
+    spark: SparkSession, path: str, vectors: DataFrame, source_dir: str | None = None
+) -> str:
+    """Report-only ``_tier_verdict`` of a saved tier — the verdict
+    ``load_vector_index`` acts on, so ``verify`` never disagrees with
+    what a query would do: ``"fresh"``, ``"appendable"`` (a query
+    absorbs the new vectors), ``"stale"`` (a query rebuilds) or
+    ``"absent"`` (no readable saved index)."""
     try:
         meta = spark.read.parquet(f"{path}/meta").collect()[0]
     except Exception:
         return "absent"
-    if meta.kind == "flat":
-        return "fresh"
-    fp_old = getattr(meta, "fp", None)
-    if fp_old is None:
-        return "stale"
-    if content_fingerprint(vectors, meta.id_col, meta.vec_col) == fp_old:
-        return "fresh"
-    if meta.kind != "ivf":
-        return "stale"
     try:
-        indexed_ids = spark.read.parquet(f"{path}/indexed").select(meta.id_col)
+        return _tier_verdict(spark, path, vectors, meta, source_dir)[0]
     except Exception:
-        return "stale"
-    old_subset = vectors.join(indexed_ids, meta.id_col, "left_semi")
-    if content_fingerprint(old_subset, meta.id_col, meta.vec_col) == fp_old:
-        return "appendable"
-    return "stale"
+        return "stale"  # unreadable indexed table: a query would rebuild
 
 
 def load_vector_index(
     spark: SparkSession, path: str, vectors: DataFrame,
     source_dir: str | None = None,
 ):
-    """Rehydrate a saved tier, refreshing it if the vectors table changed.
+    """Rehydrate a saved tier, acting on its ``_tier_verdict``:
 
-    Freshness is judged by a CONTENT fingerprint (content_fingerprint),
-    not a bare row count — vectors re-embedded under the same ids (force
-    re-ingest, kb.py) must never serve stale neighbors:
-
-    - fingerprint matches → load as-is (no training, no assignment);
-    - ``ivf`` and the change is a PURE APPEND (the previously-indexed
-      ids' content is byte-identical) → ``incremental_index`` the new
-      ids against the frozen centroids (FAISS ``add``), then load;
-    - any in-place mutation, or ``ivfpq`` with any change → None
-      (residual codes should be retrained/re-encoded; caller rebuilds);
-    - no saved index / pre-fingerprint meta → None.
-
-    With ``source_dir`` (the directory ``vectors`` was read from) an
-    unchanged file listing PROVES the content unchanged (parquet files
-    are immutable) and the load skips the corpus scan — the warm-path
-    load is then metadata-only. A changed/absent listing only demotes
-    to the content check, never to a stale verdict.
+    - ``"fresh"`` → load as-is (no training, no assignment; with an
+      unchanged ``source_dir`` listing the load is metadata-only);
+    - ``"appendable"`` → assign the new ids to the frozen centroids
+      (ivf: ``incremental_index``; ivfsq: encode on the frozen grid),
+      rewrite meta, then load;
+    - ``"stale"``, no saved index, or a partially-written/corrupt index
+      dir (e.g. a killed save) → None: the caller rebuilds.
     """
     try:
         meta = spark.read.parquet(f"{path}/meta").collect()[0]
+        verdict, fp_now = _tier_verdict(spark, path, vectors, meta, source_dir)
+        if verdict == "stale":
+            return None
+        tier = _load_tier(spark, path, vectors, meta)
+        if verdict == "appendable":
+            _append_to_tier(tier, f"{path}/indexed")
+            _write_meta(
+                spark, path, meta.kind, vectors.count(), meta.id_col, meta.vec_col,
+                fp_now, dir_fingerprint(source_dir),
+            )
+            tier.indexed = spark.read.parquet(f"{path}/indexed")
+        return tier
     except Exception:
-        return None
-    try:
-        return _load_tier(spark, path, vectors, meta, source_dir)
-    except Exception:
-        # partially-written/corrupt index dir (e.g. a killed save):
-        # fall back to a fresh build rather than failing the query
         return None
 
 
-def _load_tier(
-    spark: SparkSession, path: str, vectors: DataFrame, meta,
-    source_dir: str | None = None,
-):
+def _append_to_tier(tier, table_path: str) -> None:
+    """FAISS ``add``: write the ids the saved tier lacks, assigned to its
+    frozen centroids (ivf) or encoded on its frozen SQ grid (ivfsq), so
+    new rows encode deterministically."""
+    fresh = tier.vectors.join(tier.indexed.select(tier.id_col), tier.id_col, "left_anti")
+    if tier.kind == "ivf":
+        appended = assign_clusters(fresh, tier.centroids, tier.vec_col)
+    else:
+        from customkb_spark.embedding.sq import encode_sq
+        from customkb_spark.functions.vector import l2_normalized_frame
+
+        normed = l2_normalized_frame(fresh.select(tier.id_col, tier.vec_col), tier.vec_col)
+        appended = encode_sq(normed, tier.sq, tier.id_col, tier.vec_col)
+    if appended.limit(1).count():
+        write_ivf_table(appended, table_path, mode="append")
+
+
+def _load_tier(spark: SparkSession, path: str, vectors: DataFrame, meta):
     from customkb_spark.embedding.auto import VectorIndexTier
 
     if meta.kind == "flat":
-        # the raw vectors table IS the index — nothing can go stale
         return VectorIndexTier("flat", vectors, meta.id_col, meta.vec_col)
-    fp_old = getattr(meta, "fp", None)
-    if fp_old is None:
-        return None  # pre-fingerprint meta: can't prove freshness → rebuild
-    src_fp_old = getattr(meta, "src_fp", None)
-    if src_fp_old is not None and dir_fingerprint(source_dir) == src_fp_old:
-        fp_now = fp_old  # unchanged listing ⇒ unchanged content
-    else:
-        fp_now = content_fingerprint(vectors, meta.id_col, meta.vec_col)
     cents = load_centroids(spark, f"{path}/centroids")
-    if fp_now != fp_old:
-        if meta.kind not in ("ivf", "ivfsq"):
-            return None
-        # ivf/ivfsq absorb PURE appends (FAISS ``add`` after ``train``
-        # — both assignment and the SQ grid are frozen artifacts, so
-        # new rows encode deterministically); any in-place re-embed
-        # under existing ids invalidates the table. ivfpq could in
-        # principle add the same way but is rebuilt: its residual
-        # codebooks drift fastest as the corpus grows, and a rebuild
-        # doubles as the retrain index_drift would recommend.
-        indexed_ids = spark.read.parquet(f"{path}/indexed").select(meta.id_col)
-        old_subset = vectors.join(indexed_ids, meta.id_col, "left_semi")
-        if content_fingerprint(old_subset, meta.id_col, meta.vec_col) != fp_old:
-            return None
-        fresh = vectors.join(indexed_ids, meta.id_col, "left_anti")
-        if meta.kind == "ivf":
-            incremental_index(
-                vectors, f"{path}/indexed", cents,
-                id_col=meta.id_col, vec_col=meta.vec_col,
-            )
-        else:
-            from customkb_spark.embedding.sq import encode_sq
-            from customkb_spark.functions.vector import l2_normalized_frame
-
-            sq_m = load_sq(spark, f"{path}/sq", centroids=cents)
-            normed = l2_normalized_frame(
-                fresh.select(meta.id_col, meta.vec_col), meta.vec_col
-            )
-            appended = encode_sq(normed, sq_m, meta.id_col, meta.vec_col)
-            if appended.limit(1).count():
-                write_ivf_table(appended, f"{path}/indexed", mode="append")
-        _write_meta(
-            spark, path, meta.kind, vectors.count(), meta.id_col, meta.vec_col,
-            fp_now, dir_fingerprint(source_dir),
-        )
     indexed = spark.read.parquet(f"{path}/indexed")
     if meta.kind == "ivf":
         return VectorIndexTier(

@@ -5,13 +5,18 @@ tables.
 A KB is a directory of parquet tables (the reference's
 $VECTORDBS/<name>/ with SQLite+FAISS+NPZ sidecars, SURVEY.md §1.1):
 
-    <kb_dir>/chunks/      the canonical chunk table (CHUNKS_SCHEMA subset)
+    <kb_dir>/chunks/      the canonical chunk table (CHUNKS_SCHEMA subset);
+                          its ``sourcedoc`` column is the file registry
     <kb_dir>/vectors/     (id, vector) — the FAISS-file equivalent
-    <kb_dir>/ingest_log/  (file_path, …) — the file_metadata registry
+    <kb_dir>/vindex/, postings/, term_stats/, bm25_meta/
+                          derived indexes; each records the fingerprint
+                          of the table it covers, and one freshness rule
+                          per index judges it on read
 
 Semantics preserved from the reference:
 - ``database`` is incremental: already-ingested sources are skipped via
-  a left-anti join on the ingest log (S4/U2); ``force`` re-ingests.
+  a left-anti join on the distinct ``chunks.sourcedoc`` (S4/U2);
+  ``force`` re-ingests.
 - ``embed`` embeds only rows without a vector (the ``embedded=0``
   pending set, embed_manager.py:586) — expressed as an anti-join
   against the vectors table instead of a mutable flag column, so the
@@ -28,8 +33,7 @@ At 100 TB: write the chunks table BUCKETED by ``sourcedoc``
 sid) so each document's chunks co-locate and every per-doc operator
 (sid window, context range join, chunk stats, categorize sampling)
 plans exchange-free; proven on the plan in
-tests/test_plans.py::test_bucketed_groupby_no_exchange. The ingest
-log stays tiny either way.
+tests/test_plans.py::test_bucketed_groupby_no_exchange.
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.config import KBConfig
@@ -75,12 +79,13 @@ class KnowledgeBase:
         Returns the number of NEW chunks written. Incremental by
         ``source`` path; ``force=True`` re-ingests everything (the
         reference deletes+reinserts per path, db_manager.py:613-615).
+        A source is already ingested when ``chunks.sourcedoc`` holds it:
+        the chunks write is the only record, so a call killed after it
+        is retried without duplicating chunk ids.
         """
-        if not force and self._exists("ingest_log"):
-            seen = self._read("ingest_log")
-            docs = docs.join(
-                seen.select(F.col("file_path").alias("source")), "source", "left_anti"
-            )
+        if not force and self._exists("chunks"):
+            seen = self._read("chunks").select(F.col("sourcedoc").alias("source"))
+            docs = docs.join(seen.distinct(), "source", "left_anti")
         lang = "lang" if "lang" in docs.columns else None
         if lang is None and self.cfg.detect_language:
             # reference database --detect-language: per-doc heuristic
@@ -123,39 +128,8 @@ class KnowledgeBase:
                 kept_vecs.write.mode("overwrite").parquet(self._p("vectors"))
             merged = kept.unionByName(chunks).localCheckpoint()
             merged.write.mode("overwrite").parquet(self._p("chunks"))
-            old_log = (
-                self._read("ingest_log")
-                .join(
-                    sources.select(F.col("source").alias("file_path")),
-                    "file_path",
-                    "left_anti",
-                )
-                if self._exists("ingest_log")
-                else None
-            )
-            new_log = docs.select(
-                F.col("source").alias("file_path"),
-                F.current_timestamp().alias("ingested_at"),
-            ).distinct()
-            log = (
-                old_log.unionByName(new_log).localCheckpoint()
-                if old_log is not None
-                else new_log
-            )
-            log.write.mode("overwrite").parquet(self._p("ingest_log"))
-            # chunk ids are deterministic, so a force re-ingest can change
-            # text/vectors IN PLACE under unchanged ids and row counts —
-            # the persisted ANN/BM25 artifacts are unprovably stale; drop
-            # them so the next query rebuilds (store.py's fingerprint
-            # check is the backstop for out-of-band mutation)
-            self._drop_persisted_indexes()
         else:
             chunks.write.mode("append").parquet(self._p("chunks"))
-            log = docs.select(
-                F.col("source").alias("file_path"),
-                F.current_timestamp().alias("ingested_at"),
-            ).distinct()
-            log.write.mode("append").parquet(self._p("ingest_log"))
         self._invalidate()
         return n
 
@@ -236,56 +210,22 @@ class KnowledgeBase:
         """Materialize the BM25 index tables (postings, term_stats) to
         the KB dir — the reference's ``customkb bm25`` command, which
         tokenizes the corpus into a persisted NPZ index
-        (bm25_manager.py). Skips the build when the persisted index
-        already covers the current chunks (content-fingerprint freshness
-        check, the verify-indexes analogue). Returns
+        (bm25_manager.py). Skips the build when ``_bm25_freshness``
+        finds the persisted index covers the current chunks (the
+        verify-indexes analogue). Returns
         ``{n_chunks, avgdl, n_terms, rebuilt}``."""
-        from customkb_spark.operators import bm25 as B25
-
-        from customkb_spark.embedding.store import content_fingerprint, dir_fingerprint
+        from customkb_spark.embedding.store import content_fingerprint
 
         chunks = self._read("chunks")
-        if not force and self._exists("bm25_meta"):
-            meta = self._read("bm25_meta").collect()[0]
-            # language is part of freshness: postings tokenized under a
-            # different stopword gate are the wrong index for this cfg.
-            # Unchanged chunks-dir listing proves content unchanged
-            # without any corpus scan; otherwise fall to the content
-            # fingerprint (force re-ingest can rewrite text under
-            # unchanged ids and counts, ADVICE r2).
-            src_fp = getattr(meta, "chunks_src_fp", None)
-            if getattr(meta, "language", "en") == self.cfg.language and (
-                (src_fp is not None and dir_fingerprint(self._p("chunks")) == src_fp)
-                or getattr(meta, "chunks_fp", None)
-                == content_fingerprint(chunks, "id", "originaltext")
-            ):
-                return {
-                    "n_chunks": int(meta.n_chunks), "avgdl": float(meta.avgdl),
-                    "n_terms": self._read("term_stats").count(), "rebuilt": False,
-                }
-        n, avgdl = B25.corpus_stats(chunks, "originaltext", language=self.cfg.language)
-        fp = content_fingerprint(chunks, "id", "originaltext")
-        postings = B25.build_postings(chunks, "id", "originaltext", language=self.cfg.language)
-        postings.write.mode("overwrite").parquet(self._p("postings"))
-        # read back so term_stats aggregates the materialized table
-        # instead of re-tokenizing the corpus a second time
-        postings = self._read("postings")
-        stats = B25.build_term_stats(postings, n)
-        stats.write.mode("overwrite").parquet(self._p("term_stats"))
-        from customkb_spark.embedding.store import _write_single_file, dir_fingerprint
-
-        _write_single_file(
-            self.spark,
-            [(int(n), float(avgdl), fp, self.cfg.language,
-              dir_fingerprint(self._p("chunks")))],
-            "n_chunks long, avgdl double, chunks_fp string, language string, "
-            "chunks_src_fp string",
-            self._p("bm25_meta"),
-        )
-        self._invalidate()
+        meta, fp = (None, None) if force else self._bm25_freshness(chunks)
+        rebuilt = meta is None
+        if rebuilt:
+            if fp is None:
+                fp = content_fingerprint(chunks, "id", "originaltext")
+            meta = self._write_bm25(chunks, "", "bm25_meta", fp)
         return {
-            "n_chunks": n, "avgdl": avgdl,
-            "n_terms": self._read("term_stats").count(), "rebuilt": True,
+            "n_chunks": int(meta.n_chunks), "avgdl": float(meta.avgdl),
+            "n_terms": self._read("term_stats").count(), "rebuilt": rebuilt,
         }
 
     def build_bm25_filtered(
@@ -310,8 +250,6 @@ class KnowledgeBase:
         length normalization are relative to the focused corpus, not
         the full KB).
         """
-        from customkb_spark.operators import bm25 as B25
-
         chunks = self._read("chunks")
         cond = None
         if keywords:
@@ -332,27 +270,11 @@ class KnowledgeBase:
                 cond = c if cond is None else (cond & c)
         sliced = chunks.filter(cond) if cond is not None else chunks
 
-        n, avgdl = B25.corpus_stats(sliced, "originaltext", language=self.cfg.language)
-        postings = B25.build_postings(
-            sliced, "id", "originaltext", language=self.cfg.language
-        )
-        postings.write.mode("overwrite").parquet(self._p(f"{name}_postings"))
-        postings = self._read(f"{name}_postings")
-        stats = B25.build_term_stats(postings, n)
-        stats.write.mode("overwrite").parquet(self._p(f"{name}_term_stats"))
-        from customkb_spark.embedding.store import _write_single_file
-
-        _write_single_file(
-            self.spark,
-            [(int(n), float(avgdl), self.cfg.language)],
-            "n_chunks long, avgdl double, language string",
-            self._p(f"{name}_meta"),
-        )
-        self._invalidate()
+        meta = self._write_bm25(sliced, f"{name}_", f"{name}_meta")
         return {
-            "n_chunks": int(n),
-            "avgdl": float(avgdl),
-            "n_terms": stats.count(),
+            "n_chunks": int(meta.n_chunks),
+            "avgdl": float(meta.avgdl),
+            "n_terms": self._read(f"{name}_term_stats").count(),
             "name": name,
         }
 
@@ -366,48 +288,63 @@ class KnowledgeBase:
             (int(meta.n_chunks), float(meta.avgdl)),
         )
 
-    def _persisted_bm25(self, chunks) -> tuple:
-        """(postings, term_stats, (n, avgdl)) from the persisted index
-        when it is fresh, else (None, None, None)."""
-        if not (
-            self._exists("bm25_meta")
-            and self._exists("postings")
-            and self._exists("term_stats")
+    def _write_bm25(self, chunks, prefix: str, meta_name: str, fp=None):
+        """The one BM25 build: corpus stats → ``<prefix>postings`` →
+        read back (term_stats aggregates the materialized table instead
+        of re-tokenizing the corpus) → ``<prefix>term_stats`` → meta,
+        written last. ``fp`` is the chunks' content fingerprint the
+        primary index records for ``_bm25_freshness``. Returns the meta
+        row."""
+        from customkb_spark.embedding.store import _write_single_file, dir_fingerprint
+        from customkb_spark.operators import bm25 as B25
+
+        lang = self.cfg.language
+        n, avgdl = B25.corpus_stats(chunks, "originaltext", language=lang)
+        postings = B25.build_postings(chunks, "id", "originaltext", language=lang)
+        postings.write.mode("overwrite").parquet(self._p(f"{prefix}postings"))
+        stats = B25.build_term_stats(self._read(f"{prefix}postings"), n)
+        stats.write.mode("overwrite").parquet(self._p(f"{prefix}term_stats"))
+        meta = Row(
+            n_chunks=int(n), avgdl=float(avgdl), chunks_fp=fp, language=lang,
+            chunks_src_fp=dir_fingerprint(self._p("chunks")),
+        )
+        _write_single_file(
+            self.spark, [tuple(meta)],
+            "n_chunks long, avgdl double, chunks_fp string, language string, "
+            "chunks_src_fp string",
+            self._p(meta_name),
+        )
+        self._invalidate()
+        return meta
+
+    def _bm25_freshness(self, chunks) -> tuple:
+        """The one BM25 freshness rule: ``(meta, fp)``, where ``meta`` is
+        the persisted ``bm25_meta`` row when the persisted tables cover
+        ``chunks`` (else None) and ``fp`` the chunks' content
+        fingerprint when this check computed it (else None).
+
+        The persisted language must match the cfg's (postings tokenized
+        under another stopword gate are the wrong index); then an
+        unchanged chunks-dir listing proves the content unchanged
+        without a corpus scan (parquet files are immutable); only a
+        changed listing falls to the content fingerprint, which a force
+        re-ingest's rewrite under unchanged ids and counts fails."""
+        if not all(
+            self._exists(t) for t in ("bm25_meta", "postings", "term_stats")
         ):
-            return None, None, None
+            return None, None
         from customkb_spark.embedding.store import content_fingerprint, dir_fingerprint
 
         meta = self._read("bm25_meta").collect()[0]
         if getattr(meta, "language", "en") != self.cfg.language:
-            # a different stopword gate than this cfg — query terms
-            # would tokenize against the wrong index
-            return None, None, None
-        # cheap path first: an unchanged chunks-dir listing proves the
-        # content unchanged (parquet files are immutable) without the
-        # corpus scan; mismatch only demotes to the content check
+            return None, None
         src_fp = getattr(meta, "chunks_src_fp", None)
-        if src_fp is None or dir_fingerprint(self._p("chunks")) != src_fp:
-            if getattr(meta, "chunks_fp", None) != content_fingerprint(
-                chunks, "id", "originaltext"
-            ):
-                return None, None, None
-        return (
-            self._read("postings"),
-            self._read("term_stats"),
-            (int(meta.n_chunks), float(meta.avgdl)),
-        )
+        if src_fp is not None and dir_fingerprint(self._p("chunks")) == src_fp:
+            return meta, None
+        fp = content_fingerprint(chunks, "id", "originaltext")
+        return (meta if getattr(meta, "chunks_fp", None) == fp else None), fp
 
     # ---------------------------------------------------------- query
-    def _drop_persisted_indexes(self) -> None:
-        """Delete the persisted derived-index artifacts (vindex dir +
-        BM25 tables). Called on force re-ingest: content may have
-        changed under unchanged ids/counts, which no freshness check on
-        the artifacts alone can prove."""
-        import shutil
-
-        for name in ("vindex", "postings", "term_stats", "bm25_meta"):
-            shutil.rmtree(self._p(name), ignore_errors=True)
-
     def _invalidate(self) -> None:
         """Drop the cached index after a write — unpersisting the old
         cached DataFrames so repeated database/embed/query cycles in a
@@ -444,7 +381,11 @@ class KnowledgeBase:
             vindex = IS.load_vector_index(
                 self.spark, vpath, vectors, source_dir=self._p("vectors")
             )
-            postings, term_stats, corpus = self._persisted_bm25(self._cached_chunks)
+            meta, _ = self._bm25_freshness(self._cached_chunks)
+            postings = term_stats = corpus = None
+            if meta is not None:  # else HybridIndex.build tokenizes
+                postings, term_stats = self._read("postings"), self._read("term_stats")
+                corpus = (int(meta.n_chunks), float(meta.avgdl))
             self._index = HY.HybridIndex.build(
                 self._cached_chunks, vectors, cfg=self.cfg, vindex=vindex,
                 postings=postings, term_stats=term_stats, corpus=corpus,
@@ -599,29 +540,22 @@ class KnowledgeBase:
         from customkb_spark.plans.migrations import get_current_schema_version
 
         out["schema_version"] = get_current_schema_version(self.spark, self.kb_dir)
-        # BM25 index freshness: content fingerprint + language must match
-        if self._exists("bm25_meta") and chunks is not None:
-            from customkb_spark.embedding.store import content_fingerprint
-
-            meta = self._read("bm25_meta").collect()[0]
-            fresh = (
-                getattr(meta, "chunks_fp", None)
-                == content_fingerprint(chunks, "id", "originaltext")
-                and getattr(meta, "language", "en") == self.cfg.language
-            )
-            out["bm25_index"] = "fresh" if fresh else "stale"
+        # persisted-index freshness: the same rules a query applies
+        # (_bm25_freshness; store._tier_verdict, where "appendable" = a
+        # query absorbs the new vectors FAISS-add-style)
+        if chunks is None:
+            out["bm25_index"] = "n/a"
+        elif not self._exists("bm25_meta"):
+            out["bm25_index"] = "absent"
         else:
-            out["bm25_index"] = "absent" if chunks is not None else "n/a"
-        # vector index: the SAME fingerprint verdict the query path's
-        # load_vector_index applies, so verify never disagrees with a
-        # query ("appendable" = a query absorbs the new vectors
-        # FAISS-add-style; a bare row-count compare would call in-place
-        # re-embeds fresh and normal appends stale — both wrong)
+            fresh = self._bm25_freshness(chunks)[0] is not None
+            out["bm25_index"] = "fresh" if fresh else "stale"
         if self._exists("vindex") and self._exists("vectors"):
             from customkb_spark.embedding.store import index_freshness
 
             out["vector_index"] = index_freshness(
-                self.spark, self._p("vindex"), self._read("vectors")
+                self.spark, self._p("vindex"), self._read("vectors"),
+                source_dir=self._p("vectors"),
             )
         else:
             out["vector_index"] = "absent"

@@ -99,7 +99,7 @@ def suggest_tuning(total_memory_gb: float, cpus: int = 32) -> dict:
 def table_stats(spark: SparkSession, kb_dir: str) -> DataFrame:
     """verify-indexes equivalent: rows / files / bytes per KB table."""
     rows = []
-    for name in ("chunks", "vectors", "ingest_log", "query_log"):
+    for name in ("chunks", "vectors", "query_log"):
         path = os.path.join(kb_dir, name)
         if not os.path.isdir(path):
             continue

@@ -62,19 +62,6 @@ VECTORS_SCHEMA = T.StructType(
     ]
 )
 
-# Ingestion log (reference: file_metadata, database/connection.py:125-135)
-FILE_METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("file_hash", T.StringType(), False),
-        T.StructField("file_path", T.StringType(), False),
-        T.StructField("file_size", T.LongType(), True),
-        T.StructField("modified_time", T.TimestampType(), True),
-        T.StructField("processed_time", T.TimestampType(), True),
-        T.StructField("chunk_count", T.IntegerType(), True),
-        T.StructField("status", T.StringType(), True),
-    ]
-)
-
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

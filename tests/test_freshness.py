@@ -1,0 +1,151 @@
+"""One freshness rule per persisted KB index, and a write path whose
+only record is the chunks table: verify agrees with what a query does,
+a force re-ingest needs no index wipe, and a killed ``database`` is
+safe to retry."""
+
+import json
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
+
+from customkb_spark.config import KBConfig
+from customkb_spark.embedding import store as S
+from customkb_spark.kb import KnowledgeBase
+
+CFG = dict(query_top_k=5, ann_index="ivf")
+
+
+@pytest.fixture(scope="module")
+def base_kb(spark, documents, tmp_path_factory):
+    """One KB with every persisted index written (BM25 tables, IVF
+    tier); tests work on copies of it (``_copy``)."""
+    kb_dir = str(tmp_path_factory.mktemp("fresh") / "kb")
+    docs = documents.limit(30).localCheckpoint()
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert kb.database(docs) > 0
+    assert kb.embed() > 0
+    assert kb.build_bm25()["rebuilt"] is True
+    kb.query("spark data query table", log=False)  # persists the tier
+    assert os.path.isdir(os.path.join(kb_dir, "vindex"))
+    return kb_dir, docs
+
+
+def _copy(base_kb, tmp_path) -> str:
+    # copytree keeps mtimes, so the copy's listing fingerprints match
+    dst = str(tmp_path / "kb")
+    shutil.copytree(base_kb[0], dst)
+    return dst
+
+
+def test_index_freshness_ivfsq_pure_append_is_appendable(spark, embeddings, tmp_path):
+    """verify's verdict is the one a query acts on: a query absorbs a
+    pure append into an ivfsq tier, so the verdict is "appendable"."""
+    from customkb_spark.embedding.auto import build_vector_index
+
+    base = embeddings.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).filter("id < 100").cache()
+    path = str(tmp_path / "vindex")
+    S.save_vector_index(build_vector_index(base, KBConfig(ann_index="ivfsq")), path)
+    assert S.index_freshness(spark, path, base) == "fresh"
+
+    appended = base.unionByName(
+        base.filter("id < 3").withColumn("id", F.col("id") + 1_000_000)
+    )
+    assert S.index_freshness(spark, path, appended) == "appendable"
+    mutated = base.withColumn("vector", F.reverse(F.col("vector")))
+    assert S.index_freshness(spark, path, mutated) == "stale"
+
+    loaded = S.load_vector_index(spark, path, appended)
+    assert loaded is not None and loaded.indexed.count() == appended.count()
+    assert S.index_freshness(spark, path, appended) == "fresh"
+
+
+def test_verify_on_unchanged_kb_runs_no_content_scan(spark, base_kb, tmp_path, monkeypatch):
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+
+    def boom(*a, **k):
+        raise AssertionError("content scan on an unchanged KB")
+
+    monkeypatch.setattr(S, "content_fingerprint", boom)
+    v = kb.verify()
+    assert v["bm25_index"] == "fresh" and v["vector_index"] == "fresh"
+    assert v["pending_embed"] == 0
+
+
+class _Crash(Exception):
+    pass
+
+
+def test_database_killed_after_chunks_write_retries_safely(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """Every parquet write after the chunks write in ``database`` fails;
+    the retry with the same docs must not duplicate chunk ids, and the
+    next embed + query serve each new document once."""
+    kb_dir = _copy(base_kb, tmp_path)
+    docs = spark.createDataFrame(
+        [(9100 + i, f"crashretry{i} appended text about quokka lanterns", f"cr{i}.txt")
+         for i in range(3)],
+        ["doc_id", "text", "source"],
+    )
+    real = DataFrameWriter.parquet
+    written = []
+
+    def crashing(self, path, *a, **k):
+        if written:
+            raise _Crash(path)
+        real(self, path, *a, **k)
+        if os.path.basename(path.rstrip("/")) == "chunks":
+            written.append(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    try:
+        KnowledgeBase(spark, kb_dir, KBConfig(**CFG)).database(docs)
+    except _Crash:
+        pass
+    monkeypatch.undo()
+    assert written  # the chunks landed before the crash
+
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    kb.database(docs)
+    chunks = spark.read.parquet(os.path.join(kb_dir, "chunks"))
+    assert chunks.count() == chunks.select("id").distinct().count()
+    assert chunks.filter(F.col("sourcedoc").startswith("cr")).count() == 3
+
+    assert kb.embed() > 0
+    vectors = spark.read.parquet(os.path.join(kb_dir, "vectors"))
+    assert vectors.count() == vectors.select("id").distinct().count()
+    sections = json.loads(kb.query("crashretry1 quokka lanterns", fmt="json", log=False))
+    sources = [s["source"] for s in sections]
+    assert "cr1.txt" in sources
+    assert len(sources) == len(set(sources))
+    assert all(s["text"].count("crashretry") <= 1 for s in sections)
+
+
+def test_force_reingest_without_bm25_rebuild_serves_new_text(spark, base_kb, tmp_path):
+    """After ``database(force=True)`` + ``embed`` the fingerprints alone
+    reject the persisted BM25 tables and IVF tier (no directory wipe);
+    a query with no ``build_bm25`` in between serves the new text."""
+    kb_dir, docs = _copy(base_kb, tmp_path), base_kb[1]
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    marker = "zephyrquokka"
+    changed = docs.select(
+        "doc_id", F.concat(F.lit(marker + " "), F.col("text")).alias("text"), "source"
+    )
+    assert kb.database(changed, force=True) > 0
+    assert kb.embed() > 0
+    assert os.path.isdir(os.path.join(kb_dir, "postings"))
+    v = kb.verify()
+    assert v["bm25_index"] == "stale" and v["vector_index"] == "stale"
+
+    assert marker in kb.query(marker + " spark data", log=False)
+    # over the memory budget the Spark plans serve from the IVF tier
+    spark_path = KnowledgeBase(
+        spark, kb_dir, KBConfig(**CFG, index_memory_budget_mb=0)
+    )
+    assert marker in spark_path.query(marker + " spark data", log=False)
+    assert spark_path.verify()["vector_index"] == "fresh"

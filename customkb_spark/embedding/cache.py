@@ -30,8 +30,9 @@ def split_hits_misses(
 ) -> tuple[DataFrame, DataFrame]:
     """pending must carry cache_key; cache is (cache_key, vector).
 
-    Returns (hits with vector, misses without). One left join, reused
-    for both sides — Catalyst caches the common subplan per action.
+    Returns (hits with vector, misses without). One left join,
+    materialized once (``localCheckpoint``) and filtered into both
+    sides, so no later action re-runs the probe.
 
     ``expected_dims`` guards the dimension-mismatch corruption case:
     the cache key is f'{model}_{sha256(text)}' (reference parity —
@@ -50,7 +51,7 @@ def split_hits_misses(
         cache = cache.groupBy("cache_key").agg(
             F.max_by("vector", good).alias("vector")
         )
-    joined = pending.join(cache, "cache_key", "left")
+    joined = pending.join(cache, "cache_key", "left").localCheckpoint()
     ok = F.col("vector").isNotNull()
     if expected_dims is not None:
         ok = ok & (F.size("vector") == int(expected_dims))

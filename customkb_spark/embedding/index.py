@@ -7,8 +7,8 @@ pattern:
 
   build:  sample vectors → k-means centroids (small, driver/NumPy —
           same as FAISS training on a ≤10k sample) → assign every
-          vector its nearest centroid id with a JVM-side argmin
-          expression → vectors table carries ``cluster_id``.
+          vector its nearest centroid id with one Arrow-batched numpy
+          matmul per batch → vectors table carries ``cluster_id``.
           At 100 TB: write the vectors table PARTITIONED BY cluster_id
           so probes become partition pruning, not filters.
 
@@ -102,13 +102,12 @@ def train_centroids(
     return lloyd_kmeans(sample, nlist, iters, seed)
 
 
-#: centroid count above which the literal-expression assignment path is
-#: replaced by the Arrow-batched matmul path. The expression tree is
-#: O(nlist × dim) literals — fine at the IVF tiers we bench (nlist ≤ a
-#: few hundred), but at FAISS-scale nlist (4k-64k) Catalyst would spend
-#: minutes analyzing a plan with millions of literal nodes. FAISS itself
-#: assigns with one BLAS matmul (reference embed_manager.py:694-715);
-#: the matmul path is that same shape, batched through Arrow.
+#: largest nlist at which the literal-expression reference kernel
+#: (``method="expr"``) still plans in reasonable time: its expression
+#: tree is O(nlist × dim) literal nodes, and Catalyst analysis of it
+#: grows to minutes at FAISS-scale nlist (4k-64k). Production assignment
+#: always takes the matmul kernel (BASELINE.md, "Measured
+#: centroid-assignment tiers"); tests keep the reference below this.
 ASSIGN_EXPR_MAX_NLIST = 256
 
 
@@ -126,8 +125,8 @@ def _matmul_assign_udf(centroids: np.ndarray, with_sim: bool, sc=None):
 
     argmin over full ``d2 = |c|² − 2·x·C`` (the per-row ``|x|²`` term
     cannot change the argmin) with numpy's first-minimum tiebreak —
-    matching the expression path's ``array_position(d, array_min(d))``
-    first-match semantics."""
+    matching the reference expression kernel's
+    ``array_position(d, array_min(d))`` first-match semantics."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -180,26 +179,20 @@ def assign_clusters(
     vectors: DataFrame,
     centroids: np.ndarray,
     vec_col: str = "vector",
-    method: str = "auto",
+    method: str = "matmul",
 ) -> DataFrame:
-    """Add ``cluster_id`` = argmin L2 distance to centroid.
+    """Add ``cluster_id`` = argmin L2 distance to centroid (first-minimum
+    tiebreak), with the Arrow-batched pandas UDF doing one
+    ``(batch × nlist)`` numpy matmul — FAISS's one-BLAS-matmul
+    assignment (reference embed_manager.py:694-715). The plan holds one
+    UDF node at any nlist.
 
-    Two physical strategies, same semantics (first-minimum tiebreak):
-
-    - ``expr`` (nlist ≤ :data:`ASSIGN_EXPR_MAX_NLIST`): a pure column
-      expression (array of distances → array_position of min) — JVM
-      whole-stage codegen, zero Python.
-    - ``matmul`` (large nlist): Arrow-batched pandas UDF doing one
-      ``(batch × nlist)`` numpy matmul — the plan stays O(1) in nlist
-      (one UDF node) instead of O(nlist × dim) literal nodes that stall
-      Catalyst analysis at FAISS-scale nlist.
-
-    ``method='auto'`` picks by nlist; pass explicitly to pin a path
-    (tests equality-check the two).
+    ``method="expr"`` is the reference kernel the tests compare against:
+    a pure column expression (array of distances → array_position of
+    min) whose plan is O(nlist × dim) literal nodes, so it plans in
+    reasonable time only up to :data:`ASSIGN_EXPR_MAX_NLIST`.
     """
-    if method == "auto":
-        method = "expr" if len(centroids) <= ASSIGN_EXPR_MAX_NLIST else "matmul"
-    if method == "matmul":
+    if method != "expr":
         udf = _matmul_assign_udf(
             centroids, with_sim=False, sc=vectors.sparkSession.sparkContext
         )
@@ -220,20 +213,19 @@ def assign_with_centroid_sim(
     vectors: DataFrame,
     centroids: np.ndarray,
     vec_col: str = "vector",
-    method: str = "auto",
+    method: str = "matmul",
 ) -> DataFrame:
     """``assign_clusters`` + ``centroid_sim`` = round(cosine(vec, own
     centroid), 6) in one pass — the SemDeDup keep-policy input
-    (operators/dedup.semdedup_apply).
+    (operators/dedup.semdedup_apply). The matmul kernel reads the cosine
+    out of the same dot-product matrix the argmin already computed — one
+    UDF, no second pass over the vectors.
 
-    Same two strategies as :func:`assign_clusters`: the expr path
-    indexes a broadcast centroid array literal (element_at), the matmul
-    path reads the cosine out of the same dot-product matrix the argmin
-    already computed — one UDF, no second pass over the vectors.
+    ``method="expr"`` is the reference kernel (see
+    :func:`assign_clusters`): it indexes a centroid array literal with
+    ``element_at``.
     """
-    if method == "auto":
-        method = "expr" if len(centroids) <= ASSIGN_EXPR_MAX_NLIST else "matmul"
-    if method == "matmul":
+    if method != "expr":
         udf = _matmul_assign_udf(
             centroids, with_sim=True, sc=vectors.sparkSession.sparkContext
         )

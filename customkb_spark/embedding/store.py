@@ -214,7 +214,7 @@ def incremental_index(
     """Append only vectors whose id is NOT already indexed, assigned to
     the existing centroids (FAISS ``add`` semantics — training is
     frozen). Anti-join on id (broadcast-able: the *new* side is small in
-    steady state), JVM argmin assignment, partitioned append touching
+    steady state), matmul argmin assignment, partitioned append touching
     only the affected cluster partitions. Returns rows appended."""
     spark = vectors.sparkSession
     existing = spark.read.parquet(table_path).select(id_col)
@@ -234,7 +234,8 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     analogue of the reference writing ``<kb>.faiss`` next to the DB
     (embed_manager.py save path). Layout under ``path``:
 
-    - ``meta``: one row (kind, n indexed rows, id/vec column names);
+    - ``meta``: one row (kind, id/vec column names, the vectors'
+      content fingerprint ``fp`` and directory fingerprint ``src_fp``);
     - ``centroids`` (ivf/ivfpq), ``pq/`` codebooks (ivfpq);
     - ``indexed``: the derived table, PARTITIONED BY cluster_id.
 
@@ -246,10 +247,9 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     of the UNCHANGED table skips the freshness corpus scan entirely.
     """
     spark = tier.vectors.sparkSession
-    n = tier.indexed.count() if tier.indexed is not None else tier.vectors.count()
     fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
     _write_meta(
-        spark, path, tier.kind, int(n), tier.id_col, tier.vec_col, fp,
+        spark, path, tier.kind, tier.id_col, tier.vec_col, fp,
         dir_fingerprint(source_dir),
     )
     if tier.kind == "flat":
@@ -262,12 +262,11 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     write_ivf_table(tier.indexed, f"{path}/indexed")
 
 
-def _write_meta(spark, path, kind, n, id_col, vec_col, fp, src_fp=None) -> None:
+def _write_meta(spark, path, kind, id_col, vec_col, fp, src_fp=None) -> None:
     _write_single_file(
         spark,
-        [(kind, int(n), id_col, vec_col, fp, src_fp)],
-        "kind string, n long, id_col string, vec_col string, fp string, "
-        "src_fp string",
+        [(kind, id_col, vec_col, fp, src_fp)],
+        "kind string, id_col string, vec_col string, fp string, src_fp string",
         f"{path}/meta",
     )
 
@@ -358,7 +357,7 @@ def load_vector_index(
         if verdict == "appendable":
             _append_to_tier(tier, f"{path}/indexed")
             _write_meta(
-                spark, path, meta.kind, vectors.count(), meta.id_col, meta.vec_col,
+                spark, path, meta.kind, meta.id_col, meta.vec_col,
                 fp_now, dir_fingerprint(source_dir),
             )
             tier.indexed = spark.read.parquet(f"{path}/indexed")
@@ -370,7 +369,10 @@ def load_vector_index(
 def _append_to_tier(tier, table_path: str) -> None:
     """FAISS ``add``: write the ids the saved tier lacks, assigned to its
     frozen centroids (ivf) or encoded on its frozen SQ grid (ivfsq), so
-    new rows encode deterministically."""
+    new rows encode deterministically. Called only on an
+    ``"appendable"`` verdict, which proves the set non-empty (the old
+    subset's fingerprint held while the total's changed), so the write
+    runs unguarded."""
     fresh = tier.vectors.join(tier.indexed.select(tier.id_col), tier.id_col, "left_anti")
     if tier.kind == "ivf":
         appended = assign_clusters(fresh, tier.centroids, tier.vec_col)
@@ -380,8 +382,7 @@ def _append_to_tier(tier, table_path: str) -> None:
 
         normed = l2_normalized_frame(fresh.select(tier.id_col, tier.vec_col), tier.vec_col)
         appended = encode_sq(normed, tier.sq, tier.id_col, tier.vec_col)
-    if appended.limit(1).count():
-        write_ivf_table(appended, table_path, mode="append")
+    write_ivf_table(appended, table_path, mode="append")
 
 
 def _load_tier(spark: SparkSession, path: str, vectors: DataFrame, meta):

@@ -29,12 +29,6 @@ def sha_cache_key(model: Column | str, text: Column | str) -> Column:
     return F.concat(m, F.lit("_"), F.sha2(t, 256))
 
 
-def md5_hash(col: Column, salt: int | None = None) -> Column:
-    if salt is not None:
-        col = F.concat(F.lit(f"{salt}:"), col)
-    return F.md5(col)
-
-
 def hex_to_long(hex_col: Column, n_chars: int = 15) -> Column:
     """First ``n_chars`` hex chars → non-negative bigint (≤60 bits)."""
     return F.conv(F.substring(hex_col, 1, n_chars), 16, 10).cast("long")

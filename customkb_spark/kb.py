@@ -26,7 +26,9 @@ Semantics preserved from the reference:
   reference's --context-only flag, otherwise the (stubbed) LLM answers.
   Within ``cfg.index_memory_budget_mb`` the index is also held in
   process memory (plans/resident.py) and a query runs no Spark job; over
-  it, the Spark plans of plans/hybrid.py serve. Every write drops both.
+  it, the Spark plans of plans/hybrid.py serve. Every write to
+  ``chunks/`` or ``vectors/``, from any process, drops both: the next
+  query sees the tables' listing change.
 
 At 100 TB: write the chunks table BUCKETED by ``sourcedoc``
 (plans/layout.py — bucketBy into the catalog, per-bucket sorted by
@@ -60,6 +62,7 @@ class KnowledgeBase:
         self.kb_dir = kb_dir
         self.cfg = cfg or KBConfig()
         self._index: HY.HybridIndex | None = None
+        self._index_fp: tuple | None = None
         self._resident: RI.ResidentIndex | None = None
 
     # ---------------------------------------------------------- paths
@@ -94,9 +97,11 @@ class KnowledgeBase:
 
             docs = docs.withColumn("lang", X.detect_language_heuristic("text"))
             lang = "lang"
+        # materialized once: the count and the write (or the force
+        # path's merge) read the same chunks without re-chunking
         chunks = documents_to_chunks(
             docs, lang_col=lang, chunk_size=self.cfg.db_max_tokens
-        )
+        ).localCheckpoint()
         n = chunks.count()
         if n == 0:
             return 0
@@ -130,80 +135,61 @@ class KnowledgeBase:
             merged.write.mode("overwrite").parquet(self._p("chunks"))
         else:
             chunks.write.mode("append").parquet(self._p("chunks"))
-        self._invalidate()
         return n
 
     # ---------------------------------------------------------- embed
-    def embed(self, use_cache: bool = True) -> int:
+    def embed(self) -> int:
         """Embed chunks that have no vector yet (anti-join pending set).
         Returns the number of new vectors.
 
-        With ``use_cache`` the J5 read-through cache table
-        (<kb_dir>/emb_cache: cache_key, vector) is probed first —
-        texts seen before (any chunk, any re-ingest) skip the provider
-        entirely; misses are embedded and written back. This is the
-        reference's two-tier embedding cache (embedding/cache.py:49-120)
-        as one left join + one append."""
+        The J5 read-through cache table (<kb_dir>/emb_cache: cache_key,
+        vector) is probed first — texts seen before (any chunk, any
+        re-ingest) skip the provider entirely; misses are embedded and
+        written back. This is the reference's two-tier embedding cache
+        (embedding/cache.py:49-120) as one left join + one append. The
+        probe and the new vectors are each materialized once, so no
+        action re-runs the chunks scan, the anti-join or the
+        provider."""
         from customkb_spark.embedding.cache import split_hits_misses, with_cache_key
+        from customkb_spark.functions import cache_stats
 
-        chunks = self._read("chunks")
-        pending = chunks.filter(F.length("embedtext") > 0)
+        pending = self._read("chunks").filter(F.length("embedtext") > 0)
         if self._exists("vectors"):
             have = self._read("vectors").select("id")
             pending = pending.join(have, "id", "left_anti")
-
-        if not use_cache:
-            vectors = embed_texts(
-                pending, "id", "embedtext",
-                self.cfg.vector_model, self.cfg.vector_dimensions,
-            )
-        else:
-            keyed = with_cache_key(
-                pending.select("id", "embedtext"), F.col("embedtext"), self.cfg.vector_model
-            )
-            cache = (
-                self._read("emb_cache")
-                if self._exists("emb_cache")
-                else self.spark.createDataFrame(
-                    [], "cache_key string, vector array<float>"
-                )
-            )
-            hits, misses = split_hits_misses(
-                keyed, cache, expected_dims=self.cfg.vector_dimensions
-            )
-            # materialize once — the plan is consumed three times
-            # (write-back, union, count); a real provider must not be
-            # re-invoked per action
-            new_vectors = embed_texts(
-                misses, "id", "embedtext",
-                self.cfg.vector_model, self.cfg.vector_dimensions,
-            ).localCheckpoint()
+        keyed = with_cache_key(
+            pending.select("id", "embedtext"), F.col("embedtext"), self.cfg.vector_model
+        )
+        cache = (
+            self._read("emb_cache")
+            if self._exists("emb_cache")
+            else self.spark.createDataFrame([], "cache_key string, vector array<float>")
+        )
+        hits, misses = split_hits_misses(
+            keyed, cache, expected_dims=self.cfg.vector_dimensions
+        )
+        new_vectors = embed_texts(
+            misses, "id", "embedtext", self.cfg.vector_model, self.cfg.vector_dimensions
+        ).localCheckpoint()
+        # hit/miss counters (reference performance_analyzer cache
+        # section), both read from materialized frames
+        miss_n, hit_n = new_vectors.count(), hits.count()
+        if miss_n:
             # write-back: one cache row per distinct missed text
-            write_back = (
+            (
                 misses.select("id", "cache_key")
                 .join(new_vectors, "id")
                 .select("cache_key", "vector")
                 .dropDuplicates(["cache_key"])
+                .write.mode("append")
+                .parquet(self._p("emb_cache"))
             )
-            if write_back.limit(1).count():
-                write_back.write.mode("append").parquet(self._p("emb_cache"))
-            vectors = hits.select("id", "vector").unionByName(new_vectors)
-            # hit/miss counters (reference performance_analyzer cache
-            # section): misses = freshly-embedded rows (checkpointed —
-            # the count re-invokes no provider); hits = the remainder
-            miss_n = new_vectors.count()
-
-        n = vectors.count()
-        if use_cache:
-            from customkb_spark.functions import cache_stats
-
-            cache_stats.record(
-                cache_stats.EMBEDDING_CACHE, hits=n - miss_n, misses=miss_n
-            )
-        if n:
-            vectors.write.mode("append").parquet(self._p("vectors"))
-            self._invalidate()
-        return n
+        cache_stats.record(cache_stats.EMBEDDING_CACHE, hits=hit_n, misses=miss_n)
+        if hit_n + miss_n:
+            hits.select("id", "vector").unionByName(new_vectors).write.mode(
+                "append"
+            ).parquet(self._p("vectors"))
+        return hit_n + miss_n
 
     # ----------------------------------------------------------- bm25
     def build_bm25(self, force: bool = False) -> dict:
@@ -346,8 +332,8 @@ class KnowledgeBase:
 
     # ---------------------------------------------------------- query
     def _invalidate(self) -> None:
-        """Drop the cached index after a write — unpersisting the old
-        cached DataFrames so repeated database/embed/query cycles in a
+        """Drop the cached index — unpersisting the old cached
+        DataFrames so repeated database/embed/query cycles in a
         long-lived session don't leak executor memory."""
         if self._index is not None:
             vindex = getattr(self._index, "vindex", None)
@@ -368,9 +354,20 @@ class KnowledgeBase:
         self._resident = None
 
     def _build_index(self) -> HY.HybridIndex:
+        """The hybrid index over the current tables, rebuilt whenever
+        ``chunks/`` or ``vectors/`` changed since the last build. Parquet
+        files are immutable, so any write to them — from this object or
+        another process — changes their listing fingerprint: two
+        directory listings per call, no Spark job."""
+        from customkb_spark.embedding.store import dir_fingerprint
+
+        sources_fp = tuple(dir_fingerprint(self._p(t)) for t in ("chunks", "vectors"))
+        if self._index is not None and sources_fp != self._index_fp:
+            self._invalidate()
         if self._index is None:
             from customkb_spark.embedding import store as IS
 
+            self._index_fp = sources_fp
             self._cached_chunks = self._read("chunks").cache()
             vectors = self._read("vectors")
             vpath = self._p("vindex")

@@ -641,9 +641,8 @@ def semdedup_apply(
 
     Returns every embedding id with (cluster_id, centroid_sim, kept).
     Scale shape: assignment and centroid_sim come from
-    ``index.assign_with_centroid_sim`` in ONE pass — JVM column exprs
-    over broadcast centroids at small nlist, an Arrow-batched matmul
-    UDF above ``ASSIGN_EXPR_MAX_NLIST`` (the plan stays O(1) in nlist);
+    ``index.assign_with_centroid_sim`` in ONE pass — an Arrow-batched
+    matmul UDF over broadcast centroids (the plan stays O(1) in nlist);
     components run over the edge list only; the survivor choice is a
     window partitioned by duplicate group (bounded by group size,
     never global).

@@ -2,7 +2,6 @@
 
 W1  rank assignment            → row_number over score desc
 W3  consecutive-run grouping   → lag + cumulative sum of run starts
-W4  per-document chunk seq sid → row_number per sourcedoc
 T6  positional sampling        → sid vs max(sid) per doc
 """
 
@@ -76,14 +75,6 @@ def running_total(
         .withColumn(out_col, F.sum(value_col).over(w_in) + F.col("_rt_offset"))
         .drop("_rt_bucket", "_rt_offset")
     )
-
-
-def assign_sid(
-    chunks: DataFrame, doc_col: str = "sourcedoc", order_col: str = "chunk_idx"
-) -> DataFrame:
-    """0-based per-document chunk sequence (reference db_manager.py:621,664)."""
-    w = Window.partitionBy(doc_col).orderBy(order_col)
-    return chunks.withColumn("sid", (F.row_number().over(w) - 1).cast("int"))
 
 
 def consecutive_runs(

@@ -61,13 +61,3 @@ VECTORS_SCHEMA = T.StructType(
         T.StructField("cluster_id", T.IntegerType(), True),  # IVF assignment
     ]
 )
-
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def load_testdata(spark, sf_dir: str, *names: str) -> dict:
-    """Read the driver's parquet tables for one scale factor."""
-    names = names or tuple(TESTDATA_TABLES)
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from customkb_spark.embedding.embedder import embed_texts
 from customkb_spark.ingest.pipeline import documents_to_chunks
 
 
@@ -41,36 +40,6 @@ def incremental_ingest(
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def incremental_embed(
-    chunks_stream: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    model: str = "stub-hash-embed",
-    dimensions: int = 64,
-) -> StreamingQuery:
-    """Stream chunks → vectors table via foreachBatch (the embed stage
-    needs the dedup-join shape, so each micro-batch runs the batch
-    embedder — reference checkpoint-group semantics, batch.py:93-177).
-
-    foreachBatch is only at-least-once for non-idempotent sinks: a
-    task/batch retry would re-run ``handle`` for the same rows. The
-    append is made idempotent by anti-joining the batch's ids against
-    the ids already in the output table (same shape as batch
-    ``store.incremental_index``), so a replayed batch appends nothing."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        vectors = embed_texts(batch_df, "id", "embedtext", model, dimensions)
-        vectors = _drop_already_written(vectors, output_dir, "id")
-        vectors.write.mode("append").parquet(output_dir)
-
-    return (
-        chunks_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
@@ -106,8 +75,8 @@ def incremental_index_maintenance(
 ) -> StreamingQuery:
     """Stream new vectors into the persisted IVF table (FAISS ``add``
     as a streaming job): each micro-batch is assigned to the FROZEN
-    centroids (JVM argmin — centroids load once on the driver and ride
-    into the expression as literals) and appended PARTITIONED BY
+    centroids (one matmul argmin — centroids load once on the driver and
+    ship as a broadcast) and appended PARTITIONED BY
     cluster_id, so only the touched cluster partitions gain files.
     Retraining is a separate batch decision driven by
     ``embedding.store.index_drift`` — the stream never moves existing

@@ -299,3 +299,19 @@ def test_semdedup_apply_matmul_tier_matches_expr(spark):
     # every planted pair collapses to one survivor under the matmul tier
     kept = sum(1 for _, k in auto.values() if k)
     assert kept == 120
+
+
+def test_assign_default_is_matmul_at_small_nlist(spark, embeddings):
+    """Production assignment has one kernel: at nlist 8, far below
+    ASSIGN_EXPR_MAX_NLIST, both default plans hold the Arrow-batched
+    Python UDF node, not the literal-expression tree."""
+    from customkb_spark.embedding.index import assign_with_centroid_sim
+
+    cents = train_centroids(embeddings, "embedding", nlist=8)
+    for out in (
+        assign_clusters(embeddings, cents, "embedding"),
+        assign_with_centroid_sim(embeddings, cents, "embedding"),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan
+        assert "array_position" not in plan

@@ -6,6 +6,7 @@ safe to retry."""
 import json
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,9 @@ from customkb_spark.embedding import store as S
 from customkb_spark.kb import KnowledgeBase
 
 CFG = dict(query_top_k=5, ann_index="ivf")
+# Spark jobs of a 5-document append (test_append_cycle_computes_each_result_once)
+DATABASE_APPEND_JOBS = 10
+EMBED_APPEND_JOBS = 18
 
 
 @pytest.fixture(scope="module")
@@ -149,3 +153,54 @@ def test_force_reingest_without_bm25_rebuild_serves_new_text(spark, base_kb, tmp
     )
     assert marker in spark_path.query(marker + " spark data", log=False)
     assert spark_path.verify()["vector_index"] == "fresh"
+
+
+def _append_docs(spark, tag: str, n: int = 5):
+    return spark.createDataFrame(
+        [(9300 + i, f"{tag}{i} appended text about walrus beacons", f"{tag}{i}.txt")
+         for i in range(n)],
+        ["doc_id", "text", "source"],
+    )
+
+
+def test_held_kb_sees_another_writers_append(spark, base_kb, tmp_path):
+    """A long-lived KnowledgeBase (a server) serves another process's
+    appends: the index rebuilds when ``chunks/`` or ``vectors/`` change
+    on disk, not only after its own writes."""
+    kb_dir = _copy(base_kb, tmp_path)
+    reader = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert "heldwriter" not in reader.query("heldwriter0 walrus beacons", log=False)
+    writer = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert writer.database(_append_docs(spark, "heldwriter", 1)) > 0
+    assert writer.embed() > 0
+    assert "heldwriter0" in reader.query("heldwriter0 walrus beacons", log=False)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a job group; the status
+    tracker is fed asynchronously, so poll until the count settles."""
+    sc = spark.sparkContext
+    group = f"append-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "append job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker, n, same = sc.statusTracker(), -1, 0
+    deadline = time.monotonic() + 30
+    while same < 3 and time.monotonic() < deadline:
+        time.sleep(0.3)
+        m = len(tracker.getJobIdsForGroup(group))
+        same, n = (same + 1, n) if m == n else (0, m)
+    return n
+
+
+def test_append_cycle_computes_each_result_once(spark, base_kb, tmp_path):
+    """A 5-document append: ``database`` chunks its input once and
+    ``embed`` probes the embedding cache once (bounds measured on this
+    code; re-running either shows up as extra jobs)."""
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    docs = _append_docs(spark, "jobcount").localCheckpoint()
+    assert _jobs_of(spark, lambda: kb.database(docs)) <= DATABASE_APPEND_JOBS
+    assert _jobs_of(spark, kb.embed) <= EMBED_APPEND_JOBS
+    assert kb.verify()["pending_embed"] == 0

@@ -1,11 +1,11 @@
 """Measure centroid-assignment strategies across nlist tiers.
 
-Produces the BASELINE.md table evidencing the round-5 fix: the
-literal-expression path (O(nlist × dim) Catalyst nodes) vs the
-Arrow-batched matmul path (one UDF node) — plan-build time and
-end-to-end assignment time per tier. The expr path is skipped above
-EXPR_CEILING because analysis alone takes minutes there (the failure
-mode the matmul path exists to remove).
+Produces the BASELINE.md table: the literal-expression reference
+kernel (O(nlist × dim) Catalyst nodes) vs the Arrow-batched matmul
+kernel production uses (one UDF node) — end-to-end assignment time per
+tier; nlist 35 is the benchmark KB's tier. The expr path is skipped
+above EXPR_CEILING because analysis alone takes minutes there (the
+failure mode the matmul path exists to remove).
 
     python tools/assign_table.py [n_vectors] [dim]
 """
@@ -22,7 +22,7 @@ import numpy as np
 
 from customkb_spark.session import get_spark
 
-NLISTS = [16, 64, 256, 1024, 4096, 16384]
+NLISTS = [16, 35, 64, 256, 1024, 4096, 16384]
 EXPR_CEILING = 1024  # expr path measured up to here; beyond is the dead zone
 
 

@@ -3385,8 +3385,10 @@ def q_hybrid_context_flagship(spark, sf_dir):
     (SQL_FLAGSHIP). Chunking/embedding themselves are separately
     value-hash oracled (chunk_documents, knn_join) and the composed
     result stays golden-pinned in tests/test_hybrid_golden.py."""
+    import pyarrow as pa
+
     from customkb_spark.embedding.embedder import get_provider
-    from customkb_spark.embedding.store import _write_single_file
+    from customkb_spark.functions.parquet_rows import replace
 
     docs = _t(spark, sf_dir, "documents")
     chunks = documents_to_chunks(docs, chunk_size=200).cache()
@@ -3405,7 +3407,7 @@ def q_hybrid_context_flagship(spark, sf_dir):
         vectors.select("id", "vector").write.mode("overwrite").parquet(
             f"{art}/vectors"
         )
-        _write_single_file(spark, [(qv,)], "qv array<double>", f"{art}/query")
+        replace(pa.table({"qv": pa.array([qv], pa.list_(pa.float64()))}), f"{art}/query")
     index = HY.HybridIndex.build(chunks, vectors)
     return _longs(HY.query(index, FLAGSHIP_QUERY_TEXT, cfg, query_vec=qv))
 

@@ -57,11 +57,12 @@ def _persist_kb_settings(kb_dir: str, **settings) -> None:
         parser.write(f)
 
 
-def _docs_from_files(spark, pattern: str):
-    """Text files → documents DataFrame (S1-S5 front end)."""
+def _docs_from_files(spark, pattern: str, max_file_size_mb: float):
+    """Text files → documents DataFrame (S1-S5 front end); files over
+    ``max_file_size_mb`` are skipped."""
     from customkb_spark.sources.files import read_text_files
 
-    files = read_text_files(spark, pattern)
+    files = read_text_files(spark, pattern, max_file_size_mb)
     # doc_id < 2^41 keeps the chunk-id derivation (doc_id · 2^22 + sid,
     # ingest/pipeline.py) inside int64. Collision odds at this width are
     # ~N²/2^42 (≈0.2 expected collisions at 1M files); beyond that,
@@ -85,7 +86,7 @@ def cmd_database(args) -> int:
     if args.docs_parquet:
         docs = kb.spark.read.parquet(args.docs_parquet)
     elif args.files:
-        docs = _docs_from_files(kb.spark, args.files)
+        docs = _docs_from_files(kb.spark, args.files, kb.cfg.max_file_size_mb)
     else:
         print("either --docs-parquet or --files is required", file=sys.stderr)
         return 2

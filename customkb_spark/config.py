@@ -20,9 +20,7 @@ class KBConfig:
     # [DEFAULT] — reference config/models.py:45-105
     vector_model: str = "stub-hash-embed"  # deterministic local stub by default
     vector_dimensions: int = 64
-    db_min_tokens: int = 100
     db_max_tokens: int = 200
-    query_model: str = "none"
     language: str = "en"  # BM25 stopword gate (reference database -l)
     detect_language: bool = False  # per-doc heuristic lang column on ingest
 
@@ -87,10 +85,6 @@ class KBConfig:
     # d×d SVD per train. Off by default to keep parity with the
     # reference's plain-IVFPQ ladder.
     pq_opq: bool = False
-
-    # Spark-scale additions (not in the reference)
-    shuffle_partitions: int = 32
-    ann_nlist: int = 64  # IVF centroid count for the pruned ANN path
 
     @classmethod
     def from_file(cls, path: str | None = None, env: dict | None = None) -> "KBConfig":

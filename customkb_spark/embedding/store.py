@@ -4,9 +4,9 @@ The reference serializes its FAISS index to one file and mmaps it per
 query (embed_manager.py saves ``<kb>.faiss``; index_manager.py:209
 verifies/rebuilds it). The Spark-first equivalents:
 
-- centroids / PQ codebooks are TINY (nlist×dim and m×2^nbits×dsub
-  doubles) → plain parquet tables, loaded to the driver in one collect
-  and re-broadcast into search expressions;
+- the meta row, centroids and PQ/SQ models are TINY (nlist×dim and
+  m×2^nbits×dsub doubles) → one-file tables the driver replaces and
+  reads whole with pyarrow (``functions/parquet_rows.py``), no Spark job;
 - the indexed vector table is the big artifact → parquet PARTITIONED BY
   ``cluster_id`` so nprobe search prunes files before the scan (the
   disk layout IS the index);
@@ -26,76 +26,84 @@ retrain decision is a stats read, never a full rescan.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.embedding.index import assign_clusters
 from customkb_spark.embedding.pq import PQModel
+from customkb_spark.functions import parquet_rows as PR
 from customkb_spark.functions import vector as V
 
 
 # ------------------------------------------------------ small artifacts
 
+_META_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in ("kind", "id_col", "vec_col", "fp", "src_fp")]
+)
 
-def _write_single_file(spark, rows, schema: str, path: str) -> None:
-    """Driver-local rows → one parquet file. A single-slice parallelize,
-    NOT createDataFrame().coalesce(1): the default path slices local
-    data into defaultParallelism pickled partitions and coalesce makes
-    ONE task page through every one of them via the Python worker
-    (measured 6-11 s for a 512-row codebook table; single-slice is
-    ~0.4 s)."""
-    rdd = spark.sparkContext.parallelize(rows, 1)
-    spark.createDataFrame(rdd, schema).write.mode("overwrite").parquet(path)
+
+def _rows(matrix: np.ndarray) -> pa.ListArray:
+    """A 2-D array as one ``array<double>`` value per row."""
+    m = np.asarray(matrix, dtype=np.float64)
+    offsets = pa.array(np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1])
+    return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
+
+
+def _matrix(table: pa.Table, col: str) -> np.ndarray:
+    """Inverse of ``_rows``: a list column of equal-length rows."""
+    arr = table.column(col).combine_chunks()
+    if not len(arr):
+        return np.empty((0, 0), dtype=np.float64)
+    return arr.flatten().to_numpy().astype(np.float64).reshape(len(arr), -1)
+
+
+def _save_matrix(path: str, key: str, col: str, matrix: np.ndarray) -> None:
+    """One row per matrix row: (``key`` = row index, ``col``)."""
+    keys = pa.array(np.arange(len(matrix), dtype=np.int32))
+    PR.replace(pa.table({key: keys, col: _rows(matrix)}), path)
+
+
+def _load_matrix(path: str, key: str, col: str) -> np.ndarray:
+    return _matrix(PR.read_table(path).sort_by(key), col)
 
 
 def save_centroids(spark: SparkSession, centroids: np.ndarray, path: str) -> None:
-    rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    _write_single_file(spark, rows, "cluster_id int, centroid array<double>", path)
+    _save_matrix(path, "cluster_id", "centroid", centroids)
 
 
 def load_centroids(spark: SparkSession, path: str) -> np.ndarray:
-    # Arrow toPandas, not collect(): boxing an array<double> column
-    # element-by-element through py4j is ~50× slower (index.
-    # sample_vectors' measured 57 s); at the FAISS-scale tiers this
-    # loader exists for (nlist 16k × dim 1024 = 16M doubles) the boxed
-    # path takes minutes
-    pdf = spark.read.parquet(path).orderBy("cluster_id").toPandas()
-    if not len(pdf):
-        return np.empty((0, 0), dtype=np.float64)
-    return np.stack([np.asarray(c, dtype=np.float64) for c in pdf["centroid"].values])
+    return _load_matrix(path, "cluster_id", "centroid")
 
 
 def save_pq(spark: SparkSession, model: PQModel, path: str) -> None:
     """Codebooks flattened to (subvector, code) rows; IVF coupling is
     restored on load from the sibling centroids table if present."""
-    rows = [
-        (int(j), int(c), [float(x) for x in model.codebooks[j, c]])
-        for j in range(model.m)
-        for c in range(model.ksub)
-    ]
-    _write_single_file(
-        spark, rows, "subvector int, code int, centroid array<double>",
+    grid = np.indices((model.m, model.ksub), dtype=np.int32).reshape(2, -1)
+    PR.replace(
+        pa.table({
+            "subvector": grid[0],
+            "code": grid[1],
+            "centroid": _rows(model.codebooks.reshape(-1, model.dsub)),
+        }),
         f"{path}/codebooks",
     )
     if model.centroids is not None:
         save_centroids(spark, model.centroids, f"{path}/ivf_centroids")
     if model.rotation is not None:
-        _write_single_file(
-            spark,
-            [(i, [float(x) for x in row]) for i, row in enumerate(model.rotation)],
-            "row int, coeffs array<double>",
-            f"{path}/opq_rotation",
-        )
+        _save_matrix(f"{path}/opq_rotation", "row", "coeffs", model.rotation)
 
 
 def save_sq(spark: SparkSession, model, path: str) -> None:
     """SQ8 grid: one row (vmin, scale, nbits) — the whole model is
     2×dim doubles."""
-    _write_single_file(
-        spark,
-        [([float(x) for x in model.vmin], [float(x) for x in model.scale],
-          int(model.nbits))],
-        "vmin array<double>, scale array<double>, nbits int",
+    PR.replace(
+        pa.table({
+            "vmin": _rows(np.asarray(model.vmin)[None]),
+            "scale": _rows(np.asarray(model.scale)[None]),
+            "nbits": pa.array([int(model.nbits)], pa.int32()),
+        }),
         path,
     )
 
@@ -103,40 +111,27 @@ def save_sq(spark: SparkSession, model, path: str) -> None:
 def load_sq(spark: SparkSession, path: str, centroids=None):
     from customkb_spark.embedding.sq import SQModel
 
-    r = spark.read.parquet(path).collect()[0]
+    r = PR.read_row(path)
     return SQModel(
-        np.asarray(r.vmin, dtype=np.float64),
-        np.asarray(r.scale, dtype=np.float64),
-        int(r.nbits),
+        np.asarray(r["vmin"], dtype=np.float64),
+        np.asarray(r["scale"], dtype=np.float64),
+        int(r["nbits"]),
         centroids,
     )
 
 
 def load_pq(spark: SparkSession, path: str) -> PQModel:
-    # Arrow transfer (see load_centroids): m × 2^nbits codebook rows
-    pdf = (
-        spark.read.parquet(f"{path}/codebooks").orderBy("subvector", "code").toPandas()
+    books = PR.read_table(f"{path}/codebooks").sort_by(
+        [("subvector", "ascending"), ("code", "ascending")]
     )
-    m = int(pdf["subvector"].max()) + 1
-    ksub = int(pdf["code"].max()) + 1
-    dsub = len(pdf["centroid"].iloc[0])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for j, c, cent in zip(pdf["subvector"], pdf["code"], pdf["centroid"]):
-        books[int(j), int(c)] = np.asarray(cent, dtype=np.float64)
-    cents = None
-    try:
+    ksub = pc.max(books.column("code")).as_py() + 1
+    flat = _matrix(books, "centroid")
+    cents = rotation = None
+    if PR.data_files(f"{path}/ivf_centroids"):  # flat PQ has no IVF coupling
         cents = load_centroids(spark, f"{path}/ivf_centroids")
-    except Exception:
-        pass  # flat PQ (no IVF coupling) has no centroids table
-    rotation = None
-    try:
-        rpdf = spark.read.parquet(f"{path}/opq_rotation").orderBy("row").toPandas()
-        rotation = np.asarray(
-            [np.asarray(r, dtype=np.float64) for r in rpdf["coeffs"]]
-        )
-    except Exception:
-        pass  # plain PQ has no rotation table
-    return PQModel(books, cents, rotation)
+    if PR.data_files(f"{path}/opq_rotation"):  # plain PQ has no rotation
+        rotation = _load_matrix(f"{path}/opq_rotation", "row", "coeffs")
+    return PQModel(flat.reshape(-1, ksub, flat.shape[1]), cents, rotation)
 
 
 def dir_fingerprint(path: str | None) -> str | None:
@@ -144,9 +139,7 @@ def dir_fingerprint(path: str | None) -> str | None:
     size, mtime_ns) of its data files, hashed. Parquet data files are
     immutable once written (every write creates new files), so listing
     equality ⇒ content equality — a freshness check that costs two
-    ``os.walk``s instead of two full-table scans (VERDICT r7 #4: the
-    kb100k index_load spent its 13.5 s mostly in content_fingerprint
-    corpus scans that re-proved an unchanged directory unchanged).
+    ``os.walk``s instead of two full-table scans.
 
     Returns None when ``path`` isn't a local directory (object-store
     URI, absent table) — callers fall back to content_fingerprint.
@@ -248,10 +241,10 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     """
     spark = tier.vectors.sparkSession
     fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
-    _write_meta(
-        spark, path, tier.kind, tier.id_col, tier.vec_col, fp,
-        dir_fingerprint(source_dir),
-    )
+    _write_meta(path, dict(
+        kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col, fp=fp,
+        src_fp=dir_fingerprint(source_dir),
+    ))
     if tier.kind == "flat":
         return
     save_centroids(spark, tier.centroids, f"{path}/centroids")
@@ -262,13 +255,9 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     write_ivf_table(tier.indexed, f"{path}/indexed")
 
 
-def _write_meta(spark, path, kind, id_col, vec_col, fp, src_fp=None) -> None:
-    _write_single_file(
-        spark,
-        [(kind, id_col, vec_col, fp, src_fp)],
-        "kind string, id_col string, vec_col string, fp string, src_fp string",
-        f"{path}/meta",
-    )
+def _write_meta(path: str, meta: dict) -> None:
+    # keys outside the layout (an old meta's ``n``) are dropped
+    PR.replace(pa.Table.from_pylist([meta], schema=_META_SCHEMA), f"{path}/meta")
 
 
 def _tier_verdict(
@@ -296,22 +285,23 @@ def _tier_verdict(
     table IS the index). ``fp_now`` is the vectors' current content
     fingerprint (None for flat or pre-fingerprint meta).
     """
-    fp_old = getattr(meta, "fp", None)
-    if meta.kind == "flat":
+    fp_old, kind = meta.get("fp"), meta["kind"]
+    if kind == "flat":
         return "fresh", None
     if fp_old is None:
         return "stale", None
-    src_fp_old = getattr(meta, "src_fp", None)
+    src_fp_old = meta.get("src_fp")
     if src_fp_old is not None and dir_fingerprint(source_dir) == src_fp_old:
         return "fresh", fp_old
-    fp_now = content_fingerprint(vectors, meta.id_col, meta.vec_col)
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    fp_now = content_fingerprint(vectors, id_col, vec_col)
     if fp_now == fp_old:
         return "fresh", fp_now
-    if meta.kind not in ("ivf", "ivfsq"):
+    if kind not in ("ivf", "ivfsq"):
         return "stale", fp_now
-    indexed_ids = spark.read.parquet(f"{path}/indexed").select(meta.id_col)
-    old_subset = vectors.join(indexed_ids, meta.id_col, "left_semi")
-    if content_fingerprint(old_subset, meta.id_col, meta.vec_col) == fp_old:
+    indexed_ids = spark.read.parquet(f"{path}/indexed").select(id_col)
+    old_subset = vectors.join(indexed_ids, id_col, "left_semi")
+    if content_fingerprint(old_subset, id_col, vec_col) == fp_old:
         return "appendable", fp_now
     return "stale", fp_now
 
@@ -325,7 +315,7 @@ def index_freshness(
     absorbs the new vectors), ``"stale"`` (a query rebuilds) or
     ``"absent"`` (no readable saved index)."""
     try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
+        meta = PR.read_row(f"{path}/meta")
     except Exception:
         return "absent"
     try:
@@ -349,17 +339,15 @@ def load_vector_index(
       dir (e.g. a killed save) → None: the caller rebuilds.
     """
     try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
+        meta = PR.read_row(f"{path}/meta")
         verdict, fp_now = _tier_verdict(spark, path, vectors, meta, source_dir)
         if verdict == "stale":
             return None
         tier = _load_tier(spark, path, vectors, meta)
         if verdict == "appendable":
             _append_to_tier(tier, f"{path}/indexed")
-            _write_meta(
-                spark, path, meta.kind, meta.id_col, meta.vec_col,
-                fp_now, dir_fingerprint(source_dir),
-            )
+            src_fp = dir_fingerprint(source_dir)
+            _write_meta(path, {**meta, "fp": fp_now, "src_fp": src_fp})
             tier.indexed = spark.read.parquet(f"{path}/indexed")
         return tier
     except Exception:
@@ -388,23 +376,24 @@ def _append_to_tier(tier, table_path: str) -> None:
 def _load_tier(spark: SparkSession, path: str, vectors: DataFrame, meta):
     from customkb_spark.embedding.auto import VectorIndexTier
 
-    if meta.kind == "flat":
-        return VectorIndexTier("flat", vectors, meta.id_col, meta.vec_col)
+    kind, id_col, vec_col = meta["kind"], meta["id_col"], meta["vec_col"]
+    if kind == "flat":
+        return VectorIndexTier("flat", vectors, id_col, vec_col)
     cents = load_centroids(spark, f"{path}/centroids")
     indexed = spark.read.parquet(f"{path}/indexed")
-    if meta.kind == "ivf":
+    if kind == "ivf":
         return VectorIndexTier(
-            "ivf", vectors, meta.id_col, meta.vec_col, centroids=cents, indexed=indexed
+            "ivf", vectors, id_col, vec_col, centroids=cents, indexed=indexed
         )
-    if meta.kind == "ivfsq":
+    if kind == "ivfsq":
         sq = load_sq(spark, f"{path}/sq", centroids=cents)
         return VectorIndexTier(
-            "ivfsq", vectors, meta.id_col, meta.vec_col,
+            "ivfsq", vectors, id_col, vec_col,
             centroids=cents, indexed=indexed, sq=sq,
         )
     pq = load_pq(spark, f"{path}/pq")
     return VectorIndexTier(
-        "ivfpq", vectors, meta.id_col, meta.vec_col,
+        "ivfpq", vectors, id_col, vec_col,
         centroids=pq.centroids if pq.centroids is not None else cents,
         indexed=indexed, pq=pq,
     )

@@ -47,14 +47,6 @@ class KnowledgeBaseNotFoundError(ConfigurationError):
         super().__init__(message, details)
 
 
-class InvalidConfigurationError(ConfigurationError):
-    def __init__(self, field: str, value: Any, reason: str):
-        super().__init__(
-            f"Invalid configuration: {field}={value!r} ({reason})",
-            {"field": field, "value": value, "reason": reason},
-        )
-
-
 # -- storage ----------------------------------------------------------------
 
 
@@ -97,10 +89,6 @@ class CacheError(EmbeddingError):
 
 
 class APIError(CustomKBError):
-    pass
-
-
-class AuthenticationError(APIError):
     pass
 
 

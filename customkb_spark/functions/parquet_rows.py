@@ -1,21 +1,27 @@
-"""Driver-side parquet writes for the per-request side tables: the
-query log (``plans/querylog.py``) and the query-embedding cache
-(``embedding/query_cache.py``).
+"""Driver-side parquet tables: those whose rows the driver holds whole,
+read and written with pyarrow rather than by Spark jobs — the
+per-request side tables (query log, query-embedding cache) and the
+index metadata (the vector tier's meta, centroids and PQ/SQ models,
+``bm25_meta``, the ``schema_migrations`` log). Spark reads them too.
 
-A request adds one row to each, written with pyarrow rather than by a
-Spark job. The row goes to a dot-prefixed temp file in the table's
-directory and is renamed into place: readers (Spark and pyarrow skip
-names starting with ``.`` or ``_``) see the whole row or nothing, and
-the row is in the table when the call returns. As with Spark's own
-writes nothing is fsynced, so a power loss can drop the last rows.
+``write_rows`` adds a file as a dot-prefixed temp file renamed into
+place: readers (Spark and pyarrow skip names starting with ``.`` or
+``_``) see the whole file or nothing, and the rows are in the table
+when the call returns. As with Spark's own writes nothing is fsynced,
+so a power loss can drop the last rows.
 
 ``compact`` renames the merged file in before it removes the files it
 replaces, so a crash in between leaves duplicate rows, never lost ones.
+
+``replace`` swaps the whole directory: a reader sees the old rows, no
+table, or the new rows, never a mix; a crash between its two renames
+leaves the table absent, as a killed Spark overwrite can.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -55,6 +61,37 @@ def read_files(files: list[str], schema: pa.Schema) -> pa.Table:
     return pa.concat_tables(
         pq.read_table(f, columns=schema.names).cast(schema) for f in files
     )
+
+
+def read_table(directory: str) -> pa.Table:
+    """The table in ``directory`` with the columns its files hold;
+    FileNotFoundError when it has no data file."""
+    files = data_files(directory)
+    if not files:
+        raise FileNotFoundError(directory)
+    return pa.concat_tables(pq.read_table(f) for f in files)
+
+
+def read_row(directory: str) -> dict:
+    """The first row of the table in ``directory``; a column a layout
+    written before it existed lacks is absent from the dict."""
+    return read_table(directory).to_pylist()[0]
+
+
+def replace(table: pa.Table, directory: str) -> None:
+    """Make ``table`` the whole table in ``directory``, as one file: it
+    is written into a hidden sibling directory, renamed into place once
+    the old directory, with all it held (Spark's ``_SUCCESS`` and
+    ``.crc`` files too), is renamed aside and then removed."""
+    parent, name = os.path.split(os.path.normpath(directory))
+    tag = uuid.uuid4().hex
+    staged, aside = (os.path.join(parent, f".{name}.{tag}.{s}") for s in ("new", "old"))
+    os.makedirs(staged)
+    pq.write_table(table, os.path.join(staged, f"part-{tag}.parquet"))
+    if os.path.isdir(directory):
+        os.rename(directory, aside)
+    os.rename(staged, directory)
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 def compact(directory: str, table: pa.Table, old_files: list[str]) -> None:

@@ -57,17 +57,22 @@ def retrieve_context(
         return ""
     if not query:
         return ""
+    return (query_context(engine, query, top_k, "plain") or "")[:max_chars]
+
+
+def query_context(
+    engine: KnowledgeBase, query: str, top_k: int | None, fmt: str
+) -> str:
+    """Context-only ``engine.query`` with a per-call ``top_k`` (None
+    keeps the engine's), set and restored under ``_CFG_LOCK``."""
     with _CFG_LOCK:
         prior_top_k = engine.cfg.query_top_k
         if top_k is not None:
             engine.cfg.query_top_k = int(top_k)
         try:
-            context = engine.query(query, context_only=True, fmt="plain")
+            return engine.query(query, context_only=True, fmt=fmt)
         finally:
             engine.cfg.query_top_k = prior_top_k
-    if context and len(context) > max_chars:
-        context = context[:max_chars]
-    return context or ""
 
 
 def health_info(

@@ -43,17 +43,24 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.config import KBConfig
 from customkb_spark.embedding.embedder import embed_texts
+from customkb_spark.functions import parquet_rows as PR
 from customkb_spark.ingest.pipeline import documents_to_chunks
 from customkb_spark.plans import hybrid as HY
 from customkb_spark.plans import resident as RI
 from customkb_spark.plans.answer import generate_answer
 from customkb_spark.plans.formatters import format_references
 from customkb_spark.plans.querylog import log_query
+
+# ``bm25_meta`` / ``<name>_meta``: one row, written by ``_write_bm25``
+BM25_META_SCHEMA = pa.schema([("n_chunks", pa.int64()), ("avgdl", pa.float64())] + [
+    (c, pa.string()) for c in ("chunks_fp", "language", "chunks_src_fp")
+])
 
 
 class KnowledgeBase:
@@ -210,7 +217,7 @@ class KnowledgeBase:
                 fp = content_fingerprint(chunks, "id", "originaltext")
             meta = self._write_bm25(chunks, "", "bm25_meta", fp)
         return {
-            "n_chunks": int(meta.n_chunks), "avgdl": float(meta.avgdl),
+            "n_chunks": int(meta["n_chunks"]), "avgdl": float(meta["avgdl"]),
             "n_terms": self._read("term_stats").count(), "rebuilt": rebuilt,
         }
 
@@ -258,8 +265,8 @@ class KnowledgeBase:
 
         meta = self._write_bm25(sliced, f"{name}_", f"{name}_meta")
         return {
-            "n_chunks": int(meta.n_chunks),
-            "avgdl": float(meta.avgdl),
+            "n_chunks": int(meta["n_chunks"]),
+            "avgdl": float(meta["avgdl"]),
             "n_terms": self._read(f"{name}_term_stats").count(),
             "name": name,
         }
@@ -267,11 +274,11 @@ class KnowledgeBase:
     def load_bm25_filtered(self, name: str = "bm25_focused") -> tuple:
         """(postings, term_stats, (n, avgdl)) of a focused index built
         by ``build_bm25_filtered`` — ready for ``HybridIndex.build``."""
-        meta = self._read(f"{name}_meta").collect()[0]
+        meta = PR.read_row(self._p(f"{name}_meta"))
         return (
             self._read(f"{name}_postings"),
             self._read(f"{name}_term_stats"),
-            (int(meta.n_chunks), float(meta.avgdl)),
+            (int(meta["n_chunks"]), float(meta["avgdl"])),
         )
 
     def _write_bm25(self, chunks, prefix: str, meta_name: str, fp=None):
@@ -281,7 +288,7 @@ class KnowledgeBase:
         written last. ``fp`` is the chunks' content fingerprint the
         primary index records for ``_bm25_freshness``. Returns the meta
         row."""
-        from customkb_spark.embedding.store import _write_single_file, dir_fingerprint
+        from customkb_spark.embedding.store import dir_fingerprint
         from customkb_spark.operators import bm25 as B25
 
         lang = self.cfg.language
@@ -290,15 +297,12 @@ class KnowledgeBase:
         postings.write.mode("overwrite").parquet(self._p(f"{prefix}postings"))
         stats = B25.build_term_stats(self._read(f"{prefix}postings"), n)
         stats.write.mode("overwrite").parquet(self._p(f"{prefix}term_stats"))
-        meta = Row(
+        meta = dict(
             n_chunks=int(n), avgdl=float(avgdl), chunks_fp=fp, language=lang,
             chunks_src_fp=dir_fingerprint(self._p("chunks")),
         )
-        _write_single_file(
-            self.spark, [tuple(meta)],
-            "n_chunks long, avgdl double, chunks_fp string, language string, "
-            "chunks_src_fp string",
-            self._p(meta_name),
+        PR.replace(
+            pa.Table.from_pylist([meta], schema=BM25_META_SCHEMA), self._p(meta_name)
         )
         self._invalidate()
         return meta
@@ -321,14 +325,14 @@ class KnowledgeBase:
             return None, None
         from customkb_spark.embedding.store import content_fingerprint, dir_fingerprint
 
-        meta = self._read("bm25_meta").collect()[0]
-        if getattr(meta, "language", "en") != self.cfg.language:
+        meta = PR.read_row(self._p("bm25_meta"))
+        if meta.get("language", "en") != self.cfg.language:
             return None, None
-        src_fp = getattr(meta, "chunks_src_fp", None)
+        src_fp = meta.get("chunks_src_fp")
         if src_fp is not None and dir_fingerprint(self._p("chunks")) == src_fp:
             return meta, None
         fp = content_fingerprint(chunks, "id", "originaltext")
-        return (meta if getattr(meta, "chunks_fp", None) == fp else None), fp
+        return (meta if meta.get("chunks_fp") == fp else None), fp
 
     # ---------------------------------------------------------- query
     def _invalidate(self) -> None:
@@ -382,7 +386,7 @@ class KnowledgeBase:
             postings = term_stats = corpus = None
             if meta is not None:  # else HybridIndex.build tokenizes
                 postings, term_stats = self._read("postings"), self._read("term_stats")
-                corpus = (int(meta.n_chunks), float(meta.avgdl))
+                corpus = (int(meta["n_chunks"]), float(meta["avgdl"]))
             self._index = HY.HybridIndex.build(
                 self._cached_chunks, vectors, cfg=self.cfg, vindex=vindex,
                 postings=postings, term_stats=term_stats, corpus=corpus,

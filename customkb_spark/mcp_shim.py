@@ -4,7 +4,7 @@ The reference exposes each knowledgebase as an MCP search tool plus
 discovery tools (list_knowledgebases / get_kb_info), each call shelling
 out to ``customkb query -c``. Here the same tool surface maps straight
 onto the in-process engine (KnowledgeBase.query) — no subprocess, one
-shared SparkSession.
+shared SparkSession and one held KnowledgeBase per KB.
 
 The ``mcp`` package is not in this container, so the transport layer is
 dep-gated: ``serve()`` raises a clear error without it, while the tool
@@ -24,6 +24,7 @@ import os
 from pyspark.sql import SparkSession
 
 from customkb_spark.config import KBConfig
+from customkb_spark.http_api import _CFG_LOCK, query_context
 from customkb_spark.kb import KnowledgeBase
 
 DEFAULT_BASE = os.environ.get("VECTORDBS", "/var/lib/vectordbs")
@@ -52,14 +53,27 @@ def _kb_cfg(base_dir: str, kb: str) -> KBConfig:
     return KBConfig.from_file(named if os.path.exists(named) else generic)
 
 
+_ENGINES: dict = {}  # (session, kb_dir) → its held KnowledgeBase
+
+
+def _engine(spark: SparkSession, base_dir: str, kb: str) -> KnowledgeBase:
+    """The held engine of ``kb``, whose index survives between calls
+    (its ``_build_index`` sees other writers); a changed .cfg file
+    replaces it. Compared under ``_CFG_LOCK``, where no call has the
+    engine's top_k changed."""
+    kb_dir, cfg = os.path.join(base_dir, kb), _kb_cfg(base_dir, kb)
+    with _CFG_LOCK:
+        engine = _ENGINES.get((spark, kb_dir))
+        if engine is None or engine.cfg != cfg:
+            engine = _ENGINES[(spark, kb_dir)] = KnowledgeBase(spark, kb_dir, cfg)
+    return engine
+
+
 def get_kb_info(base_dir: str, kb: str, spark: SparkSession) -> dict:
     """Reference get_kb_info tool: existence + table stats."""
     if kb not in list_knowledgebases(base_dir):
         return {"name": kb, "available": False}
-    stats = KnowledgeBase(
-        spark, os.path.join(base_dir, kb), _kb_cfg(base_dir, kb)
-    ).verify()
-    return {"name": kb, "available": True, **stats}
+    return {"name": kb, "available": True, **_engine(spark, base_dir, kb).verify()}
 
 
 def search_knowledgebase(
@@ -77,10 +91,7 @@ def search_knowledgebase(
     if kb not in list_knowledgebases(base_dir):
         return f"Error querying {kb}: unknown knowledgebase"
     try:
-        cfg = _kb_cfg(base_dir, kb)
-        cfg.query_top_k = int(top_k)
-        engine = KnowledgeBase(spark, os.path.join(base_dir, kb), cfg)
-        return engine.query(query, context_only=True, fmt=output_format)
+        return query_context(_engine(spark, base_dir, kb), query, top_k, output_format)
     except Exception as e:  # tool contract: never raise
         return f"Error querying {kb}: {e}"
 

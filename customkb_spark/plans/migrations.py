@@ -12,9 +12,10 @@ grouped aggregate over the event log:
 
 which is exactly the reference's ``MAX(version) WHERE applied_at IS
 NOT NULL AND rollback_at IS NULL`` over an event-sourced table. Being
-append-only, the log survives concurrent writers the same way the
-KB's other sidecars do, and the aggregate is over a table of
-#migrations rows — driver-trivial at any corpus size.
+append-only (one file per event, ``functions/parquet_rows.write_rows``),
+the log survives concurrent writers the same way the KB's other
+sidecars do; it holds #migrations rows, so the driver reads and
+aggregates it with pyarrow and no Spark job.
 
 Migrations themselves follow the reference shape: idempotent (probe
 the live schema first, return False when already applied), then record
@@ -26,30 +27,20 @@ new columns are per-row expressions).
 
 from __future__ import annotations
 
+import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from customkb_spark.functions.parquet_rows import data_files, read_files, write_rows
+
 MIGRATIONS_TABLE = "schema_migrations"
-MIGRATIONS_SCHEMA = (
-    "version long, name string, applied_at double, rollback_at double, description string"
-)
-
-
-def _table_path(kb_dir: str) -> str:
-    import os
-
-    return os.path.join(kb_dir, MIGRATIONS_TABLE)
-
-
-def _read_log(spark: SparkSession, kb_dir: str):
-    import os
-
-    path = _table_path(kb_dir)
-    if not os.path.isdir(path):
-        return None
-    return spark.read.parquet(path)
+MIGRATIONS_SCHEMA = pa.schema([
+    ("version", pa.int64()), ("name", pa.string()), ("applied_at", pa.float64()),
+    ("rollback_at", pa.float64()), ("description", pa.string()),
+])
 
 
 def get_current_schema_version(spark: SparkSession, kb_dir: str) -> int:
@@ -59,47 +50,24 @@ def get_current_schema_version(spark: SparkSession, kb_dir: str) -> int:
     counts as applied again (the reference's in-place row clears
     ``rollback_at`` on re-apply; the append-only log expresses the same
     state by comparing max timestamps)."""
-    log = _read_log(spark, kb_dir)
-    if log is None:
-        return 0
-    state = log.groupBy("version").agg(
-        F.max("applied_at").alias("applied"),
-        F.max("rollback_at").alias("rolled_back"),
+    log = read_files(
+        data_files(os.path.join(kb_dir, MIGRATIONS_TABLE)), MIGRATIONS_SCHEMA
     )
-    row = (
-        state.filter(
-            F.col("applied").isNotNull()
-            & (
-                F.col("rolled_back").isNull()
-                | (F.col("applied") > F.col("rolled_back"))
-            )
-        )
-        .agg(F.max("version").alias("v"))
-        .first()
+    agg = [("applied_at", "max"), ("rollback_at", "max")]
+    live = [
+        r["version"] for r in log.group_by("version").aggregate(agg).to_pylist()
+        if r["applied_at_max"] is not None
+        and (r["rollback_at_max"] is None or r["applied_at_max"] > r["rollback_at_max"])
+    ]
+    return max(live, default=0)
+
+
+def _append_event(kb_dir: str, **event) -> None:
+    """One event row (absent columns null), as one new file of the log."""
+    write_rows(
+        pa.Table.from_pylist([event], schema=MIGRATIONS_SCHEMA),
+        os.path.join(kb_dir, MIGRATIONS_TABLE),
     )
-    return int(row["v"]) if row and row["v"] is not None else 0
-
-
-def _append_event(
-    spark: SparkSession,
-    kb_dir: str,
-    version: int,
-    name: str,
-    applied_at: float | None,
-    rollback_at: float | None,
-    description: str,
-) -> None:
-    from customkb_spark.embedding.store import _write_single_file
-
-    import os
-
-    path = _table_path(kb_dir)
-    row = [(int(version), name, applied_at, rollback_at, description)]
-    if os.path.isdir(path):
-        rdd = spark.sparkContext.parallelize(row, 1)
-        spark.createDataFrame(rdd, MIGRATIONS_SCHEMA).write.mode("append").parquet(path)
-    else:
-        _write_single_file(spark, row, MIGRATIONS_SCHEMA, path)
 
 
 def record_migration(
@@ -112,8 +80,8 @@ def record_migration(
 ) -> None:
     """Reference record_migration: append an applied event."""
     _append_event(
-        spark, kb_dir, version, name,
-        time.time() if now is None else now, None, description,
+        kb_dir, version=int(version), name=name, description=description,
+        applied_at=time.time() if now is None else now,
     )
 
 
@@ -126,8 +94,8 @@ def record_rollback(
     """Rollback marker (the reference's ``rollback_at`` column): a
     second event row; the version aggregate then skips this version."""
     _append_event(
-        spark, kb_dir, version, "", None,
-        time.time() if now is None else now, "",
+        kb_dir, version=int(version), name="", description="",
+        rollback_at=time.time() if now is None else now,
     )
 
 

@@ -204,3 +204,22 @@ def test_append_cycle_computes_each_result_once(spark, base_kb, tmp_path):
     assert _jobs_of(spark, lambda: kb.database(docs)) <= DATABASE_APPEND_JOBS
     assert _jobs_of(spark, kb.embed) <= EMBED_APPEND_JOBS
     assert kb.verify()["pending_embed"] == 0
+
+
+def test_index_metadata_reads_run_no_spark_job(spark, base_kb, tmp_path):
+    """On an unchanged KB both freshness rules decide from the metadata
+    tables and directory listings alone: no Spark job."""
+    kb_dir = _copy(base_kb, tmp_path)
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    chunks = kb._read("chunks")
+    vectors = kb._read("vectors")
+    out = {}
+
+    def freshness():
+        out["bm25"] = kb._bm25_freshness(chunks)[0]
+        out["vindex"] = S.index_freshness(
+            spark, kb._p("vindex"), vectors, source_dir=kb._p("vectors")
+        )
+
+    assert _jobs_of(spark, freshness) == 0
+    assert out["bm25"] is not None and out["vindex"] == "fresh"

@@ -44,7 +44,6 @@ class KBConfig:
     query_context_scope: int = 4
     query_cache_ttl_days: float = 7.0  # reference query/embedding.py:95
     max_file_size_mb: int = 100
-    embedding_batch_size: int = 100
 
     # Index-tier auto-selection (reference get_optimal_faiss_index,
     # embed_manager.py:163-213: Flat < small_dataset_threshold ≤ IVF <

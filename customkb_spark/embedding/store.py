@@ -233,6 +233,8 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     - ``indexed``: the derived table, PARTITIONED BY cluster_id.
 
     ``flat`` persists meta only — the raw vectors table IS the index.
+    Each table is swapped in whole and ``meta`` is written last: a
+    killed save never leaves a meta describing a tier that is not there.
 
     ``source_dir`` (the vectors table's parquet directory, when the
     caller reads it from one, e.g. KnowledgeBase) also pins the cheap
@@ -241,18 +243,17 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     """
     spark = tier.vectors.sparkSession
     fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
+    if tier.kind != "flat":
+        save_centroids(spark, tier.centroids, f"{path}/centroids")
+        if tier.kind == "ivfpq":
+            save_pq(spark, tier.pq, f"{path}/pq")
+        if tier.kind == "ivfsq":
+            save_sq(spark, tier.sq, f"{path}/sq")
+        PR.swap(f"{path}/indexed", lambda staged: write_ivf_table(tier.indexed, staged))
     _write_meta(path, dict(
         kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col, fp=fp,
         src_fp=dir_fingerprint(source_dir),
     ))
-    if tier.kind == "flat":
-        return
-    save_centroids(spark, tier.centroids, f"{path}/centroids")
-    if tier.kind == "ivfpq":
-        save_pq(spark, tier.pq, f"{path}/pq")
-    if tier.kind == "ivfsq":
-        save_sq(spark, tier.sq, f"{path}/sq")
-    write_ivf_table(tier.indexed, f"{path}/indexed")
 
 
 def _write_meta(path: str, meta: dict) -> None:

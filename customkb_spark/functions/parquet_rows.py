@@ -13,16 +13,19 @@ so a power loss can drop the last rows.
 ``compact`` renames the merged file in before it removes the files it
 replaces, so a crash in between leaves duplicate rows, never lost ones.
 
-``replace`` swaps the whole directory: a reader sees the old rows, no
-table, or the new rows, never a mix; a crash between its two renames
-leaves the table absent, as a killed Spark overwrite can.
+``swap`` is the KB's one way to replace a table, Spark-written ones too:
+a killed write leaves the old table whole, and a reader sees the old
+rows, no table, or the new rows; ``recover`` undoes a swap that a crash
+cut between its two renames.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -78,20 +81,41 @@ def read_row(directory: str) -> dict:
     return read_table(directory).to_pylist()[0]
 
 
-def replace(table: pa.Table, directory: str) -> None:
-    """Make ``table`` the whole table in ``directory``, as one file: it
-    is written into a hidden sibling directory, renamed into place once
-    the old directory, with all it held (Spark's ``_SUCCESS`` and
-    ``.crc`` files too), is renamed aside and then removed."""
+def swap(directory: str, write: Callable[[str], None]) -> None:
+    """Make what ``write(staged)`` writes the whole table in
+    ``directory``; ``staged`` does not exist yet, so a Spark
+    ``df.write.parquet`` fits. The old directory goes with all it held
+    (Spark's ``_SUCCESS`` and ``.crc`` files too)."""
     parent, name = os.path.split(os.path.normpath(directory))
     tag = uuid.uuid4().hex
     staged, aside = (os.path.join(parent, f".{name}.{tag}.{s}") for s in ("new", "old"))
-    os.makedirs(staged)
-    pq.write_table(table, os.path.join(staged, f"part-{tag}.parquet"))
+    write(staged)
     if os.path.isdir(directory):
         os.rename(directory, aside)
     os.rename(staged, directory)
     shutil.rmtree(aside, ignore_errors=True)
+
+
+def replace(table: pa.Table, directory: str) -> None:
+    """Make ``table`` the whole table in ``directory``, as one file."""
+    swap(directory, lambda staged: write_rows(table, staged))
+
+
+def recover(root: str) -> None:
+    """Undo the swaps a crash interrupted under ``root``: a missing
+    table gets its ``.old`` aside back, and every other directory named
+    as ``swap`` names them (a dead write's output, a finished aside) is
+    removed. It assumes one writer at a time: a swap another process is
+    making meanwhile can fail, but no table is lost."""
+    swapping = re.compile(r"\.(?P<name>.+)\.[0-9a-f]{32}\.(?P<state>new|old)")
+    for parent, dirs, _files in os.walk(root):
+        for m in filter(None, map(swapping.fullmatch, list(dirs))):
+            dirs.remove(m.string)  # not descended into
+            path, table = os.path.join(parent, m.string), os.path.join(parent, m["name"])
+            if m["state"] == "old" and not os.path.isdir(table):
+                os.rename(path, table)
+            else:
+                shutil.rmtree(path, ignore_errors=True)
 
 
 def compact(directory: str, table: pa.Table, old_files: list[str]) -> None:

@@ -68,6 +68,7 @@ class KnowledgeBase:
         self.spark = spark
         self.kb_dir = kb_dir
         self.cfg = cfg or KBConfig()
+        PR.recover(kb_dir)  # undo table swaps a killed writer left
         self._index: HY.HybridIndex | None = None
         self._index_fp: tuple | None = None
         self._resident: RI.ResidentIndex | None = None
@@ -82,6 +83,12 @@ class KnowledgeBase:
     def _read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._p(name))
 
+    def _swap(self, name: str, df: DataFrame) -> None:
+        """``parquet_rows.swap`` in ``df`` as table ``name``, refreshing
+        Spark's cached reads of it as an overwrite does."""
+        PR.swap(self._p(name), df.write.parquet)
+        self.spark.catalog.refreshByPath(self._p(name))
+
     # ------------------------------------------------------- database
     def database(self, docs: DataFrame, force: bool = False) -> int:
         """Ingest a documents DataFrame (doc_id, text, source[, lang]).
@@ -92,6 +99,9 @@ class KnowledgeBase:
         A source is already ingested when ``chunks.sourcedoc`` holds it:
         the chunks write is the only record, so a call killed after it
         is retried without duplicating chunk ids.
+        ``force`` swaps in ``vectors/`` less the replaced sources', then
+        ``chunks/``; killed between the two, those sources keep their old
+        text, pending re-embedding, until the retry.
         """
         if not force and self._exists("chunks"):
             seen = self._read("chunks").select(F.col("sourcedoc").alias("source"))
@@ -132,14 +142,9 @@ class KnowledgeBase:
                 replaced_ids = old.join(
                     sources.select(F.col("source").alias("sourcedoc")), "sourcedoc"
                 ).select("id")
-                kept_vecs = (
-                    self._read("vectors")
-                    .join(replaced_ids, "id", "left_anti")
-                    .localCheckpoint()
-                )
-                kept_vecs.write.mode("overwrite").parquet(self._p("vectors"))
-            merged = kept.unionByName(chunks).localCheckpoint()
-            merged.write.mode("overwrite").parquet(self._p("chunks"))
+                kept_vecs = self._read("vectors").join(replaced_ids, "id", "left_anti")
+                self._swap("vectors", kept_vecs)
+            self._swap("chunks", kept.unionByName(chunks))
         else:
             chunks.write.mode("append").parquet(self._p("chunks"))
         return n
@@ -160,13 +165,8 @@ class KnowledgeBase:
         from customkb_spark.embedding.cache import split_hits_misses, with_cache_key
         from customkb_spark.functions import cache_stats
 
-        pending = self._read("chunks").filter(F.length("embedtext") > 0)
-        if self._exists("vectors"):
-            have = self._read("vectors").select("id")
-            pending = pending.join(have, "id", "left_anti")
-        keyed = with_cache_key(
-            pending.select("id", "embedtext"), F.col("embedtext"), self.cfg.vector_model
-        )
+        pending = self._pending_embed(self._read("chunks")).select("id", "embedtext")
+        keyed = with_cache_key(pending, F.col("embedtext"), self.cfg.vector_model)
         cache = (
             self._read("emb_cache")
             if self._exists("emb_cache")
@@ -197,6 +197,14 @@ class KnowledgeBase:
                 "append"
             ).parquet(self._p("vectors"))
         return hit_n + miss_n
+
+    def _pending_embed(self, chunks: DataFrame) -> DataFrame:
+        """The chunks of ``chunks`` with embeddable text and no vector;
+        with no vectors table yet, every embeddable chunk."""
+        pending = chunks.filter(F.length("embedtext") > 0)
+        if self._exists("vectors"):
+            pending = pending.join(self._read("vectors").select("id"), "id", "left_anti")
+        return pending
 
     # ----------------------------------------------------------- bm25
     def build_bm25(self, force: bool = False) -> dict:
@@ -285,18 +293,18 @@ class KnowledgeBase:
         """The one BM25 build: corpus stats → ``<prefix>postings`` →
         read back (term_stats aggregates the materialized table instead
         of re-tokenizing the corpus) → ``<prefix>term_stats`` → meta,
-        written last. ``fp`` is the chunks' content fingerprint the
-        primary index records for ``_bm25_freshness``. Returns the meta
-        row."""
+        written last; each is swapped in whole. ``fp`` is the chunks'
+        content fingerprint the primary index records for
+        ``_bm25_freshness``. Returns the meta row."""
         from customkb_spark.embedding.store import dir_fingerprint
         from customkb_spark.operators import bm25 as B25
 
         lang = self.cfg.language
         n, avgdl = B25.corpus_stats(chunks, "originaltext", language=lang)
         postings = B25.build_postings(chunks, "id", "originaltext", language=lang)
-        postings.write.mode("overwrite").parquet(self._p(f"{prefix}postings"))
+        self._swap(f"{prefix}postings", postings)
         stats = B25.build_term_stats(self._read(f"{prefix}postings"), n)
-        stats.write.mode("overwrite").parquet(self._p(f"{prefix}term_stats"))
+        self._swap(f"{prefix}term_stats", stats)
         meta = dict(
             n_chunks=int(n), avgdl=float(avgdl), chunks_fp=fp, language=lang,
             chunks_src_fp=dir_fingerprint(self._p("chunks")),
@@ -530,13 +538,7 @@ class KnowledgeBase:
         out["chunks"] = chunks.count() if chunks is not None else 0
         out["vectors"] = self._read("vectors").count() if self._exists("vectors") else 0
         if chunks is not None:
-            pending = chunks.filter(F.length("embedtext") > 0)
-            if self._exists("vectors"):
-                pending = pending.join(
-                    self._read("vectors").select("id"), "id", "left_anti"
-                )
-            # no vectors table yet ⇒ EVERY embeddable chunk is pending
-            out["pending_embed"] = pending.count()
+            out["pending_embed"] = self._pending_embed(chunks).count()
         # A7: schema-version aggregate over the migrations event log
         from customkb_spark.plans.migrations import get_current_schema_version
 

@@ -8,7 +8,9 @@ SQLite B-tree indexes. On Spark the equivalents are:
 - ``optimize_chunks``: rewrite the chunks table clustered by
   (sourcedoc, sid) — files sorted on the covering-index key
   (index_manager.py:161) so min/max row-group stats prune the context
-  range join's probe; partition count sized to the target file size.
+  range join's probe; partition count sized to the target file size;
+  swapped in whole (``parquet_rows.swap``), as a killed rewrite must not
+  lose the table.
 - ``table_stats``: the verify surface — per-table row counts, file
   counts, and size, plus pending-work counts (the flag-polling checks,
   embed_manager.py:586 / bm25_manager.py:227-255) as anti-join counts.
@@ -21,6 +23,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from customkb_spark.functions.parquet_rows import swap
 
 
 def optimize_chunks(
@@ -40,18 +44,9 @@ def optimize_chunks(
         os.path.getsize(f) for f in glob.glob(os.path.join(chunks_path, "*.parquet"))
     )
     n_files = max(1, total_bytes // (target_file_mb * 1024 * 1024))
-    tmp = chunks_path.rstrip("/") + "_opt"
-    (
-        df.repartition(int(n_files), F.col(bucket_col))
-        .sortWithinPartitions(bucket_col, "sid")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    # atomic-ish swap (driver-side, same filesystem)
-    import shutil
-
-    shutil.rmtree(chunks_path)
-    shutil.move(tmp, chunks_path)
+    clustered = df.repartition(int(n_files), F.col(bucket_col))
+    swap(chunks_path, clustered.sortWithinPartitions(bucket_col, "sid").write.parquet)
+    spark.catalog.refreshByPath(chunks_path)  # a held KB caches chunks
 
 
 MEMORY_TIERS = [
@@ -185,13 +180,9 @@ def clean_embedding_cache(
     torn write).
 
     One scan + one rewrite of the cache table (both map-side; the
-    filter is a pure column predicate). Returns the reference script's
-    (total, corrupted, cleaned) accounting. ``dry_run`` reports
-    without rewriting."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    filter is a pure column predicate), swapped in whole. Returns the
+    reference script's (total, corrupted, cleaned) accounting.
+    ``dry_run`` reports without rewriting."""
     if not os.path.isdir(cache_path):
         return {"total": 0, "corrupted": 0, "cleaned": 0}
     cache = spark.read.parquet(cache_path)
@@ -202,12 +193,5 @@ def clean_embedding_cache(
     corrupted = total - n_good
     if corrupted == 0 or dry_run:
         return {"total": total, "corrupted": corrupted, "cleaned": 0}
-    # rewrite via a temp dir + swap (same pattern as the migrations):
-    # overwrite-in-place would read and clobber the same files
-    import shutil
-
-    tmp = cache_path + ".cleaning"
-    good.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(cache_path)
-    shutil.move(tmp, cache_path)
+    swap(cache_path, good.write.parquet)
     return {"total": total, "corrupted": corrupted, "cleaned": corrupted}

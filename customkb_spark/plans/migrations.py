@@ -22,7 +22,8 @@ the live schema first, return False when already applied), then record
 the version. The BM25 migration materializes the token columns the
 reference adds to SQLite — here a one-pass column-append rewrite of
 the chunks table, which at 100 TB is a map-only job (no shuffle: the
-new columns are per-row expressions).
+new columns are per-row expressions), swapped in whole
+(``parquet_rows.swap``) before the version is recorded.
 """
 
 from __future__ import annotations
@@ -121,23 +122,12 @@ def migrate_for_bm25(kb) -> bool:
     out = chunks.withColumn("bm25_tokens", toks).withColumn(
         "doc_length", F.size("bm25_tokens").cast("long")
     )
-    _rewrite_chunks(kb, out)
+    kb._swap("chunks", out)
     record_migration(
         kb.spark, kb.kb_dir, BM25_MIGRATION_VERSION, "bm25_columns",
         "materialize bm25_tokens + doc_length on chunks",
     )
     return True
-
-
-def _rewrite_chunks(kb, out) -> None:
-    """Atomic-ish table swap shared by the column migrations."""
-    import shutil
-
-    tmp = kb._p("chunks") + ".migrating"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(kb._p("chunks"))
-    shutil.move(tmp, kb._p("chunks"))
-    kb._invalidate()
 
 
 CATEGORIES_MIGRATION_VERSION = 2
@@ -156,7 +146,7 @@ def migrate_add_categories(kb) -> bool:
     out = chunks.withColumn(
         "primary_category", F.lit(None).cast("string")
     ).withColumn("categories", F.lit(None).cast("array<string>"))
-    _rewrite_chunks(kb, out)
+    kb._swap("chunks", out)
     record_migration(
         kb.spark, kb.kb_dir, CATEGORIES_MIGRATION_VERSION, "add_categories",
         "Added category columns for document classification",
@@ -178,7 +168,7 @@ def migrate_add_timestamps(kb) -> bool:
         return False
     now = F.current_timestamp()
     out = chunks.withColumn("created_at", now).withColumn("updated_at", now)
-    _rewrite_chunks(kb, out)
+    kb._swap("chunks", out)
     record_migration(
         kb.spark, kb.kb_dir, TIMESTAMPS_MIGRATION_VERSION, "add_timestamps",
         "Added timestamp columns for tracking",

@@ -223,3 +223,141 @@ def test_index_metadata_reads_run_no_spark_job(spark, base_kb, tmp_path):
 
     assert _jobs_of(spark, freshness) == 0
     assert out["bm25"] is not None and out["vindex"] == "fresh"
+
+
+def _kill_writes_to(monkeypatch, table: str) -> None:
+    """Make every Spark parquet write whose target's last path component
+    contains ``table`` (the table, a copy beside it, or its staged
+    sibling) die inside its job as a failing task does: the frame
+    written gains a column whose UDF raises. The writer's mode is kept,
+    so an overwrite still clears its target before the job runs."""
+    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def die(_):
+        raise RuntimeError("write killed")
+
+    def mode(self, save_mode):
+        self._save_mode = save_mode
+        return real_mode(self, save_mode)
+
+    def parquet(self, path, *a, **k):
+        if table not in os.path.basename(path.rstrip("/")):
+            return real_parquet(self, path, *a, **k)
+        doomed = self._df.withColumn("_killed", F.udf(die, "int")(F.lit(0))).write
+        real_mode(doomed, getattr(self, "_save_mode", None))
+        real_parquet(doomed, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _leftovers(directory: str, table: str) -> list[str]:
+    """Entries beside ``table`` named after it: copies, staged or
+    set-aside directories."""
+    return [d for d in os.listdir(directory) if table in d and d != table]
+
+
+def test_bm25_rebuild_killed_in_postings_write_keeps_the_index(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    kb_dir = _copy(base_kb, tmp_path)
+    q = "spark data query table"
+    before = KnowledgeBase(spark, kb_dir, KBConfig(**CFG)).query(q, log=False)
+    _kill_writes_to(monkeypatch, "postings")
+    with pytest.raises(Exception, match="write killed"):
+        KnowledgeBase(spark, kb_dir, KBConfig(**CFG)).build_bm25(force=True)
+    monkeypatch.undo()
+
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert kb.query(q, log=False) == before
+    assert kb.verify()["bm25_index"] == "fresh"
+    assert _leftovers(kb_dir, "postings") == []
+
+
+def test_force_reingest_killed_in_chunks_write_keeps_the_chunks(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """Killed in the chunks write, ``database(force=True)`` leaves the
+    old chunks serving their old text, their vectors dropped; the retry
+    and ``embed`` then serve the new text, with no duplicate ids."""
+    kb_dir, docs = _copy(base_kb, tmp_path), base_kb[1]
+    marker = "killedquokka"
+    changed = docs.limit(3).select(
+        "doc_id", F.concat(F.lit(marker + " "), F.col("text")).alias("text"), "source"
+    )
+    replaced = [r.source for r in changed.select("source").collect()]
+    n_chunks = spark.read.parquet(os.path.join(kb_dir, "chunks")).count()
+    _kill_writes_to(monkeypatch, "chunks")
+    with pytest.raises(Exception, match="write killed"):
+        KnowledgeBase(spark, kb_dir, KBConfig(**CFG)).database(changed, force=True)
+    monkeypatch.undo()
+
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    chunks = kb._read("chunks")
+    assert chunks.count() == n_chunks
+    old = chunks.filter(F.col("sourcedoc").isin(*replaced))
+    assert old.filter(F.col("originaltext").contains(marker)).count() == 0
+    # their vectors went with the vectors swap, so they wait to re-embed
+    assert kb.verify()["pending_embed"] == old.filter(F.length("embedtext") > 0).count()
+    assert marker not in kb.query(marker + " spark data", log=False)
+
+    assert kb.database(changed, force=True) > 0
+    assert kb.embed() > 0
+    assert marker in kb.query(marker + " spark data", log=False)
+    for table in ("chunks", "vectors"):
+        ids = kb._read(table).select("id")
+        assert ids.count() == ids.distinct().count()
+
+
+@pytest.mark.parametrize("rewrite", ["optimize_chunks", "migrate_add_categories"])
+def test_chunks_rewrite_killed_keeps_the_chunks(
+    spark, base_kb, tmp_path, monkeypatch, rewrite
+):
+    from customkb_spark.plans.maintenance import optimize_chunks
+    from customkb_spark.plans.migrations import migrate_add_categories
+
+    kb_dir = _copy(base_kb, tmp_path)
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    n_chunks = kb._read("chunks").count()
+    _kill_writes_to(monkeypatch, "chunks")
+    with pytest.raises(Exception, match="write killed"):
+        if rewrite == "optimize_chunks":
+            optimize_chunks(spark, kb._p("chunks"))
+        else:
+            migrate_add_categories(kb)
+    monkeypatch.undo()
+
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert kb._read("chunks").count() == n_chunks
+    assert _leftovers(kb_dir, "chunks") == []
+
+
+def test_replace_interrupted_between_renames_is_undone_on_open(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """A crash after the old table is renamed aside and before the new
+    one is renamed in: opening the KB renames the old one back."""
+    from customkb_spark.functions import parquet_rows as PR
+
+    kb_dir = _copy(base_kb, tmp_path)
+    vindex = os.path.join(kb_dir, "vindex")
+    meta = PR.read_row(os.path.join(vindex, "meta"))
+    real, renames = os.rename, []
+
+    def rename(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("killed between the renames")
+        real(src, dst)
+
+    monkeypatch.setattr(PR.os, "rename", rename)
+    with pytest.raises(OSError):
+        S._write_meta(vindex, {**meta, "fp": "0"})
+    monkeypatch.undo()
+    assert not os.path.isdir(os.path.join(vindex, "meta"))
+    os.makedirs(os.path.join(kb_dir, ".not.a.swap.new"))
+
+    KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert PR.read_row(os.path.join(vindex, "meta")) == meta
+    assert _leftovers(vindex, "meta") == []
+    assert os.path.isdir(os.path.join(kb_dir, ".not.a.swap.new"))

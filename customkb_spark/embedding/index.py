@@ -123,9 +123,10 @@ def _matmul_assign_udf(centroids: np.ndarray, with_sim: bool, sc=None):
     footprint FAISS's coarse quantizer holds per node) turns a
     hundred-task stage into hundreds of GB of pipe traffic.
 
-    argmin over full ``d2 = |c|² − 2·x·C`` (the per-row ``|x|²`` term
-    cannot change the argmin) with numpy's first-minimum tiebreak —
-    matching the reference expression kernel's
+    The assignment is ``pq._assign_nearest``, the one nearest-centroid
+    kernel (the driver-side tier absorb in embedding/store.py runs it
+    too): argmin over ``d2 = |c|² − 2·x·C`` with numpy's first-minimum
+    tiebreak — matching the reference expression kernel's
     ``array_position(d, array_min(d))`` first-match semantics."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -140,14 +141,12 @@ def _matmul_assign_udf(centroids: np.ndarray, with_sim: bool, sc=None):
 
         @pandas_udf("int")
         def _assign(vs):
+            from customkb_spark.embedding.pq import _assign_nearest
+
             if not len(vs):
                 return pd.Series([], dtype="int32")
-            C = _mat()
-            c2 = (C * C).sum(axis=1)
             X = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-            dots = X @ C.T
-            assign = (c2[None, :] - 2.0 * dots).argmin(axis=1)
-            return pd.Series(assign.astype(np.int32))
+            return pd.Series(_assign_nearest(X, _mat()).astype(np.int32))
 
         return _assign
 

@@ -85,32 +85,44 @@ def train_sq(
     return SQModel(vmin.astype(np.float64), scale.astype(np.float64), nbits, centroids)
 
 
+def sq_encode_rows(x: np.ndarray, model: SQModel) -> tuple[np.ndarray | None, np.ndarray]:
+    """(cluster ids or None, int16 codes) of the float64 rows ``x`` —
+    the numpy body of :func:`encode_sq`, which the driver-side tier
+    absorb (embedding/store.py) also runs.
+
+    Values outside the trained range clip to the grid edges (FAISS
+    QT_8bit behavior) — the sample bounds the grid, outliers saturate."""
+    from customkb_spark.embedding.pq import _assign_nearest
+
+    vmin, scale = model.vmin, model.scale
+    cluster = None
+    if model.centroids is not None:
+        cluster = _assign_nearest(x, model.centroids).astype(np.int32)
+    # divide only where the grid has extent; constant dims stay code 0
+    inv = np.where(scale > 0, 1.0 / np.where(scale > 0, scale, 1.0), 0.0)
+    codes = np.clip(
+        np.rint((x - vmin[None, :]) * inv[None, :]), 0, model.levels
+    ).astype(np.int16)
+    return cluster, codes
+
+
 def encode_sq(
     vectors: DataFrame,
     model: SQModel,
     id_col: str = "id",
     vec_col: str = "vector",
 ) -> DataFrame:
-    """(id[, cluster_id], sq_code): one vectorized Arrow pass.
-
-    Values outside the trained range clip to the grid edges (FAISS
-    QT_8bit behavior) — the sample bounds the grid, outliers saturate."""
-    vmin, scale, levels = model.vmin, model.scale, model.levels
-    cents = model.centroids
+    """(id[, cluster_id], sq_code): one vectorized Arrow pass of
+    :func:`sq_encode_rows`."""
     fields = [T.StructField(id_col, vectors.schema[id_col].dataType)]
-    if cents is not None:
+    if model.centroids is not None:
         fields.append(T.StructField("cluster_id", T.IntegerType()))
     fields.append(T.StructField("sq_code", T.ArrayType(T.ShortType())))
     schema = T.StructType(fields)
     src = vectors.select(id_col, vec_col)
 
-    # divide only where the grid has extent; constant dims stay code 0
-    inv = np.where(scale > 0, 1.0 / np.where(scale > 0, scale, 1.0), 0.0)
-
     def enc(batches):
         import pandas as pd
-
-        from customkb_spark.embedding.pq import _assign_nearest
 
         for pdf in batches:
             if not len(pdf):
@@ -118,12 +130,10 @@ def encode_sq(
             x = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
+            cluster, codes = sq_encode_rows(x, model)
             out = {id_col: pdf[id_col]}
-            if cents is not None:
-                out["cluster_id"] = _assign_nearest(x, cents).astype(np.int32)
-            codes = np.clip(
-                np.rint((x - vmin[None, :]) * inv[None, :]), 0, levels
-            ).astype(np.int16)
+            if cluster is not None:
+                out["cluster_id"] = cluster
             out["sq_code"] = list(codes)
             yield pd.DataFrame(out)
 

@@ -10,11 +10,14 @@ verifies/rebuilds it). The Spark-first equivalents:
 - the indexed vector table is the big artifact → parquet PARTITIONED BY
   ``cluster_id`` so nprobe search prunes files before the scan (the
   disk layout IS the index);
-- incremental maintenance appends only NEW vectors (anti-join on id),
-  assigned to the EXISTING centroids — same as FAISS ``add`` after
-  ``train``. ``index_drift`` reports per-cluster assignment distance so
-  callers know when the frozen centroids have drifted enough to
-  retrain (the reference's verify-indexes analogue for ANN);
+- incremental maintenance adds only NEW vectors, assigned to the
+  EXISTING centroids — same as FAISS ``add`` after ``train``. A saved
+  tier records the vectors files it covers (``sources``), so after a
+  pure append it absorbs just the new files, on the driver, with no
+  scan of the whole table (``_absorb``). ``index_drift`` reports
+  per-cluster assignment distance so callers know when the frozen
+  centroids have drifted enough to retrain (the reference's
+  verify-indexes analogue for ANN);
 - one verdict (``_tier_verdict``: fresh / appendable / stale) judges a
   saved tier against the vectors table; ``load_vector_index`` acts on
   it and ``index_freshness`` reports it.
@@ -25,16 +28,23 @@ retrain decision is a stats read, never a full rescan.
 
 from __future__ import annotations
 
+import hashlib
+import os
+from typing import NamedTuple
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.embedding.index import assign_clusters
-from customkb_spark.embedding.pq import PQModel
+from customkb_spark.embedding.pq import PQModel, _assign_nearest
+from customkb_spark.embedding.sq import sq_encode_rows
 from customkb_spark.functions import parquet_rows as PR
 from customkb_spark.functions import vector as V
+from customkb_spark.plans.resident import row_norms
 
 
 # ------------------------------------------------------ small artifacts
@@ -42,11 +52,15 @@ from customkb_spark.functions import vector as V
 _META_SCHEMA = pa.schema(
     [(c, pa.string()) for c in ("kind", "id_col", "vec_col", "fp", "src_fp")]
 )
+# one row per data file of the vectors directory the tier covers
+_SOURCES_SCHEMA = pa.schema(
+    [("relpath", pa.string()), ("size", pa.int64()), ("mtime_ns", pa.int64())]
+)
 
 
-def _rows(matrix: np.ndarray) -> pa.ListArray:
-    """A 2-D array as one ``array<double>`` value per row."""
-    m = np.asarray(matrix, dtype=np.float64)
+def _rows(matrix: np.ndarray, dtype=np.float64) -> pa.ListArray:
+    """A 2-D array as one ``array<dtype>`` value per row."""
+    m = np.asarray(matrix, dtype=dtype)
     offsets = pa.array(np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1])
     return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
 
@@ -134,20 +148,10 @@ def load_pq(spark: SparkSession, path: str) -> PQModel:
     return PQModel(flat.reshape(-1, ksub, flat.shape[1]), cents, rotation)
 
 
-def dir_fingerprint(path: str | None) -> str | None:
-    """Cheap identity of a parquet table DIRECTORY: sorted (relpath,
-    size, mtime_ns) of its data files, hashed. Parquet data files are
-    immutable once written (every write creates new files), so listing
-    equality ⇒ content equality — a freshness check that costs two
-    ``os.walk``s instead of two full-table scans.
-
-    Returns None when ``path`` isn't a local directory (object-store
-    URI, absent table) — callers fall back to content_fingerprint.
-    Any mismatch is also just a fallback, never a verdict: a rewrite
-    that produced identical content still passes the content check."""
-    import hashlib
-    import os
-
+def _listing(path: str | None) -> list[tuple[str, int, int]] | None:
+    """Sorted (relpath, size, mtime_ns) of the data files of the parquet
+    table DIRECTORY ``path``; None when ``path`` isn't a local
+    directory (object-store URI, absent table)."""
     if not path or not os.path.isdir(path):
         return None
     entries = []
@@ -158,8 +162,25 @@ def dir_fingerprint(path: str | None) -> str | None:
             p = os.path.join(root, f)
             st = os.stat(p)
             entries.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
-    entries.sort()
-    return hashlib.md5(repr(entries).encode()).hexdigest()
+    return sorted(entries)
+
+
+def _digest(listing: list | None) -> str | None:
+    return None if listing is None else hashlib.md5(repr(listing).encode()).hexdigest()
+
+
+def dir_fingerprint(path: str | None) -> str | None:
+    """Cheap identity of a parquet table DIRECTORY: its ``_listing``,
+    hashed. Parquet data files are immutable once written (every write
+    creates new files), so listing equality ⇒ content equality — a
+    freshness check that costs two ``os.walk``s instead of two
+    full-table scans.
+
+    Returns None when ``path`` isn't a local directory — callers fall
+    back to content_fingerprint. Any mismatch is also just a fallback,
+    never a verdict: a rewrite that produced identical content still
+    passes the content check."""
+    return _digest(_listing(path))
 
 
 def content_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> str:
@@ -229,19 +250,25 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
 
     - ``meta``: one row (kind, id/vec column names, the vectors'
       content fingerprint ``fp`` and directory fingerprint ``src_fp``);
-    - ``centroids`` (ivf/ivfpq), ``pq/`` codebooks (ivfpq);
-    - ``indexed``: the derived table, PARTITIONED BY cluster_id.
+    - ``centroids`` (ivf/ivfsq/ivfpq), ``sq`` grid (ivfsq), ``pq/``
+      codebooks (ivfpq);
+    - ``indexed``: the derived table, PARTITIONED BY cluster_id;
+    - ``sources`` (with ``source_dir``, not flat): one row per data file
+      of ``source_dir`` the tier covers — (relpath, size, mtime_ns), the
+      entries ``src_fp`` hashes — so a later pure append is told apart
+      by its new files alone (``_tier_verdict``).
 
     ``flat`` persists meta only — the raw vectors table IS the index.
     Each table is swapped in whole and ``meta`` is written last: a
     killed save never leaves a meta describing a tier that is not there.
 
     ``source_dir`` (the vectors table's parquet directory, when the
-    caller reads it from one, e.g. KnowledgeBase) also pins the cheap
+    caller reads it from one, e.g. KnowledgeBase) pins the cheap
     dir_fingerprint next to the content fingerprint, so a later load
     of the UNCHANGED table skips the freshness corpus scan entirely.
     """
     spark = tier.vectors.sparkSession
+    listing = _listing(source_dir)
     fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
     if tier.kind != "flat":
         save_centroids(spark, tier.centroids, f"{path}/centroids")
@@ -250,9 +277,11 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
         if tier.kind == "ivfsq":
             save_sq(spark, tier.sq, f"{path}/sq")
         PR.swap(f"{path}/indexed", lambda staged: write_ivf_table(tier.indexed, staged))
+        if listing is not None:
+            _write_sources(path, listing)
     _write_meta(path, dict(
         kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col, fp=fp,
-        src_fp=dir_fingerprint(source_dir),
+        src_fp=_digest(listing),
     ))
 
 
@@ -261,50 +290,93 @@ def _write_meta(path: str, meta: dict) -> None:
     PR.replace(pa.Table.from_pylist([meta], schema=_META_SCHEMA), f"{path}/meta")
 
 
+def _write_sources(path: str, listing: list) -> None:
+    rows = [dict(zip(_SOURCES_SCHEMA.names, e)) for e in listing]
+    PR.replace(pa.Table.from_pylist(rows, schema=_SOURCES_SCHEMA), f"{path}/sources")
+
+
+def _appended(path: str, listing: list, src_fp: str | None) -> list | None:
+    """The entries of ``listing`` (the vectors directory now) that a
+    PURE append added since the tier's ``sources`` were recorded, or
+    None when that is not what happened: no ``sources`` table, one that
+    ``src_fp`` does not hash (a save or absorb killed before its meta),
+    or a recorded file gone or rewritten."""
+    try:
+        t = PR.read_table(f"{path}/sources")
+    except FileNotFoundError:
+        return None
+    recorded = sorted(zip(*(t.column(c).to_pylist() for c in _SOURCES_SCHEMA.names)))
+    if _digest(recorded) != src_fp or not set(recorded) <= set(listing):
+        return None
+    return sorted(set(listing) - set(recorded))
+
+
+class _Verdict(NamedTuple):
+    state: str  # "fresh" | "appendable" | "stale"
+    # for "appendable": the vectors' content fingerprint (content rule),
+    # ``source_dir``'s data files as judged, and the entries of that
+    # listing the pure append added (sources rule)
+    fp: str | None = None
+    listing: list | None = None
+    appended: list | None = None
+
+
 def _tier_verdict(
     spark: SparkSession, path: str, vectors: DataFrame, meta,
     source_dir: str | None = None,
-) -> tuple[str, str | None]:
-    """The one freshness rule for a saved tier: ``(verdict, fp_now)``,
-    each step run only when the one before cannot decide:
+) -> _Verdict:
+    """The one freshness rule for a saved tier, each step run only when
+    the one before cannot decide:
 
     1. with ``source_dir`` (the directory ``vectors`` was read from), an
        unchanged ``dir_fingerprint`` listing proves the content
        unchanged (parquet files are immutable) → ``"fresh"``, no scan;
-    2. the content fingerprint — not a row count: vectors re-embedded
+    2. ivf/ivfsq with ``source_dir``: every file the tier's ``sources``
+       record is still there with the same size and mtime, so the
+       change is a PURE append of the other files → ``"appendable"``,
+       those files being the delta (``appended``) — no scan, on the same
+       immutability;
+    3. the content fingerprint — not a row count: vectors re-embedded
        under the same ids must never serve stale neighbors — equals the
        saved one → ``"fresh"``;
-    3. ivf/ivfsq only: the previously-indexed ids' content is unchanged,
-       so the change is a PURE append → ``"appendable"`` (FAISS ``add``
-       against the frozen centroids / SQ grid). ivfpq is rebuilt
-       instead: its residual codebooks drift fastest as the corpus
-       grows, and a rebuild doubles as the retrain ``index_drift``
-       would recommend.
+    4. ivf/ivfsq only: the previously-indexed ids' content is unchanged,
+       so the change is a pure append → ``"appendable"`` (the delta is
+       the ids the tier lacks). ivfpq is rebuilt instead: its residual
+       codebooks drift fastest as the corpus grows, and a rebuild
+       doubles as the retrain ``index_drift`` would recommend.
 
-    Anything else (in-place mutation, pre-fingerprint meta) is
-    ``"stale"``; a flat tier is always ``"fresh"`` (the raw vectors
-    table IS the index). ``fp_now`` is the vectors' current content
-    fingerprint (None for flat or pre-fingerprint meta).
+    Either ``"appendable"`` is FAISS ``add`` against the frozen
+    centroids / SQ grid (``load_vector_index``). Steps 3-4 are the
+    content rule: frame callers (no ``source_dir``) and tiers saved
+    without ``sources`` take it. Anything else (in-place mutation,
+    pre-fingerprint meta) is ``"stale"``; a flat tier is always
+    ``"fresh"`` (the raw vectors table IS the index).
     """
     fp_old, kind = meta.get("fp"), meta["kind"]
     if kind == "flat":
-        return "fresh", None
+        return _Verdict("fresh")
     if fp_old is None:
-        return "stale", None
+        return _Verdict("stale")
+    listing = _listing(source_dir)
     src_fp_old = meta.get("src_fp")
-    if src_fp_old is not None and dir_fingerprint(source_dir) == src_fp_old:
-        return "fresh", fp_old
+    if src_fp_old is not None and _digest(listing) == src_fp_old:
+        return _Verdict("fresh")
+    appendable = kind in ("ivf", "ivfsq")
+    if appendable and listing is not None:
+        new = _appended(path, listing, src_fp_old)
+        if new is not None:
+            return _Verdict("appendable", None, listing, new)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     fp_now = content_fingerprint(vectors, id_col, vec_col)
     if fp_now == fp_old:
-        return "fresh", fp_now
-    if kind not in ("ivf", "ivfsq"):
-        return "stale", fp_now
+        return _Verdict("fresh")
+    if not appendable:
+        return _Verdict("stale")
     indexed_ids = spark.read.parquet(f"{path}/indexed").select(id_col)
     old_subset = vectors.join(indexed_ids, id_col, "left_semi")
     if content_fingerprint(old_subset, id_col, vec_col) == fp_old:
-        return "appendable", fp_now
-    return "stale", fp_now
+        return _Verdict("appendable", fp_now, listing)
+    return _Verdict("stale")
 
 
 def index_freshness(
@@ -320,7 +392,7 @@ def index_freshness(
     except Exception:
         return "absent"
     try:
-        return _tier_verdict(spark, path, vectors, meta, source_dir)[0]
+        return _tier_verdict(spark, path, vectors, meta, source_dir).state
     except Exception:
         return "stale"  # unreadable indexed table: a query would rebuild
 
@@ -333,45 +405,79 @@ def load_vector_index(
 
     - ``"fresh"`` → load as-is (no training, no assignment; with an
       unchanged ``source_dir`` listing the load is metadata-only);
-    - ``"appendable"`` → assign the new ids to the frozen centroids
-      (ivf: ``incremental_index``; ivfsq: encode on the frozen grid),
-      rewrite meta, then load;
+    - ``"appendable"`` → ``_absorb`` the delta on the driver (which
+      records the listing it covers in ``sources`` and rewrites meta),
+      then load;
     - ``"stale"``, no saved index, or a partially-written/corrupt index
       dir (e.g. a killed save) → None: the caller rebuilds.
     """
     try:
         meta = PR.read_row(f"{path}/meta")
-        verdict, fp_now = _tier_verdict(spark, path, vectors, meta, source_dir)
-        if verdict == "stale":
+        verdict = _tier_verdict(spark, path, vectors, meta, source_dir)
+        if verdict.state == "stale":
             return None
-        tier = _load_tier(spark, path, vectors, meta)
-        if verdict == "appendable":
-            _append_to_tier(tier, f"{path}/indexed")
-            src_fp = dir_fingerprint(source_dir)
-            _write_meta(path, {**meta, "fp": fp_now, "src_fp": src_fp})
-            tier.indexed = spark.read.parquet(f"{path}/indexed")
-        return tier
+        if verdict.state == "appendable":
+            _absorb(spark, path, vectors, meta, verdict, source_dir)
+        return _load_tier(spark, path, vectors, meta)
     except Exception:
         return None
 
 
-def _append_to_tier(tier, table_path: str) -> None:
-    """FAISS ``add``: write the ids the saved tier lacks, assigned to its
-    frozen centroids (ivf) or encoded on its frozen SQ grid (ivfsq), so
-    new rows encode deterministically. Called only on an
-    ``"appendable"`` verdict, which proves the set non-empty (the old
-    subset's fingerprint held while the total's changed), so the write
-    runs unguarded."""
-    fresh = tier.vectors.join(tier.indexed.select(tier.id_col), tier.id_col, "left_anti")
-    if tier.kind == "ivf":
-        appended = assign_clusters(fresh, tier.centroids, tier.vec_col)
-    else:
-        from customkb_spark.embedding.sq import encode_sq
-        from customkb_spark.functions.vector import l2_normalized_frame
+def _absorb(spark, path: str, vectors: DataFrame, meta, verdict: _Verdict, source_dir) -> None:
+    """FAISS ``add`` of an ``"appendable"`` verdict's delta on the
+    driver, then ``sources`` and ``meta`` (last) for the listing judged.
 
-        normed = l2_normalized_frame(fresh.select(tier.id_col, tier.vec_col), tier.vec_col)
-        appended = encode_sq(normed, tier.sq, tier.id_col, tier.vec_col)
-    write_ivf_table(appended, table_path, mode="append")
+    With ``verdict.appended`` the delta is those files, read one at a
+    time (driver memory is bounded by the largest), each written under
+    its own name so a retry after a kill rewrites its rows instead of
+    adding them twice; the new fingerprint is the old one plus the
+    delta's (one Spark job over the delta rows; the DECIMAL sum is
+    exact, so it equals a full ``content_fingerprint``). Under the
+    content rule the delta is the ids the tier lacks (an anti-join,
+    collected through Arrow) and the fingerprint the verdict's."""
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    cents = load_centroids(spark, f"{path}/centroids")
+    sq = load_sq(spark, f"{path}/sq", centroids=cents) if meta["kind"] == "ivfsq" else None
+    table_path = f"{path}/indexed"
+    if verdict.appended is None:
+        indexed_ids = spark.read.parquet(table_path).select(id_col)
+        fresh = vectors.join(indexed_ids, id_col, "left_anti").toArrow()
+        _absorb_rows(fresh, table_path, id_col, vec_col, cents, sq)
+        fp = verdict.fp
+    else:
+        files = [os.path.join(source_dir, rel) for rel, _size, _mtime in verdict.appended]
+        for f in files:
+            rows = pq.read_table(f)
+            _absorb_rows(rows, table_path, id_col, vec_col, cents, sq, os.path.basename(f))
+        delta = spark.read.schema(vectors.schema).parquet(*files)
+        fp = str(int(meta["fp"]) + int(content_fingerprint(delta, id_col, vec_col)))
+    if verdict.listing is not None:
+        _write_sources(path, verdict.listing)
+    _write_meta(path, {**meta, "fp": fp, "src_fp": _digest(verdict.listing)})
+
+
+def _absorb_rows(
+    rows: pa.Table, table_path: str, id_col: str, vec_col: str,
+    centroids: np.ndarray, sq=None, name: str | None = None,
+) -> None:
+    """Assign ``rows`` to the frozen ``centroids`` with the kernel
+    ``assign_clusters`` runs and write one file per touched cluster into
+    ``cluster_id=<c>/``, temp-then-rename. ivf writes the rows as they
+    are; ivfsq (``sq`` given) writes (id, sq_code) encoded on the frozen
+    grid after the L2 normalization of ``l2_normalized_frame``, in its
+    fold order."""
+    if not rows.num_rows:
+        return
+    x = _matrix(rows, vec_col)
+    if sq is None:
+        cluster, out = _assign_nearest(x, centroids), rows
+    else:
+        norms = row_norms(x)[:, None]
+        x = np.where(norms > 0, x / np.where(norms > 0, norms, 1.0), x)
+        cluster, codes = sq_encode_rows(x, sq)
+        out = pa.table({id_col: rows.column(id_col), "sq_code": _rows(codes, np.int16)})
+    for c in np.unique(cluster):
+        PR.write_rows(out.filter(pa.array(cluster == c)), f"{table_path}/cluster_id={c}", name)
 
 
 def _load_tier(spark: SparkSession, path: str, vectors: DataFrame, meta):

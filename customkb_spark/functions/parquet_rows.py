@@ -45,11 +45,12 @@ def data_files(directory: str) -> list[str]:
     )
 
 
-def write_rows(table: pa.Table, directory: str) -> None:
+def write_rows(table: pa.Table, directory: str, name: str | None = None) -> None:
     """Add ``table`` to the table in ``directory`` as one new file,
-    atomically."""
+    atomically. A ``name`` already there is replaced whole, so a retry
+    that names its file rewrites it instead of adding the rows twice."""
     os.makedirs(directory, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
+    name = name or f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(directory, "." + name)
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(directory, name))

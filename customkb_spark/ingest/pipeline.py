@@ -39,11 +39,14 @@ def documents_to_chunks(
     lang_col: str | None = "lang",
     chunk_size: int = 200,
     overlap: int = 0,
+    language: str = "en",
 ) -> DataFrame:
     """Build the canonical chunks table from a documents table.
 
     Output columns follow CHUNKS_SCHEMA (id, sid, sourcedoc,
     originaltext, embedtext, bm25_tokens, doc_length, metadata bits).
+    ``bm25_tokens`` is ``bm25_token_set`` under ``language``'s stopword
+    gate (the KB's ``cfg.language``, as the BM25 build uses).
     ``id`` is derived deterministically from (doc_id, sid) — stable
     across runs, unlike monotonically_increasing_id, so it can serve as
     the vector join key (SURVEY.md §1.2 note on id stability).
@@ -56,7 +59,7 @@ def documents_to_chunks(
     chunks = chunk_fixed(docs, id_col, text_col, chunk_size, overlap)
     out = chunks.join(meta, chunks["doc_id"] == meta["_doc_id"]).drop("_doc_id")
     embed_text = X.clean_text(F.col("chunk_text"))
-    toks = X.bm25_token_set(F.col("chunk_text"))
+    toks = X.bm25_token_set(F.col("chunk_text"), language=language)
     projected = out.select(
         # id = doc_id · 2^22 + sid: 4.2M chunks/doc (a 100 MB file at
         # 200-char chunks is ~500k) before collision, doc_id < 2^41

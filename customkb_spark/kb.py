@@ -117,7 +117,8 @@ class KnowledgeBase:
         # materialized once: the count and the write (or the force
         # path's merge) read the same chunks without re-chunking
         chunks = documents_to_chunks(
-            docs, lang_col=lang, chunk_size=self.cfg.db_max_tokens
+            docs, lang_col=lang, chunk_size=self.cfg.db_max_tokens,
+            language=self.cfg.language,
         ).localCheckpoint()
         n = chunks.count()
         if n == 0:
@@ -384,9 +385,9 @@ class KnowledgeBase:
             vectors = self._read("vectors")
             vpath = self._p("vindex")
             # reference lifecycle parity: load the persisted index tier
-            # (<kb>.faiss analogue) instead of retraining; an IVF tier
-            # absorbs appended vectors via FAISS-add-style incremental
-            # assignment inside load_vector_index
+            # (<kb>.faiss analogue) instead of retraining; after a pure
+            # append an IVF tier absorbs just the new vectors files,
+            # FAISS-add-style on the driver, inside load_vector_index
             vindex = IS.load_vector_index(
                 self.spark, vpath, vectors, source_dir=self._p("vectors")
             )

@@ -20,6 +20,10 @@ CFG = dict(query_top_k=5, ann_index="ivf")
 # Spark jobs of a 5-document append (test_append_cycle_computes_each_result_once)
 DATABASE_APPEND_JOBS = 10
 EMBED_APPEND_JOBS = 18
+# Spark jobs of the query after that append, the tier's absorb included
+# (test_query_absorbs_an_append_from_its_new_files; 25 before the absorb
+# read only the new files, on the driver)
+QUERY_APPEND_JOBS = 17
 
 
 @pytest.fixture(scope="module")
@@ -361,3 +365,193 @@ def test_replace_interrupted_between_renames_is_undone_on_open(
     assert PR.read_row(os.path.join(vindex, "meta")) == meta
     assert _leftovers(vindex, "meta") == []
     assert os.path.isdir(os.path.join(kb_dir, ".not.a.swap.new"))
+
+
+def _appended_kb(spark, base_kb, tmp_path, tag: str) -> KnowledgeBase:
+    """A copy of ``base_kb`` after a 5-document ``database`` + ``embed``."""
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    assert kb.database(_append_docs(spark, tag)) > 0
+    assert kb.embed() > 0
+    return kb
+
+
+def _resave_ivf_tier(spark, kb, nlist: int = 4) -> None:
+    """Replace the copy's tier by an ivf one of ``nlist`` clusters (the
+    base KB's 64 vectors give it one), so an absorb can touch several."""
+    from customkb_spark.embedding.auto import VectorIndexTier
+    from customkb_spark.embedding.index import assign_clusters, train_centroids
+
+    vectors = kb._read("vectors")
+    cents = train_centroids(vectors, "vector", nlist=nlist)
+    tier = VectorIndexTier(
+        "ivf", vectors, "id", "vector",
+        centroids=cents, indexed=assign_clusters(vectors, cents, "vector"),
+    )
+    S.save_vector_index(tier, kb._p("vindex"), source_dir=kb._p("vectors"))
+
+
+def _indexed_ids(kb) -> list:
+    return [r.id for r in kb._read("vindex/indexed").select("id").collect()]
+
+
+def _appended_vectors(spark, base_kb, kb):
+    """The vectors ``kb`` holds beyond ``base_kb``'s."""
+    old = spark.read.parquet(os.path.join(base_kb[0], "vectors")).select("id")
+    return kb._read("vectors").join(old, "id", "left_anti")
+
+
+def test_verify_after_append_runs_no_vector_scan(spark, base_kb, tmp_path, monkeypatch):
+    """The tier's recorded ``sources`` tell a pure append apart from the
+    new files alone: "appendable" with no content scan of the vectors."""
+    kb = _appended_kb(spark, base_kb, tmp_path, "noscan")
+    real = S.content_fingerprint
+
+    def no_vector_scan(df, id_col, vec_col):
+        if vec_col == "vector":
+            raise AssertionError("content scan of the vectors")
+        return real(df, id_col, vec_col)  # the BM25 rule's chunks scan
+
+    monkeypatch.setattr(S, "content_fingerprint", no_vector_scan)
+    assert kb.verify()["vector_index"] == "appendable"
+
+
+def test_query_absorbs_an_append_from_its_new_files(spark, base_kb, tmp_path):
+    """The absorb leaves each vector indexed once, in the cluster
+    ``assign_clusters`` gives it, and a meta whose ``fp`` is the full
+    content fingerprint."""
+    from customkb_spark.embedding.index import assign_clusters
+    from customkb_spark.functions import parquet_rows as PR
+
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    _resave_ivf_tier(spark, kb)
+    assert kb.database(_append_docs(spark, "absorb")) > 0
+    assert kb.embed() > 0
+    out = {}
+    jobs = _jobs_of(spark, lambda: out.update(ctx=kb.query("absorb0 walrus beacons", log=False)))
+    assert "absorb0" in out["ctx"]
+    assert jobs <= QUERY_APPEND_JOBS
+
+    vectors = kb._read("vectors")
+    ids = _indexed_ids(kb)
+    assert len(ids) == len(set(ids))
+    assert set(ids) == {r.id for r in vectors.select("id").collect()}
+    meta = PR.read_row(kb._p("vindex/meta"))
+    assert meta["fp"] == S.content_fingerprint(vectors, "id", "vector")
+
+    new = _appended_vectors(spark, base_kb, kb)
+    cents = S.load_centroids(spark, kb._p("vindex/centroids"))
+    want = {tuple(r) for r in assign_clusters(new, cents).select("id", "cluster_id").collect()}
+    got = kb._read("vindex/indexed").join(new.select("id"), "id")
+    assert {tuple(r) for r in got.select("id", "cluster_id").collect()} == want
+    assert kb.verify()["vector_index"] == "fresh"
+
+
+class _Kill(BaseException):
+    """A process kill: no ``except Exception`` handler sees it."""
+
+
+def test_absorb_killed_after_a_cluster_file_retries_safely(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """Killed after its first cluster file, the absorb leaves the old
+    meta and ``sources``; the next query absorbs the same files again,
+    rewriting the file it had written, so each id is indexed once."""
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    _resave_ivf_tier(spark, kb)
+    # whole documents, so the delta spans several clusters
+    docs = base_kb[1].limit(5).select(
+        (F.col("doc_id") + 50_000).alias("doc_id"),
+        F.concat(F.lit("killabsorb "), F.col("text")).alias("text"),
+        F.concat(F.lit("killabsorb/"), F.col("source")).alias("source"),
+    )
+    assert kb.database(docs) > 0
+    assert kb.embed() > 0
+    centroids = os.listdir(kb._p("vindex/centroids"))
+    real, calls = os.replace, []
+
+    def replace(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise _Kill(dst)
+        real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(_Kill):
+        kb.query("killabsorb", log=False)
+    monkeypatch.undo()
+    assert all("cluster_id=" in dst for dst in calls)  # between two clusters
+
+    retry = KnowledgeBase(spark, kb.kb_dir, KBConfig(**CFG))
+    assert retry.verify()["vector_index"] == "appendable"
+    assert "killabsorb" in retry.query("killabsorb", log=False)
+    ids = _indexed_ids(retry)
+    assert len(ids) == len(set(ids)) == retry._read("vectors").count()
+    assert os.listdir(kb._p("vindex/centroids")) == centroids  # absorbed, not rebuilt
+    assert retry.verify()["vector_index"] == "fresh"
+
+
+def test_spark_path_serves_the_absorbed_tier_as_the_resident_index(spark, base_kb, tmp_path):
+    kb = _appended_kb(spark, base_kb, tmp_path, "sparkpath")
+    q = "sparkpath0 walrus beacons"
+    resident = kb.query(q, log=False)  # absorbs
+    assert kb.verify()["resident_index"]["state"] == "resident"
+    assert "sparkpath0" in resident
+    over = KnowledgeBase(spark, kb.kb_dir, KBConfig(**CFG, index_memory_budget_mb=0))
+    assert over.query(q, log=False) == resident
+
+
+def test_ivfsq_absorb_encodes_as_encode_sq(spark, base_kb, tmp_path):
+    from customkb_spark.embedding.auto import build_vector_index
+    from customkb_spark.embedding.sq import encode_sq
+    from customkb_spark.functions.vector import l2_normalized_frame
+
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    vpath, vdir = kb._p("vindex"), kb._p("vectors")
+    tier = build_vector_index(kb._read("vectors"), KBConfig(ann_index="ivfsq"))
+    S.save_vector_index(tier, vpath, source_dir=vdir)
+    assert kb.database(_append_docs(spark, "sqabsorb")) > 0
+    assert kb.embed() > 0
+
+    vectors = kb._read("vectors")
+    assert S.index_freshness(spark, vpath, vectors, source_dir=vdir) == "appendable"
+    tier = S.load_vector_index(spark, vpath, vectors, source_dir=vdir)
+    assert tier is not None and tier.kind == "ivfsq"
+    assert tier.indexed.count() == tier.indexed.select("id").distinct().count() == vectors.count()
+
+    new = _appended_vectors(spark, base_kb, kb)
+
+    def rows(df):
+        return sorted((r.id, r.cluster_id, list(r.sq_code)) for r in df.collect())
+
+    want = encode_sq(l2_normalized_frame(new, "vector"), tier.sq)
+    got = tier.indexed.join(new.select("id"), "id").select("id", "cluster_id", "sq_code")
+    assert rows(want) and rows(got) == rows(want)
+    assert S.index_freshness(spark, vpath, vectors, source_dir=vdir) == "fresh"
+
+
+def test_tier_without_sources_absorbs_by_content_then_records_them(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """A tier saved before ``sources`` existed takes the content rule
+    once; the absorb then records the files it covers."""
+    kb_dir = _copy(base_kb, tmp_path)
+    shutil.rmtree(os.path.join(kb_dir, "vindex", "sources"))
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    assert kb.database(_append_docs(spark, "nosources")) > 0
+    assert kb.embed() > 0
+    real, scans = S.content_fingerprint, []
+
+    def counted(df, id_col, vec_col):
+        scans.append(vec_col)
+        return real(df, id_col, vec_col)
+
+    monkeypatch.setattr(S, "content_fingerprint", counted)
+    assert kb.verify()["vector_index"] == "appendable"
+    assert scans.count("vector") == 2  # all vectors, then the indexed subset
+    assert "nosources0" in kb.query("nosources0 walrus beacons", log=False)
+    monkeypatch.undo()
+
+    assert os.path.isdir(os.path.join(kb_dir, "vindex", "sources"))
+    ids = _indexed_ids(kb)
+    assert len(ids) == len(set(ids)) == kb._read("vectors").count()
+    assert kb.verify()["vector_index"] == "fresh"

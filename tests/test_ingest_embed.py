@@ -110,3 +110,22 @@ def test_ivf_recall_vs_exact(spark, embeddings):
     }
     assert 0 in part
     assert len(part & exact) >= 3
+
+
+def test_database_bm25_tokens_use_the_kb_language(spark, tmp_path):
+    """``chunks.bm25_tokens`` is gated by ``cfg.language`` as the BM25
+    build and ``migrate_for_bm25`` are: under "de" the English
+    stopword "the" stays a token."""
+    from customkb_spark.config import KBConfig
+    from customkb_spark.functions import text as X
+    from customkb_spark.kb import KnowledgeBase
+
+    kb = KnowledgeBase(spark, str(tmp_path / "kb"), KBConfig(language="de"))
+    docs = spark.createDataFrame(
+        [(1, "the walrus reads the beacon", "de.txt")], ["doc_id", "text", "source"]
+    )
+    assert kb.database(docs) > 0
+    chunks = kb._read("chunks").select(
+        "bm25_tokens", X.bm25_token_set("originaltext", language="de").alias("want")
+    ).collect()
+    assert all(r.bm25_tokens == r.want and "the" in r.want for r in chunks)

@@ -324,6 +324,8 @@ def cmd_optimize(args) -> int:
     if os.path.isdir(chunks) and not read_only:
         optimize_chunks(spark, chunks)
     if not read_only:
+        # absorbs add files to postings/ and vindex/indexed: fold them
+        _kb(args).compact_indexes()
         # each request adds a file to both per-request tables: fold
         # the log to one file per day, the query cache to one file of
         # its unexpired rows
@@ -347,7 +349,7 @@ def cmd_optimize(args) -> int:
         if os.path.isdir(vindex):
             shutil.rmtree(vindex)
         kb = _kb(args)
-        kb._build_index()  # rebuild + persist the fresh tier
+        kb._refresh()  # rebuild + persist the fresh tier
     if getattr(args, "clean_cache", False):
         # reference scripts/clean_corrupted_cache.py: drop cache rows
         # with NULL/wrong-dimension vectors (honors --dry-run)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from customkb_spark.config import KBConfig
 from customkb_spark.embedding.index import assign_clusters, ivf_search, train_centroids
@@ -35,17 +35,35 @@ from customkb_spark.operators.topk import brute_force_topk
 HIGH_DIM_THRESHOLD = 1536  # reference embed_manager.py:179
 
 
+class _SavedIndexed:
+    """``VectorIndexTier.indexed``, which a saved tier (``indexed_path``
+    set) reads when first used: listing its ``cluster_id=`` directories
+    costs Spark jobs, and a caller serving from memory never plans over
+    it."""
+
+    def __get__(self, tier, owner=None):
+        if tier is None:
+            return None  # the dataclass default
+        if tier._indexed is None and tier.indexed_path is not None:
+            tier._indexed = SparkSession.active().read.parquet(tier.indexed_path)
+        return tier._indexed
+
+    def __set__(self, tier, value):
+        tier._indexed = value
+
+
 @dataclass
 class VectorIndexTier:
     kind: str  # flat | ivf | ivfpq
-    vectors: DataFrame  # raw (id, vector) — always kept for exact/refine
+    vectors: DataFrame | None  # raw (id, vector) — always kept for exact/refine
     id_col: str
     vec_col: str
     centroids: np.ndarray | None = None
-    indexed: DataFrame | None = None  # +cluster_id (ivf) / pq codes (ivfpq)
+    indexed: DataFrame | None = _SavedIndexed()  # +cluster_id (ivf) / pq codes (ivfpq)
     pq: PQModel | None = None
     refine_factor: int = 32  # cfg.pq_refine_factor (see config.py note)
     sq: object | None = None  # SQModel (ivfsq tier, embedding/sq.py)
+    indexed_path: str | None = None  # a saved tier's ``indexed`` table
 
     def topk(self, query_vec: list[float], k: int, nprobe: int = 32) -> DataFrame:
         """(id, score) top-k under this tier's search strategy."""

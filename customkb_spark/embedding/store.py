@@ -9,7 +9,7 @@ verifies/rebuilds it). The Spark-first equivalents:
   reads whole with pyarrow (``functions/parquet_rows.py``), no Spark job;
 - the indexed vector table is the big artifact → parquet PARTITIONED BY
   ``cluster_id`` so nprobe search prunes files before the scan (the
-  disk layout IS the index);
+  disk layout IS the index); a loaded tier reads it when first used;
 - incremental maintenance adds only NEW vectors, assigned to the
   EXISTING centroids — same as FAISS ``add`` after ``train``. A saved
   tier records the vectors files it covers (``sources``), so after a
@@ -20,7 +20,10 @@ verifies/rebuilds it). The Spark-first equivalents:
   verify-indexes analogue for ANN);
 - one verdict (``_tier_verdict``: fresh / appendable / stale) judges a
   saved tier against the vectors table; ``load_vector_index`` acts on
-  it and ``index_freshness`` reports it.
+  it and ``index_freshness`` reports it. A tier records exactly the
+  files its vectors frame read (``_covered``), so a file appended while
+  it was built or absorbed is judged, and absorbed, next time. The
+  listing helpers serve the KB's BM25 index too (``kb.py``).
 
 At 100 TB: appends write only the affected cluster partitions; a
 retrain decision is a stats read, never a full rescan.
@@ -31,6 +34,7 @@ from __future__ import annotations
 import hashlib
 import os
 from typing import NamedTuple
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -38,6 +42,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from customkb_spark.embedding.index import assign_clusters
 from customkb_spark.embedding.pq import PQModel, _assign_nearest
@@ -165,6 +170,29 @@ def _listing(path: str | None) -> list[tuple[str, int, int]] | None:
     return sorted(entries)
 
 
+def _covered(df: DataFrame, directory: str | None) -> list | None:
+    """The entries of ``directory``'s ``_listing`` that ``df`` reads:
+    what an index built from ``df`` covers, whatever was added to the
+    directory after ``df`` listed it. A frame that reads none of its
+    files directly (checkpointed, in memory) covers the whole listing,
+    as the caller vouches."""
+    listing = _listing(directory)
+    if listing is None:
+        return None
+    read = {os.path.normpath(unquote(urlparse(f).path)) for f in df.inputFiles()}
+    root = os.path.abspath(directory)
+    return [e for e in listing if os.path.join(root, e[0]) in read] or listing
+
+
+def read_files(spark: SparkSession, files: list[str], columns: list[str]) -> DataFrame:
+    """``columns`` of exactly the parquet ``files``, typed from the first
+    file's footer, so Spark runs no schema-inference job."""
+    schema = pq.read_schema(files[0])
+    return spark.read.schema(
+        from_arrow_schema(pa.schema([schema.field(c) for c in columns]))
+    ).parquet(*files)
+
+
 def _digest(listing: list | None) -> str | None:
     return None if listing is None else hashlib.md5(repr(listing).encode()).hexdigest()
 
@@ -253,14 +281,17 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     - ``centroids`` (ivf/ivfsq/ivfpq), ``sq`` grid (ivfsq), ``pq/``
       codebooks (ivfpq);
     - ``indexed``: the derived table, PARTITIONED BY cluster_id;
-    - ``sources`` (with ``source_dir``, not flat): one row per data file
-      of ``source_dir`` the tier covers — (relpath, size, mtime_ns), the
-      entries ``src_fp`` hashes — so a later pure append is told apart
-      by its new files alone (``_tier_verdict``).
+    - ``sources`` (with ``source_dir``): one row per data file of
+      ``source_dir`` that ``tier.vectors`` read (``_covered``) —
+      (relpath, size, mtime_ns), the entries ``src_fp`` hashes — so a
+      later pure append is told apart by its new files alone
+      (``_tier_verdict``), and a file appended while the tier was
+      built is not recorded as covered.
 
-    ``flat`` persists meta only — the raw vectors table IS the index.
-    Each table is swapped in whole and ``meta`` is written last: a
-    killed save never leaves a meta describing a tier that is not there.
+    ``flat`` persists meta (and ``sources``) only — the raw vectors
+    table IS the index. Each table is swapped in whole and ``meta`` is
+    written last: a killed save never leaves a meta describing a tier
+    that is not there.
 
     ``source_dir`` (the vectors table's parquet directory, when the
     caller reads it from one, e.g. KnowledgeBase) pins the cheap
@@ -268,7 +299,7 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
     of the UNCHANGED table skips the freshness corpus scan entirely.
     """
     spark = tier.vectors.sparkSession
-    listing = _listing(source_dir)
+    listing = _covered(tier.vectors, source_dir)
     fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
     if tier.kind != "flat":
         save_centroids(spark, tier.centroids, f"{path}/centroids")
@@ -277,12 +308,18 @@ def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
         if tier.kind == "ivfsq":
             save_sq(spark, tier.sq, f"{path}/sq")
         PR.swap(f"{path}/indexed", lambda staged: write_ivf_table(tier.indexed, staged))
-        if listing is not None:
-            _write_sources(path, listing)
-    _write_meta(path, dict(
-        kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col, fp=fp,
-        src_fp=_digest(listing),
-    ))
+    _record(path, dict(kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col), fp, listing)
+
+
+def _record(path: str, meta: dict, fp: str, listing: list | None) -> dict:
+    """Record that the tier at ``path`` covers the vectors whose content
+    fingerprint is ``fp`` and, with a ``listing``, exactly those data
+    files: ``sources``, then ``meta`` last. Returns the new meta."""
+    if listing is not None:
+        _write_sources(f"{path}/sources", listing)
+    meta = {**meta, "fp": fp, "src_fp": _digest(listing)}
+    _write_meta(path, meta)
+    return meta
 
 
 def _write_meta(path: str, meta: dict) -> None:
@@ -290,19 +327,20 @@ def _write_meta(path: str, meta: dict) -> None:
     PR.replace(pa.Table.from_pylist([meta], schema=_META_SCHEMA), f"{path}/meta")
 
 
-def _write_sources(path: str, listing: list) -> None:
+def _write_sources(table: str, listing: list) -> None:
+    """Replace the ``sources`` table at ``table`` by ``listing``."""
     rows = [dict(zip(_SOURCES_SCHEMA.names, e)) for e in listing]
-    PR.replace(pa.Table.from_pylist(rows, schema=_SOURCES_SCHEMA), f"{path}/sources")
+    PR.replace(pa.Table.from_pylist(rows, schema=_SOURCES_SCHEMA), table)
 
 
-def _appended(path: str, listing: list, src_fp: str | None) -> list | None:
-    """The entries of ``listing`` (the vectors directory now) that a
-    PURE append added since the tier's ``sources`` were recorded, or
-    None when that is not what happened: no ``sources`` table, one that
-    ``src_fp`` does not hash (a save or absorb killed before its meta),
-    or a recorded file gone or rewritten."""
+def _appended(table: str, listing: list, src_fp: str | None) -> list | None:
+    """The entries of ``listing`` (a data directory now) that a PURE
+    append added since the ``sources`` table at ``table`` was recorded,
+    or None when that is not what happened: no ``sources`` table, one
+    that ``src_fp`` does not hash (a save or absorb killed before its
+    meta), or a recorded file gone or rewritten."""
     try:
-        t = PR.read_table(f"{path}/sources")
+        t = PR.read_table(table)
     except FileNotFoundError:
         return None
     recorded = sorted(zip(*(t.column(c).to_pylist() for c in _SOURCES_SCHEMA.names)))
@@ -313,16 +351,18 @@ def _appended(path: str, listing: list, src_fp: str | None) -> list | None:
 
 class _Verdict(NamedTuple):
     state: str  # "fresh" | "appendable" | "stale"
-    # for "appendable": the vectors' content fingerprint (content rule),
-    # ``source_dir``'s data files as judged, and the entries of that
-    # listing the pure append added (sources rule)
+    # from the content rule: the vectors' content fingerprint, and the
+    # ``source_dir`` files of the frame it judged (``_covered``); from
+    # the sources rule: ``source_dir``'s data files as judged, and the
+    # entries of that listing the pure append added
     fp: str | None = None
     listing: list | None = None
     appended: list | None = None
+    vectors: DataFrame | None = None  # the frame the content rule judged
 
 
 def _tier_verdict(
-    spark: SparkSession, path: str, vectors: DataFrame, meta,
+    spark: SparkSession, path: str, vectors: DataFrame | None, meta,
     source_dir: str | None = None,
 ) -> _Verdict:
     """The one freshness rule for a saved tier, each step run only when
@@ -348,9 +388,10 @@ def _tier_verdict(
     Either ``"appendable"`` is FAISS ``add`` against the frozen
     centroids / SQ grid (``load_vector_index``). Steps 3-4 are the
     content rule: frame callers (no ``source_dir``) and tiers saved
-    without ``sources`` take it. Anything else (in-place mutation,
-    pre-fingerprint meta) is ``"stale"``; a flat tier is always
-    ``"fresh"`` (the raw vectors table IS the index).
+    without ``sources`` take it; with ``source_dir`` a None ``vectors``
+    is read from it there, so steps 1-2 need no frame. Anything else
+    (in-place mutation, pre-fingerprint meta) is ``"stale"``; a flat
+    tier is always ``"fresh"`` (the raw vectors table IS the index).
     """
     fp_old, kind = meta.get("fp"), meta["kind"]
     if kind == "flat":
@@ -363,19 +404,22 @@ def _tier_verdict(
         return _Verdict("fresh")
     appendable = kind in ("ivf", "ivfsq")
     if appendable and listing is not None:
-        new = _appended(path, listing, src_fp_old)
+        new = _appended(f"{path}/sources", listing, src_fp_old)
         if new is not None:
             return _Verdict("appendable", None, listing, new)
+    if vectors is None:
+        vectors = spark.read.parquet(source_dir)
+    covered = _covered(vectors, source_dir)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     fp_now = content_fingerprint(vectors, id_col, vec_col)
     if fp_now == fp_old:
-        return _Verdict("fresh")
+        return _Verdict("fresh", fp_now, covered)
     if not appendable:
         return _Verdict("stale")
     indexed_ids = spark.read.parquet(f"{path}/indexed").select(id_col)
     old_subset = vectors.join(indexed_ids, id_col, "left_semi")
     if content_fingerprint(old_subset, id_col, vec_col) == fp_old:
-        return _Verdict("appendable", fp_now, listing)
+        return _Verdict("appendable", fp_now, covered, None, vectors)
     return _Verdict("stale")
 
 
@@ -398,18 +442,26 @@ def index_freshness(
 
 
 def load_vector_index(
-    spark: SparkSession, path: str, vectors: DataFrame,
+    spark: SparkSession, path: str, vectors: DataFrame | None,
     source_dir: str | None = None,
 ):
     """Rehydrate a saved tier, acting on its ``_tier_verdict``:
 
     - ``"fresh"`` → load as-is (no training, no assignment; with an
-      unchanged ``source_dir`` listing the load is metadata-only);
+      unchanged ``source_dir`` listing the load is metadata-only); when
+      the content rule found it fresh (a rewrite with the same content,
+      e.g. ``optimize``), the listing it covers is recorded, so the
+      next load decides from the listing again;
     - ``"appendable"`` → ``_absorb`` the delta on the driver (which
       records the listing it covers in ``sources`` and rewrites meta),
       then load;
     - ``"stale"``, no saved index, or a partially-written/corrupt index
       dir (e.g. a killed save) → None: the caller rebuilds.
+
+    The tier reads its ``indexed`` table when first used, so a caller
+    that only needs the saved tier brought up to date (KnowledgeBase
+    serving from memory) pays no Spark listing of it; with
+    ``source_dir`` that caller may pass ``vectors=None``.
     """
     try:
         meta = PR.read_row(f"{path}/meta")
@@ -417,15 +469,18 @@ def load_vector_index(
         if verdict.state == "stale":
             return None
         if verdict.state == "appendable":
-            _absorb(spark, path, vectors, meta, verdict, source_dir)
+            meta = _absorb(spark, path, meta, verdict, source_dir)
+        elif verdict.fp is not None and verdict.listing is not None:
+            meta = _record(path, meta, verdict.fp, verdict.listing)
         return _load_tier(spark, path, vectors, meta)
     except Exception:
         return None
 
 
-def _absorb(spark, path: str, vectors: DataFrame, meta, verdict: _Verdict, source_dir) -> None:
+def _absorb(spark, path: str, meta, verdict: _Verdict, source_dir) -> dict:
     """FAISS ``add`` of an ``"appendable"`` verdict's delta on the
-    driver, then ``sources`` and ``meta`` (last) for the listing judged.
+    driver, then ``sources`` and ``meta`` (last) for the listing judged;
+    returns the new meta.
 
     With ``verdict.appended`` the delta is those files, read one at a
     time (driver memory is bounded by the largest), each written under
@@ -441,7 +496,7 @@ def _absorb(spark, path: str, vectors: DataFrame, meta, verdict: _Verdict, sourc
     table_path = f"{path}/indexed"
     if verdict.appended is None:
         indexed_ids = spark.read.parquet(table_path).select(id_col)
-        fresh = vectors.join(indexed_ids, id_col, "left_anti").toArrow()
+        fresh = verdict.vectors.join(indexed_ids, id_col, "left_anti").toArrow()
         _absorb_rows(fresh, table_path, id_col, vec_col, cents, sq)
         fp = verdict.fp
     else:
@@ -449,11 +504,9 @@ def _absorb(spark, path: str, vectors: DataFrame, meta, verdict: _Verdict, sourc
         for f in files:
             rows = pq.read_table(f)
             _absorb_rows(rows, table_path, id_col, vec_col, cents, sq, os.path.basename(f))
-        delta = spark.read.schema(vectors.schema).parquet(*files)
+        delta = read_files(spark, files, [id_col, vec_col])
         fp = str(int(meta["fp"]) + int(content_fingerprint(delta, id_col, vec_col)))
-    if verdict.listing is not None:
-        _write_sources(path, verdict.listing)
-    _write_meta(path, {**meta, "fp": fp, "src_fp": _digest(verdict.listing)})
+    return _record(path, meta, fp, verdict.listing)
 
 
 def _absorb_rows(
@@ -480,29 +533,25 @@ def _absorb_rows(
         PR.write_rows(out.filter(pa.array(cluster == c)), f"{table_path}/cluster_id={c}", name)
 
 
-def _load_tier(spark: SparkSession, path: str, vectors: DataFrame, meta):
+def _load_tier(spark: SparkSession, path: str, vectors: DataFrame | None, meta):
     from customkb_spark.embedding.auto import VectorIndexTier
 
     kind, id_col, vec_col = meta["kind"], meta["id_col"], meta["vec_col"]
     if kind == "flat":
         return VectorIndexTier("flat", vectors, id_col, vec_col)
     cents = load_centroids(spark, f"{path}/centroids")
-    indexed = spark.read.parquet(f"{path}/indexed")
+    indexed = dict(indexed_path=f"{path}/indexed")  # read on first use
     if kind == "ivf":
-        return VectorIndexTier(
-            "ivf", vectors, id_col, vec_col, centroids=cents, indexed=indexed
-        )
+        return VectorIndexTier("ivf", vectors, id_col, vec_col, centroids=cents, **indexed)
     if kind == "ivfsq":
         sq = load_sq(spark, f"{path}/sq", centroids=cents)
         return VectorIndexTier(
-            "ivfsq", vectors, id_col, vec_col,
-            centroids=cents, indexed=indexed, sq=sq,
+            "ivfsq", vectors, id_col, vec_col, centroids=cents, sq=sq, **indexed
         )
     pq = load_pq(spark, f"{path}/pq")
     return VectorIndexTier(
         "ivfpq", vectors, id_col, vec_col,
-        centroids=pq.centroids if pq.centroids is not None else cents,
-        indexed=indexed, pq=pq,
+        centroids=pq.centroids if pq.centroids is not None else cents, pq=pq, **indexed,
     )
 
 

@@ -8,10 +8,11 @@ $VECTORDBS/<name>/ with SQLite+FAISS+NPZ sidecars, SURVEY.md §1.1):
     <kb_dir>/chunks/      the canonical chunk table (CHUNKS_SCHEMA subset);
                           its ``sourcedoc`` column is the file registry
     <kb_dir>/vectors/     (id, vector) — the FAISS-file equivalent
-    <kb_dir>/vindex/, postings/, term_stats/, bm25_meta/
-                          derived indexes; each records the fingerprint
-                          of the table it covers, and one freshness rule
-                          per index judges it on read
+    <kb_dir>/vindex/, postings/, term_stats/, bm25_meta/, bm25_sources/
+                          derived indexes; each records the data files
+                          and content fingerprint of the table it
+                          covers, and one freshness rule per index
+                          judges it on read
 
 Semantics preserved from the reference:
 - ``database`` is incremental: already-ingested sources are skipped via
@@ -21,14 +22,18 @@ Semantics preserved from the reference:
   pending set, embed_manager.py:586) — expressed as an anti-join
   against the vectors table instead of a mutable flag column, so the
   append-only tables need no MERGE.
-- ``query`` builds the hybrid index from the tables once per write and
+- ``query`` brings the persisted indexes up to date once per write and
   runs the full fused-retrieval pipeline; ``context_only`` mirrors the
   reference's --context-only flag, otherwise the (stubbed) LLM answers.
-  Within ``cfg.index_memory_budget_mb`` the index is also held in
-  process memory (plans/resident.py) and a query runs no Spark job; over
-  it, the Spark plans of plans/hybrid.py serve. Every write to
-  ``chunks/`` or ``vectors/``, from any process, drops both: the next
-  query sees the tables' listing change.
+  After a pure append both indexes absorb just the new files on the
+  driver (BM25 from the tokens ``database`` stored with the chunks, the
+  vector tier FAISS-add style); anything else rebuilds them. Within
+  ``cfg.index_memory_budget_mb`` the index is then read into process
+  memory with pyarrow (plans/resident.py) and a query runs no Spark job;
+  over it, or to rerank or batch, the Spark plans of plans/hybrid.py
+  serve, their frames built on first use. Every write to ``chunks/`` or
+  ``vectors/``, from any process, and every compaction of the derived
+  tables drops both: the next query sees the tables change on disk.
 
 At 100 TB: write the chunks table BUCKETED by ``sourcedoc``
 (plans/layout.py — bucketBy into the catalog, per-bucket sorted by
@@ -42,12 +47,17 @@ from __future__ import annotations
 
 import os
 import time
+from typing import NamedTuple
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from customkb_spark.config import KBConfig
+from customkb_spark.embedding import store as IS
 from customkb_spark.embedding.embedder import embed_texts
 from customkb_spark.functions import parquet_rows as PR
 from customkb_spark.ingest.pipeline import documents_to_chunks
@@ -57,10 +67,34 @@ from customkb_spark.plans.answer import generate_answer
 from customkb_spark.plans.formatters import format_references
 from customkb_spark.plans.querylog import log_query
 
-# ``bm25_meta`` / ``<name>_meta``: one row, written by ``_write_bm25``
-BM25_META_SCHEMA = pa.schema([("n_chunks", pa.int64()), ("avgdl", pa.float64())] + [
-    (c, pa.string()) for c in ("chunks_fp", "language", "chunks_src_fp")
-])
+# ``bm25_meta`` / ``<name>_meta``: one row, written by ``_commit_bm25``
+BM25_META_SCHEMA = pa.schema(
+    [("n_chunks", pa.int64()), ("avgdl", pa.float64()), ("sum_dl", pa.int64())]
+    + [(c, pa.string()) for c in ("chunks_fp", "language", "chunks_src_fp", "term_stats_fp")]
+)
+# what a built index covers (a change to one's listing refreshes it) and
+# the derived tables it reads (a swap of one refreshes it)
+_SOURCES, _DERIVED = ("chunks", "vectors"), ("postings", "vindex/indexed")
+
+
+def _dir_identity(path: str) -> tuple | None:
+    """(inode, mtime) of a table directory: ``parquet_rows.swap`` puts in
+    a new one. Two stats instead of a walk of ``vindex/indexed``'s
+    cluster directories on every query."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+class _BM25State(NamedTuple):
+    """``KnowledgeBase._bm25_freshness``'s verdict."""
+
+    meta: dict | None  # bm25_meta, when the index is fresh or appendable
+    fp: str | None = None  # the chunks' content fingerprint, when computed
+    listing: list | None = None  # the chunks/ files judged (content rule: covered)
+    appended: list | None = None  # the entries of ``listing`` a pure append added
 
 
 class KnowledgeBase:
@@ -69,9 +103,10 @@ class KnowledgeBase:
         self.kb_dir = kb_dir
         self.cfg = cfg or KBConfig()
         PR.recover(kb_dir)  # undo table swaps a killed writer left
-        self._index: HY.HybridIndex | None = None
-        self._index_fp: tuple | None = None
+        self._index: HY.HybridIndex | None = None  # the Spark form, on first use
+        self._index_fp: tuple | None = None  # _tables_fp at the last refresh
         self._resident: RI.ResidentIndex | None = None
+        self._bm25_meta: dict | None = None
 
     # ---------------------------------------------------------- paths
     def _p(self, name: str) -> str:
@@ -212,19 +247,12 @@ class KnowledgeBase:
         """Materialize the BM25 index tables (postings, term_stats) to
         the KB dir — the reference's ``customkb bm25`` command, which
         tokenizes the corpus into a persisted NPZ index
-        (bm25_manager.py). Skips the build when ``_bm25_freshness``
-        finds the persisted index covers the current chunks (the
-        verify-indexes analogue). Returns
-        ``{n_chunks, avgdl, n_terms, rebuilt}``."""
-        from customkb_spark.embedding.store import content_fingerprint
-
-        chunks = self._read("chunks")
-        meta, fp = (None, None) if force else self._bm25_freshness(chunks)
-        rebuilt = meta is None
-        if rebuilt:
-            if fp is None:
-                fp = content_fingerprint(chunks, "id", "originaltext")
-            meta = self._write_bm25(chunks, "", "bm25_meta", fp)
+        (bm25_manager.py). Brings the persisted index up to date instead
+        when ``_bm25_freshness`` allows (the verify-indexes analogue):
+        as is when it covers the current chunks, by ``_absorb_bm25``
+        after a pure append. Returns ``{n_chunks, avgdl, n_terms,
+        rebuilt}``."""
+        meta, rebuilt = self._bm25_index(force)
         return {
             "n_chunks": int(meta["n_chunks"]), "avgdl": float(meta["avgdl"]),
             "n_terms": self._read("term_stats").count(), "rebuilt": rebuilt,
@@ -290,123 +318,260 @@ class KnowledgeBase:
             (int(meta["n_chunks"]), float(meta["avgdl"])),
         )
 
-    def _write_bm25(self, chunks, prefix: str, meta_name: str, fp=None):
-        """The one BM25 build: corpus stats → ``<prefix>postings`` →
+    def _bm25_index(self, force: bool = False) -> tuple[dict, bool]:
+        """(meta, rebuilt) of the primary BM25 index after bringing it up
+        to date with ``chunks/`` under ``_bm25_freshness``: as is when
+        fresh (a fresh verdict of the content rule records the listing
+        it covers, so the next check decides from the listing again),
+        absorbed after a pure append, otherwise (or with ``force``)
+        rebuilt."""
+        state = _BM25State(None) if force else self._bm25_freshness()
+        if state.appended is not None:
+            meta = self._absorb_bm25(state)
+            if meta is not None:
+                return meta, False
+        elif state.meta is not None:
+            if state.fp is not None:
+                return self._commit_bm25("", "bm25_meta", state.meta, state.listing), False
+            return state.meta, False
+        chunks = self._read("chunks")
+        listing = IS._covered(chunks, self._p("chunks"))
+        fp = state.fp if state.fp is not None and state.listing == listing else None
+        if fp is None:
+            fp = IS.content_fingerprint(chunks, "id", "originaltext")
+        return self._write_bm25(chunks, "", "bm25_meta", fp, listing), True
+
+    def _write_bm25(self, chunks, prefix: str, meta_name: str, fp=None, listing=None):
+        """The one BM25 build: corpus totals → ``<prefix>postings`` →
         read back (term_stats aggregates the materialized table instead
         of re-tokenizing the corpus) → ``<prefix>term_stats`` → meta,
         written last; each is swapped in whole. ``fp`` is the chunks'
-        content fingerprint the primary index records for
+        content fingerprint and ``listing`` the ``chunks/`` files
+        ``chunks`` reads, which the primary index records for
         ``_bm25_freshness``. Returns the meta row."""
-        from customkb_spark.embedding.store import dir_fingerprint
         from customkb_spark.operators import bm25 as B25
 
         lang = self.cfg.language
-        n, avgdl = B25.corpus_stats(chunks, "originaltext", language=lang)
+        n, avgdl, sum_dl = B25.corpus_totals(chunks, "originaltext", language=lang)
         postings = B25.build_postings(chunks, "id", "originaltext", language=lang)
         self._swap(f"{prefix}postings", postings)
         stats = B25.build_term_stats(self._read(f"{prefix}postings"), n)
         self._swap(f"{prefix}term_stats", stats)
-        meta = dict(
-            n_chunks=int(n), avgdl=float(avgdl), chunks_fp=fp, language=lang,
-            chunks_src_fp=dir_fingerprint(self._p("chunks")),
-        )
+        meta = dict(n_chunks=n, avgdl=avgdl, sum_dl=sum_dl, chunks_fp=fp, language=lang)
+        return self._commit_bm25(prefix, meta_name, meta, listing)
+
+    def _commit_bm25(self, prefix: str, meta_name: str, meta: dict, listing) -> dict:
+        """Record the BM25 index just written: with a ``listing`` (the
+        primary index) the ``chunks/`` files it covers in
+        ``bm25_sources``, then ``meta`` last with their hash and that of
+        the ``term_stats`` listing. Returns the meta."""
+        if listing is not None:
+            IS._write_sources(self._p("bm25_sources"), listing)
+        meta = {
+            **meta, "chunks_src_fp": IS._digest(listing),
+            "term_stats_fp": IS.dir_fingerprint(self._p(f"{prefix}term_stats")),
+        }
         PR.replace(
             pa.Table.from_pylist([meta], schema=BM25_META_SCHEMA), self._p(meta_name)
         )
         self._invalidate()
         return meta
 
-    def _bm25_freshness(self, chunks) -> tuple:
-        """The one BM25 freshness rule: ``(meta, fp)``, where ``meta`` is
-        the persisted ``bm25_meta`` row when the persisted tables cover
-        ``chunks`` (else None) and ``fp`` the chunks' content
-        fingerprint when this check computed it (else None).
+    def _bm25_freshness(self, chunks: DataFrame | None = None) -> "_BM25State":
+        """The one BM25 freshness rule, each step run only when the one
+        before cannot decide (``store._tier_verdict``'s, over
+        ``chunks/``):
 
-        The persisted language must match the cfg's (postings tokenized
-        under another stopword gate are the wrong index); then an
-        unchanged chunks-dir listing proves the content unchanged
-        without a corpus scan (parquet files are immutable); only a
-        changed listing falls to the content fingerprint, which a force
-        re-ingest's rewrite under unchanged ids and counts fails."""
+        1. no index, or one tokenized under another language (postings
+           under another stopword gate are the wrong index) → stale;
+        2. an unchanged ``chunks/`` listing proves the content unchanged
+           (parquet files are immutable) → fresh, no scan;
+        3. every file ``bm25_sources`` records is still there unchanged,
+           and ``term_stats`` is the table the meta recorded (an absorb
+           killed after swapping it leaves another) → a pure append of
+           the other files (``appended``), no scan;
+        4. the content fingerprint of ``chunks`` (default: ``chunks/``)
+           equals the recorded one → fresh; a force re-ingest's rewrite
+           under unchanged ids and counts fails it → stale.
+
+        ``meta`` is the persisted ``bm25_meta`` row when the index is
+        fresh or appendable."""
         if not all(
             self._exists(t) for t in ("bm25_meta", "postings", "term_stats")
         ):
-            return None, None
-        from customkb_spark.embedding.store import content_fingerprint, dir_fingerprint
-
+            return _BM25State(None)
         meta = PR.read_row(self._p("bm25_meta"))
         if meta.get("language", "en") != self.cfg.language:
-            return None, None
+            return _BM25State(None)
+        listing = IS._listing(self._p("chunks"))
         src_fp = meta.get("chunks_src_fp")
-        if src_fp is not None and dir_fingerprint(self._p("chunks")) == src_fp:
-            return meta, None
-        fp = content_fingerprint(chunks, "id", "originaltext")
-        return (meta if meta.get("chunks_fp") == fp else None), fp
+        if src_fp is not None and IS._digest(listing) == src_fp:
+            return _BM25State(meta, None, listing)
+        if (
+            listing is not None
+            and None not in (meta.get("sum_dl"), meta.get("chunks_fp"))
+            and IS.dir_fingerprint(self._p("term_stats")) == meta.get("term_stats_fp")
+        ):
+            new = IS._appended(self._p("bm25_sources"), listing, src_fp)
+            if new is not None:
+                return _BM25State(meta, None, listing, new)
+        if chunks is None:
+            chunks = self._read("chunks")
+        fp = IS.content_fingerprint(chunks, "id", "originaltext")
+        covered = IS._covered(chunks, self._p("chunks"))
+        return _BM25State(meta if meta.get("chunks_fp") == fp else None, fp, covered)
+
+    def _absorb_bm25(self, state: "_BM25State") -> dict | None:
+        """Add the ``chunks/`` files of a pure append (``state.appended``)
+        to the persisted BM25 index, on the driver, from the tokens
+        ``database`` stored with them (``bm25_tokens`` / ``doc_length``,
+        the ``bm25_token_set`` of ``originaltext`` under the KB's
+        ``cfg.language``, as the index's own): one postings file per new
+        file, named after it, so a retry after a kill rewrites its rows
+        instead of adding them twice; ``df`` merged into ``term_stats``
+        and ``idf`` derived from it with ``bm25.with_idf`` (one Spark
+        job); ``n`` and ``sum_dl`` added up, ``avgdl = sum_dl / n``;
+        ``chunks_fp`` plus the delta's fingerprint (one Spark job);
+        then ``bm25_sources`` and ``meta`` last. The result equals a
+        from-scratch build: the same integers, the same ``idf``
+        expression. Returns the new meta, or None when a new file holds
+        no usable tokens (a layout before them, a NULL text): the caller
+        rebuilds."""
+        from customkb_spark.operators import bm25 as B25
+
+        meta = state.meta
+        files = [os.path.join(self._p("chunks"), rel) for rel, _size, _mtime in state.appended]
+        new = []
+        for f in files:
+            if not {"bm25_tokens", "doc_length"} <= set(pq.read_schema(f).names):
+                return None
+            t = pq.read_table(f, columns=["id", "bm25_tokens", "doc_length"])
+            if t["bm25_tokens"].null_count or t["doc_length"].null_count:
+                return None
+            new.append((f, t, t["bm25_tokens"].combine_chunks()))
+        for f, t, toks in new:
+            rows = pc.list_parent_indices(toks)
+            PR.write_rows(pa.table({
+                "id": t["id"].take(rows),
+                "dl": t["doc_length"].cast(pa.int32()).take(rows),
+                "term": pc.list_flatten(toks),
+            }), self._p("postings"), os.path.basename(f))
+        old = PR.read_table(self._p("term_stats"))
+        terms = pa.concat_arrays(
+            [old["term"].combine_chunks()] + [pc.list_flatten(toks) for _f, _t, toks in new]
+        )
+        ones = pa.array(np.ones(len(terms) - old.num_rows, dtype=np.int64))
+        counts = pa.concat_arrays([old["df"].combine_chunks().cast(pa.int64()), ones])
+        merged = pa.table({"term": terms, "df": counts}).group_by("term").aggregate(
+            [("df", "sum")]
+        )
+        n = int(meta["n_chunks"]) + sum(t.num_rows for _f, t, _toks in new)
+        sum_dl = int(meta["sum_dl"]) + sum(pc.sum(t["doc_length"]).as_py() or 0 for _f, t, _toks in new)
+        term_df = self.spark.createDataFrame(
+            pa.table({"term": merged["term"], "df": merged["df_sum"]})
+        )
+        self._swap("term_stats", B25.with_idf(term_df, n))
+        delta = IS.read_files(self.spark, files, ["id", "originaltext"])
+        fp = int(meta["chunks_fp"]) + int(IS.content_fingerprint(delta, "id", "originaltext"))
+        meta = {**meta, "n_chunks": n, "avgdl": sum_dl / n, "sum_dl": sum_dl, "chunks_fp": str(fp)}
+        return self._commit_bm25("", "bm25_meta", meta, state.listing)
 
     # ---------------------------------------------------------- query
     def _invalidate(self) -> None:
-        """Drop the cached index — unpersisting the old cached
+        """Drop the built indexes — unpersisting the Spark form's cached
         DataFrames so repeated database/embed/query cycles in a
-        long-lived session don't leak executor memory."""
+        long-lived session don't leak executor memory. A loaded tier's
+        ``indexed`` is not cached, so it is left unread."""
         if self._index is not None:
-            vindex = getattr(self._index, "vindex", None)
-            for df in (
-                getattr(self, "_cached_chunks", None),
-                self._index.vectors,
-                self._index.postings,
-                self._index.term_stats,
-                getattr(vindex, "indexed", None),
-            ):
-                if df is not None:
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-        self._cached_chunks = None
-        self._index = None
-        self._resident = None
+            index = self._index
+            for df in (index.chunks, index.vectors, index.postings, index.term_stats):
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+        self._index = self._resident = self._index_fp = None
+
+    def _refresh(self) -> None:
+        """Bring the persisted indexes up to date with ``chunks/`` and
+        ``vectors/`` and, within ``cfg.index_memory_budget_mb``, load
+        the resident index from the KB's tables with pyarrow; no Spark
+        frame is made unless an index is (re)built or a delta absorbed.
+        BM25 (``_bm25_index``) and the vector tier (``load_vector_index``)
+        each absorb a pure append of new files on the driver, FAISS-add
+        style, or are rebuilt and persisted.
+
+        Runs whenever the listing of ``chunks/`` or ``vectors/``, or the
+        directory of ``postings/`` or ``vindex/indexed``, changed since
+        the last call, from this object or another process: parquet
+        files are immutable, so two directory listings and two stats,
+        with no Spark job, tell apart every write — appends, rewrites,
+        and the swaps ``compact_indexes`` makes under frames a Spark
+        plan may hold."""
+        from customkb_spark.embedding.auto import build_vector_index
+
+        fp = self._tables_fp()
+        if fp == self._index_fp:
+            return
+        self._invalidate()
+        vpath, vdir = self._p("vindex"), self._p("vectors")
+        # reference lifecycle parity: load the persisted index tier
+        # (<kb>.faiss analogue) instead of retraining; it is built and
+        # saved here when stale or absent
+        loaded = IS.load_vector_index(self.spark, vpath, None, source_dir=vdir)
+        meta, _ = self._bm25_index()
+        if loaded is None:
+            tier = build_vector_index(self._read("vectors"), self.cfg, n=int(meta["n_chunks"]))
+            IS.save_vector_index(tier, vpath, source_dir=vdir)
+            if tier.indexed is not None:
+                tier.indexed.unpersist()
+        self._bm25_meta = meta
+        # the sources as listed before they were read; the derived
+        # tables as this call left them
+        self._index_fp = fp[:2] + self._tables_fp()[2:]
+        # None over the memory budget: then Spark plans serve
+        self._resident = RI.ResidentIndex.load(
+            self.kb_dir, int(meta["n_chunks"]), float(meta["avgdl"]), self.cfg
+        )
+
+    def _tables_fp(self) -> tuple:
+        return tuple(IS.dir_fingerprint(self._p(t)) for t in _SOURCES) + tuple(
+            _dir_identity(self._p(t)) for t in _DERIVED
+        )
 
     def _build_index(self) -> HY.HybridIndex:
-        """The hybrid index over the current tables, rebuilt whenever
-        ``chunks/`` or ``vectors/`` changed since the last build. Parquet
-        files are immutable, so any write to them — from this object or
-        another process — changes their listing fingerprint: two
-        directory listings per call, no Spark job."""
-        from customkb_spark.embedding.store import dir_fingerprint
-
-        sources_fp = tuple(dir_fingerprint(self._p(t)) for t in ("chunks", "vectors"))
-        if self._index is not None and sources_fp != self._index_fp:
-            self._invalidate()
+        """The Spark-plan form of the index over the persisted tables —
+        for the query over the memory budget, reranking and
+        ``query_batch`` — built on first use after each ``_refresh``."""
+        self._refresh()
         if self._index is None:
-            from customkb_spark.embedding import store as IS
-
-            self._index_fp = sources_fp
-            self._cached_chunks = self._read("chunks").cache()
-            vectors = self._read("vectors")
-            vpath = self._p("vindex")
-            # reference lifecycle parity: load the persisted index tier
-            # (<kb>.faiss analogue) instead of retraining; after a pure
-            # append an IVF tier absorbs just the new vectors files,
-            # FAISS-add-style on the driver, inside load_vector_index
-            vindex = IS.load_vector_index(
-                self.spark, vpath, vectors, source_dir=self._p("vectors")
-            )
-            meta, _ = self._bm25_freshness(self._cached_chunks)
-            postings = term_stats = corpus = None
-            if meta is not None:  # else HybridIndex.build tokenizes
-                postings, term_stats = self._read("postings"), self._read("term_stats")
-                corpus = (int(meta["n_chunks"]), float(meta["avgdl"]))
+            meta, vectors = self._bm25_meta, self._read("vectors")
             self._index = HY.HybridIndex.build(
-                self._cached_chunks, vectors, cfg=self.cfg, vindex=vindex,
-                postings=postings, term_stats=term_stats, corpus=corpus,
+                self._read("chunks").cache(), vectors, cfg=self.cfg,
+                vindex=IS.load_vector_index(
+                    self.spark, self._p("vindex"), vectors, source_dir=self._p("vectors")
+                ),
+                postings=self._read("postings"), term_stats=self._read("term_stats"),
+                corpus=(int(meta["n_chunks"]), float(meta["avgdl"])),
             )
-            if vindex is None and self._index.vindex is not None:
-                IS.save_vector_index(
-                    self._index.vindex, vpath, source_dir=self._p("vectors")
-                )
-            # None over the memory budget: then Spark plans serve
-            self._resident = RI.ResidentIndex.load(self._index, self.cfg)
         return self._index
+
+    def compact_indexes(self) -> None:
+        """Fold the files appends add to the derived tables — one
+        ``postings/`` file per absorbed chunks file, one
+        ``vindex/indexed`` file per touched cluster per absorbed vectors
+        file — into one postings file and one file per cluster, each
+        table swapped in whole (``customkb optimize``). Pending appends
+        are absorbed first, so no file of a killed absorb is folded in
+        (its retry would add the rows again). A held KnowledgeBase sees
+        the swaps (``_refresh``)."""
+        if self._exists("chunks") and self._exists("vectors"):
+            self._refresh()
+        if self._exists("postings"):
+            self._swap("postings", self._read("postings").coalesce(1))
+        indexed = self._p("vindex/indexed")
+        if os.path.isdir(indexed):
+            PR.swap(indexed, lambda staged: IS.write_ivf_table(self._read("vindex/indexed"), staged))
+            self.spark.catalog.refreshByPath(indexed)
 
     def query(
         self,
@@ -432,7 +597,7 @@ class KnowledgeBase:
         ``context_files`` — extra driver-side files appended to the
         reference string before answering."""
         t0 = time.time()
-        index = self._build_index()
+        self._refresh()
         cfg, resident = self.cfg, self._resident
         rerank_cache = None
         rerank_sink = None
@@ -450,7 +615,7 @@ class KnowledgeBase:
 
         if resident is None:  # over the memory budget: Spark plans
             ctx = HY.query(
-                index, query_text, cfg, categories=categories,
+                self._build_index(), query_text, cfg, categories=categories,
                 query_cache_path=self._p("query_emb_cache"),
                 rerank_cache=rerank_cache, rerank_cache_sink=rerank_sink,
             )
@@ -467,7 +632,7 @@ class KnowledgeBase:
                     [(r["id"], r["score"]) for r in fused_rows], "id long, score double"
                 )
                 fused_rows = HY.rerank(
-                    index, fused, query_text, cfg, rerank_cache, rerank_sink
+                    self._build_index(), fused, query_text, cfg, rerank_cache, rerank_sink
                 ).collect()
             ctx_rows = HY.retrieve_context_hits(resident, fused_rows, cfg, categories)
         reference_string = format_references(ctx_rows, fmt)
@@ -545,19 +710,20 @@ class KnowledgeBase:
 
         out["schema_version"] = get_current_schema_version(self.spark, self.kb_dir)
         # persisted-index freshness: the same rules a query applies
-        # (_bm25_freshness; store._tier_verdict, where "appendable" = a
-        # query absorbs the new vectors FAISS-add-style)
+        # (_bm25_freshness; store._tier_verdict), where "appendable" = a
+        # query absorbs the new chunks / vectors files
         if chunks is None:
             out["bm25_index"] = "n/a"
         elif not self._exists("bm25_meta"):
             out["bm25_index"] = "absent"
         else:
-            fresh = self._bm25_freshness(chunks)[0] is not None
-            out["bm25_index"] = "fresh" if fresh else "stale"
+            state = self._bm25_freshness(chunks)
+            out["bm25_index"] = (
+                "appendable" if state.appended is not None
+                else "fresh" if state.meta is not None else "stale"
+            )
         if self._exists("vindex") and self._exists("vectors"):
-            from customkb_spark.embedding.store import index_freshness
-
-            out["vector_index"] = index_freshness(
+            out["vector_index"] = IS.index_freshness(
                 self.spark, self._p("vindex"), self._read("vectors"),
                 source_dir=self._p("vectors"),
             )

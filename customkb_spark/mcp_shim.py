@@ -58,7 +58,7 @@ _ENGINES: dict = {}  # (session, kb_dir) → its held KnowledgeBase
 
 def _engine(spark: SparkSession, base_dir: str, kb: str) -> KnowledgeBase:
     """The held engine of ``kb``, whose index survives between calls
-    (its ``_build_index`` sees other writers); a changed .cfg file
+    (its ``_refresh`` sees other writers); a changed .cfg file
     replaces it. Compared under ``_CFG_LOCK``, where no call has the
     engine's top_k changed."""
     kb_dir, cfg = os.path.join(base_dir, kb), _kb_cfg(base_dir, kb)

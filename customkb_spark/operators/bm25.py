@@ -57,8 +57,15 @@ def build_postings(
 
 def build_term_stats(postings: DataFrame, corpus_size: int) -> DataFrame:
     """term_stats(term, df, idf) — partial+final hash aggregation."""
+    return with_idf(postings.groupBy("term").agg(F.count("*").alias("df")), corpus_size)
+
+
+def with_idf(term_df: DataFrame, corpus_size: int) -> DataFrame:
+    """(term, df) rows with the ``idf`` of a corpus of ``corpus_size``
+    documents, in Spark's ``log`` (numpy's and Python's differ from it
+    in the last bit on some values)."""
     n = float(corpus_size)
-    return postings.groupBy("term").agg(F.count("*").alias("df")).withColumn(
+    return term_df.withColumn(
         "idf", F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     )
 
@@ -170,12 +177,23 @@ def corpus_stats(
     """(corpus_size, avgdl) over BM25-token-set document lengths —
     the SAME language gate as build_postings, or dl/avgdl
     normalization skews when stopwords are kept on one side only."""
-    row = chunks.select(
-        X.bm25_token_set(text_col, language=language, ordered=False).alias("toks")
-    ).agg(
-        F.count("*").alias("n"), F.avg(F.size("toks")).alias("avgdl")
+    return corpus_totals(chunks, text_col, language)[:2]
+
+
+def corpus_totals(
+    chunks: DataFrame, text_col: str = "text", language: str = "en"
+) -> tuple[int, float, int | None]:
+    """:func:`corpus_stats` plus ``sum_dl``, the integer sum of the
+    lengths avgdl averages (so avgdl = sum_dl / n exactly, and an
+    append can update both); None when a NULL text has no length, as
+    the average then skips it."""
+    size = F.size(X.bm25_token_set(text_col, language=language, ordered=False))
+    row = chunks.select(size.alias("dl")).agg(
+        F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
+        F.sum("dl").alias("sum_dl"), F.count("dl").alias("n_dl"),
     ).collect()[0]
-    return int(row["n"]), float(row["avgdl"])
+    n = int(row["n"])
+    return n, float(row["avgdl"]), int(row["sum_dl"]) if row["n_dl"] == n else None
 
 
 def needs_rebuild(

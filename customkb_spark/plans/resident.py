@@ -2,11 +2,13 @@
 
 The reference answers one query with FAISS in process plus SQLite point
 lookups (query/search.py:567-606). When the index fits
-``cfg.index_memory_budget_mb``, ``KnowledgeBase`` loads the
-``HybridIndex`` frames once per index build through Arrow into numpy:
-the vectors (float64, with row norms), the BM25 postings in CSR form
-with per-doc ``dl`` and term_stats' ``idf``, and the chunks sorted by
-(sourcedoc, doc_id, sid) with an id → row map and per-document offsets.
+``cfg.index_memory_budget_mb``, ``KnowledgeBase`` loads the KB's
+``vectors/``, ``postings/``, ``term_stats/`` and ``chunks/`` tables
+once per write, read whole with pyarrow on the driver (no Spark job)
+into numpy: the vectors (float64, with row norms), the BM25 postings in
+CSR form with per-doc ``dl`` and term_stats' ``idf``, and the chunks
+sorted by (sourcedoc, doc_id, sid) with an id → row map and
+per-document offsets.
 
 The kernel scores a block of queries against a block of rows and
 reproduces the Spark plans' arithmetic, so ids, order and scores match
@@ -20,6 +22,7 @@ desc, id asc). Vector top-k is exact at every size that fits.
 
 from __future__ import annotations
 
+import os
 import sys
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
@@ -27,8 +30,10 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 
 from customkb_spark.config import KBConfig
+from customkb_spark.functions import parquet_rows as PR
 from customkb_spark.operators.fusion import FUSION_INPUT_BOUND
 
 _MICRO = Decimal("1e-6")
@@ -189,17 +194,28 @@ class ResidentIndex:
     id_rows: np.ndarray  # int64 (n_rows,): ids_sorted[i] is row id_rows[i]
 
     @classmethod
-    def load(cls, index, cfg: KBConfig) -> "ResidentIndex | None":
-        """Load ``index`` (a ``HybridIndex``) once through Arrow, or
-        None when its estimated size exceeds the memory budget."""
-        if not fits(index.corpus_size, cfg):
+    def load(cls, kb_dir: str, n_rows: int, avgdl: float, cfg: KBConfig) -> "ResidentIndex | None":
+        """Load the KB at ``kb_dir`` — its ``vectors/``, ``postings/``,
+        ``term_stats/`` and ``chunks/`` tables, read whole with pyarrow on
+        the driver — or None when its ``n_rows`` chunks exceed the memory
+        budget. ``avgdl`` is the persisted BM25 index's."""
+        if not fits(n_rows, cfg):
             return None
-        vt = index.vectors.select("id", "vector").toArrow()
+
+        def read(name: str, columns: list[str]) -> pa.Table:
+            # one thread: after a threaded scan the process's per-request
+            # parquet writes (query log, query cache) ran slower
+            return table(name).to_table(columns=columns, use_threads=False)
+
+        def table(name: str) -> ds.Dataset:
+            return ds.dataset(PR.data_files(os.path.join(kb_dir, name)), format="parquet")
+
+        vt = read("vectors", ["id", "vector"])
         flat = pc.list_flatten(vt["vector"]).to_numpy().astype(np.float64)
         vectors = np.asfortranarray(flat.reshape(vt.num_rows, -1 if vt.num_rows else 0))
 
-        stats = index.term_stats.select("term", "idf").toArrow()
-        post = index.postings.select("id", "dl", "term").toArrow()
+        stats = read("term_stats", ["term", "idf"])
+        post = read("postings", ["id", "dl", "term"])
         bm25_ids, doc_of_post = np.unique(post["id"].to_numpy(), return_inverse=True)
         dl = np.zeros(len(bm25_ids))
         dl[doc_of_post] = post["dl"].to_numpy()
@@ -210,10 +226,10 @@ class ResidentIndex:
         indptr = np.zeros(stats.num_rows + 1, dtype=np.int64)
         np.cumsum(np.bincount(t, minlength=stats.num_rows), out=indptr[1:])
 
-        cols = index.chunks.columns
+        cols = table("chunks").schema.names
         keys = ("sourcedoc", "doc_id") if "doc_id" in cols else ("sourcedoc",)
         extra = ["primary_category"] if "primary_category" in cols else []
-        chunks = index.chunks.select("id", *keys, "sid", "originaltext", *extra).toArrow()
+        chunks = read("chunks", ["id", *keys, "sid", "originaltext", *extra])
         chunks = chunks.take(pc.sort_indices(
             chunks, sort_keys=[(k, "ascending") for k in (*keys, "sid")],
             null_placement="at_start",
@@ -234,7 +250,7 @@ class ResidentIndex:
             doc_rows=doc_of_post[valid][order],
             bm25_ids=bm25_ids,
             dl=dl,
-            avgdl=float(index.avgdl),
+            avgdl=float(avgdl),
             chunks=chunks.drop_columns(["id"]),
             keys=keys,
             sid=chunks["sid"].to_numpy().astype(np.int64),

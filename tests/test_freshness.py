@@ -555,3 +555,228 @@ def test_tier_without_sources_absorbs_by_content_then_records_them(
     ids = _indexed_ids(kb)
     assert len(ids) == len(set(ids)) == kb._read("vectors").count()
     assert kb.verify()["vector_index"] == "fresh"
+
+
+# Spark jobs of the query after a 5-document append + embed, both
+# indexes absorbing the new files on the driver: two delta fingerprints
+# (two jobs each under AQE) and the term_stats write
+# (test_query_after_append_runs_only_delta_jobs; 17 before BM25 absorbed
+# its delta and the resident index loaded without Spark)
+QUERY_DELTA_JOBS = 5
+
+
+def _postings(kb) -> list:
+    from customkb_spark.functions import parquet_rows as PR
+
+    t = PR.read_table(kb._p("postings"))
+    return sorted(zip(*(t.column(c).to_pylist() for c in ("id", "dl", "term"))))
+
+
+def _term_stats(kb) -> dict:
+    from customkb_spark.functions import parquet_rows as PR
+
+    t = PR.read_table(kb._p("term_stats"))
+    return {r["term"]: (r["df"], r["idf"]) for r in t.to_pylist()}
+
+
+def _scratch(spark, kb, tmp_path) -> KnowledgeBase:
+    """A from-scratch BM25 build over a copy of ``kb``'s tables."""
+    dst = str(tmp_path / "scratch")
+    shutil.copytree(kb.kb_dir, dst)
+    scratch = KnowledgeBase(spark, dst, KBConfig(**CFG))
+    assert scratch.build_bm25(force=True)["rebuilt"] is True
+    return scratch
+
+
+def _bm25_equal(kb, scratch) -> None:
+    from customkb_spark.functions import parquet_rows as PR
+
+    got, want = _postings(kb), _postings(scratch)
+    assert len(got) == len(set(got)) and got == want
+    assert _term_stats(kb) == _term_stats(scratch)  # idf bit-equal
+    meta, ref = (PR.read_row(k._p("bm25_meta")) for k in (kb, scratch))
+    assert (meta["n_chunks"], meta["avgdl"], meta["sum_dl"]) == (
+        ref["n_chunks"], ref["avgdl"], ref["sum_dl"]
+    )
+    assert meta["chunks_fp"] == ref["chunks_fp"]
+
+
+def _numbered_docs(spark, tag: str, first_id: int, n: int = 5):
+    """``_append_docs`` under doc ids from ``first_id``, so that several
+    appends add distinct chunk ids."""
+    return _append_docs(spark, tag, n).withColumn("doc_id", F.col("doc_id") - 9300 + first_id)
+
+
+def test_bm25_absorbed_appends_equal_a_scratch_build(spark, base_kb, tmp_path):
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    for i in range(3):
+        assert kb.database(_numbered_docs(spark, f"bm25delta{i}x", 9400 + 10 * i)) > 0
+        assert kb.verify()["bm25_index"] == "appendable"
+        assert kb.build_bm25()["rebuilt"] is False
+        assert kb.verify()["bm25_index"] == "fresh"
+    _bm25_equal(kb, _scratch(spark, kb, tmp_path))
+
+
+@pytest.mark.parametrize("killed_at", ["postings", "bm25_sources"])
+def test_bm25_absorb_killed_before_meta_retries_without_duplicates(
+    spark, base_kb, tmp_path, monkeypatch, killed_at
+):
+    """Killed after its first postings file, or after ``term_stats`` is
+    swapped (at ``bm25_sources``), the absorb leaves the old meta; the
+    retry serves each posting once and equals a from-scratch build."""
+    from customkb_spark.functions import parquet_rows as PR
+
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    assert kb.database(_numbered_docs(spark, "killbm25", 9400, 2)) > 0
+    assert kb.database(_numbered_docs(spark, "killbm25b", 9410, 2)) > 0
+    real = PR.replace if killed_at == "bm25_sources" else PR.write_rows
+
+    def kill(table, directory, *a, **k):
+        real(table, directory, *a, **k)
+        if os.path.basename(directory.rstrip("/")) == killed_at:
+            raise _Kill(directory)
+
+    monkeypatch.setattr(PR, real.__name__, kill)
+    with pytest.raises(_Kill):
+        kb.build_bm25()
+    monkeypatch.undo()
+
+    retry = KnowledgeBase(spark, kb.kb_dir, KBConfig(**CFG))
+    assert "killbm25b1" in retry.query("killbm25b1 walrus beacons", log=False)
+    _bm25_equal(retry, _scratch(spark, retry, tmp_path))
+
+
+def test_verify_after_chunks_append_runs_no_chunks_scan(spark, base_kb, tmp_path, monkeypatch):
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    assert kb.database(_append_docs(spark, "noscanbm25")) > 0
+
+    def boom(*a, **k):
+        raise AssertionError("content scan after a pure append")
+
+    monkeypatch.setattr(S, "content_fingerprint", boom)
+    assert kb.verify()["bm25_index"] == "appendable"
+
+
+def test_query_after_append_runs_only_delta_jobs(spark, base_kb, tmp_path, monkeypatch):
+    """The query after an append absorbs both deltas and loads the
+    resident index with pyarrow: no whole-corpus job, no re-tokenizing
+    and no Spark-plan form of the index."""
+    from customkb_spark.operators import bm25 as B25
+
+    kb = _appended_kb(spark, base_kb, tmp_path, "deltajobs")
+    real, calls = B25.build_postings, []
+    monkeypatch.setattr(B25, "build_postings", lambda *a, **k: calls.append(1) or real(*a, **k))
+    out = {}
+    jobs = _jobs_of(spark, lambda: out.update(ctx=kb.query("deltajobs0 walrus beacons", log=False)))
+    assert "deltajobs0" in out["ctx"] and calls == []
+    assert jobs <= QUERY_DELTA_JOBS
+    assert kb._index is None  # no Spark-plan form was built
+
+
+def test_chunks_appended_during_a_bm25_build_are_absorbed_next(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    """A chunks file another writer adds while BM25 is rebuilt was not
+    read by the build, so it is not recorded as covered: the next query
+    absorbs it and returns it."""
+    from customkb_spark.operators import bm25 as B25
+
+    kb_dir = _copy(base_kb, tmp_path)
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    real = B25.build_postings
+
+    def build_postings(*a, **k):
+        monkeypatch.setattr(B25, "build_postings", real)
+        writer = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+        assert writer.database(_append_docs(spark, "midbuildzq", 1)) > 0
+        return real(*a, **k)
+
+    monkeypatch.setattr(B25, "build_postings", build_postings)
+    assert kb.build_bm25(force=True)["rebuilt"] is True
+    assert kb.verify()["bm25_index"] == "appendable"
+    assert "midbuildzq0" in kb.query("midbuildzq0 walrus beacons", log=False)
+
+
+def test_vectors_appended_during_a_tier_build_are_absorbed_next(
+    spark, base_kb, tmp_path, monkeypatch
+):
+    from customkb_spark.embedding import auto
+
+    kb_dir = _copy(base_kb, tmp_path)
+    shutil.rmtree(os.path.join(kb_dir, "vindex"))
+    kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    real = auto.build_vector_index
+
+    def build_vector_index(*a, **k):
+        monkeypatch.setattr(auto, "build_vector_index", real)
+        writer = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+        assert writer.database(_append_docs(spark, "midtier", 1)) > 0
+        assert writer.embed() > 0
+        return real(*a, **k)
+
+    monkeypatch.setattr(auto, "build_vector_index", build_vector_index)
+    kb.query("spark data query table", log=False)  # builds and saves the tier
+    assert kb.verify()["vector_index"] == "appendable"
+    kb.query("midtier0 walrus beacons", log=False)
+    ids = _indexed_ids(kb)
+    assert len(ids) == len(set(ids)) == kb._read("vectors").count()
+
+
+def test_content_rule_fresh_verdict_records_the_listing(spark, base_kb, tmp_path, monkeypatch):
+    """After a rewrite with the same content (``optimize``), the first
+    index build proves freshness with one content fingerprint per index
+    and records the new listing; the second runs none."""
+    from customkb_spark.functions import parquet_rows as PR
+    from customkb_spark.plans.maintenance import optimize_chunks
+
+    kb_dir = _copy(base_kb, tmp_path)
+    spark_kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+    optimize_chunks(spark, spark_kb._p("chunks"))
+    vdir = spark_kb._p("vectors")
+    PR.swap(vdir, spark.read.parquet(vdir).repartition(2).write.parquet)
+    real, scans = S.content_fingerprint, []
+
+    def counted(df, id_col, vec_col):
+        scans.append(vec_col)
+        return real(df, id_col, vec_col)
+
+    monkeypatch.setattr(S, "content_fingerprint", counted)
+    for want in (1, 0):
+        scans.clear()
+        kb = KnowledgeBase(spark, kb_dir, KBConfig(**CFG))
+        kb.query("spark data query table", log=False)
+        assert scans.count("originaltext") == scans.count("vector") == want
+        assert kb.verify()["bm25_index"] == kb.verify()["vector_index"] == "fresh"
+
+
+def _data_files(directory: str) -> list:
+    return [
+        os.path.join(root, f) for root, _dirs, files in os.walk(directory)
+        for f in files if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def test_optimize_compacts_postings_and_the_ivf_table(spark, base_kb, tmp_path):
+    """After four absorbed appends ``optimize`` leaves one postings file
+    and one ``vindex/indexed`` file per cluster; answers are unchanged,
+    and a KB held over the memory budget plans over the new files."""
+    from customkb_spark import cli
+
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+    _resave_ivf_tier(spark, kb)
+    held = KnowledgeBase(spark, kb.kb_dir, KBConfig(**CFG, index_memory_budget_mb=0))
+    for i in range(4):
+        assert kb.database(_numbered_docs(spark, f"compact{i}x", 9400 + 10 * i, 2)) > 0
+        assert kb.embed() > 0
+        assert f"compact{i}x0" in held.query(f"compact{i}x0 walrus beacons", log=False)
+    assert len(_data_files(kb._p("postings"))) > 1
+    assert len(_data_files(kb._p("vindex/indexed"))) > 4
+    queries = ["compact3x1 walrus beacons", "spark data query table"]
+    before = [kb.query(q, log=False) for q in queries]
+
+    assert cli.main(["optimize", kb.kb_dir]) == 0
+    assert len(_data_files(kb._p("postings"))) == 1
+    assert len(_data_files(kb._p("vindex/indexed"))) <= 4
+    assert [kb.query(q, log=False) for q in queries] == before
+    assert [held.query(q, log=False) for q in queries] == before
+    assert kb.verify()["bm25_index"] == kb.verify()["vector_index"] == "fresh"

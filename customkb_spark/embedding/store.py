@@ -18,12 +18,13 @@ verifies/rebuilds it). The Spark-first equivalents:
   per-cluster assignment distance so callers know when the frozen
   centroids have drifted enough to retrain (the reference's
   verify-indexes analogue for ANN);
-- one verdict (``_tier_verdict``: fresh / appendable / stale) judges a
-  saved tier against the vectors table; ``load_vector_index`` acts on
-  it and ``index_freshness`` reports it. A tier records exactly the
-  files its vectors frame read (``_covered``), so a file appended while
-  it was built or absorbed is judged, and absorbed, next time. The
-  listing helpers serve the KB's BM25 index too (``kb.py``).
+- one rule (``judge``: fresh / appendable / stale) judges this tier
+  and the KB's BM25 index (``kb.py``) against the table each covers,
+  under each one's own conditions (``_tier_verdict``); ``load_vector_index``
+  acts on the tier's verdict and ``index_freshness`` reports it. An
+  index records exactly the files its frame read (``covered``,
+  ``write_sources``), so a file appended while it was built or absorbed
+  is judged, and absorbed, next time.
 
 At 100 TB: appends write only the affected cluster partitions; a
 retrain decision is a stats read, never a full rescan.
@@ -33,7 +34,7 @@ from __future__ import annotations
 
 import hashlib
 import os
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 from urllib.parse import unquote, urlparse
 
 import numpy as np
@@ -44,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from customkb_spark.embedding.index import assign_clusters
 from customkb_spark.embedding.pq import PQModel, _assign_nearest
 from customkb_spark.embedding.sq import sq_encode_rows
 from customkb_spark.functions import parquet_rows as PR
@@ -170,7 +170,7 @@ def _listing(path: str | None) -> list[tuple[str, int, int]] | None:
     return sorted(entries)
 
 
-def _covered(df: DataFrame, directory: str | None) -> list | None:
+def covered(df: DataFrame, directory: str | None) -> list | None:
     """The entries of ``directory``'s ``_listing`` that ``df`` reads:
     what an index built from ``df`` covers, whatever was added to the
     directory after ``df`` listed it. A frame that reads none of its
@@ -184,30 +184,16 @@ def _covered(df: DataFrame, directory: str | None) -> list | None:
     return [e for e in listing if os.path.join(root, e[0]) in read] or listing
 
 
-def read_files(spark: SparkSession, files: list[str], columns: list[str]) -> DataFrame:
-    """``columns`` of exactly the parquet ``files``, typed from the first
-    file's footer, so Spark runs no schema-inference job."""
-    schema = pq.read_schema(files[0])
-    return spark.read.schema(
-        from_arrow_schema(pa.schema([schema.field(c) for c in columns]))
-    ).parquet(*files)
-
-
 def _digest(listing: list | None) -> str | None:
     return None if listing is None else hashlib.md5(repr(listing).encode()).hexdigest()
 
 
 def dir_fingerprint(path: str | None) -> str | None:
     """Cheap identity of a parquet table DIRECTORY: its ``_listing``,
-    hashed. Parquet data files are immutable once written (every write
-    creates new files), so listing equality ⇒ content equality — a
-    freshness check that costs two ``os.walk``s instead of two
-    full-table scans.
-
-    Returns None when ``path`` isn't a local directory — callers fall
-    back to content_fingerprint. Any mismatch is also just a fallback,
-    never a verdict: a rewrite that produced identical content still
-    passes the content check."""
+    hashed; None when ``path`` isn't a local directory. Parquet data
+    files are immutable once written (every write creates new files),
+    so listing equality ⇒ content equality; a mismatch proves nothing
+    (``judge`` then compares content)."""
     return _digest(_listing(path))
 
 
@@ -226,111 +212,27 @@ def content_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> str:
     return str(row.fp if row.fp is not None else 0)
 
 
-# ----------------------------------------------------- the big artifact
+def delta_fingerprint(spark: SparkSession, fp: str, files: list[str], id_col: str, col: str) -> str:
+    """``fp`` plus the ``content_fingerprint`` of the parquet ``files`` a
+    pure append added: the whole table's (the DECIMAL sum is exact). The
+    files are typed from the first one's footer, so Spark runs no
+    schema-inference job, only the fingerprint's over the new rows."""
+    schema = pq.read_schema(files[0])
+    delta = spark.read.schema(
+        from_arrow_schema(pa.schema([schema.field(c) for c in (id_col, col)]))
+    ).parquet(*files)
+    return str(int(fp) + int(content_fingerprint(delta, id_col, col)))
 
 
-def write_ivf_table(indexed: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write vectors partitioned by ``cluster_id`` — probe-time cluster
-    filters become partition pruning (no data files read outside the
-    probed clusters; pinned by tests/test_plans.test_ivf_partition_pruning).
-
-    The repartition before the write is load-bearing: a partitionBy
-    from an N-partition frame writes up to N files into EVERY cluster
-    dir (the classic small-files fan-out — measured 8,161 files for a
-    91 MB / 256-cluster table, which put ~8k scheduling-overhead tasks
-    in front of every unpruned scan). Clustering the frame by the
-    partition column first writes one file per cluster per holding
-    partition — n_clusters files total."""
-    indexed.repartition("cluster_id").write.mode(mode).partitionBy(
-        "cluster_id"
-    ).parquet(path)
-
-
-def incremental_index(
-    vectors: DataFrame,
-    table_path: str,
-    centroids: np.ndarray,
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> int:
-    """Append only vectors whose id is NOT already indexed, assigned to
-    the existing centroids (FAISS ``add`` semantics — training is
-    frozen). Anti-join on id (broadcast-able: the *new* side is small in
-    steady state), matmul argmin assignment, partitioned append touching
-    only the affected cluster partitions. Returns rows appended."""
-    spark = vectors.sparkSession
-    existing = spark.read.parquet(table_path).select(id_col)
-    fresh = vectors.join(existing, id_col, "left_anti")
-    assigned = assign_clusters(fresh, centroids, vec_col)
-    n = assigned.count()
-    if n:
-        write_ivf_table(assigned, table_path, mode="append")
-    return n
-
-
-# ------------------------------------------------- index-tier lifecycle
-
-
-def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
-    """Persist a ``VectorIndexTier`` (embedding/auto.py) — the engine's
-    analogue of the reference writing ``<kb>.faiss`` next to the DB
-    (embed_manager.py save path). Layout under ``path``:
-
-    - ``meta``: one row (kind, id/vec column names, the vectors'
-      content fingerprint ``fp`` and directory fingerprint ``src_fp``);
-    - ``centroids`` (ivf/ivfsq/ivfpq), ``sq`` grid (ivfsq), ``pq/``
-      codebooks (ivfpq);
-    - ``indexed``: the derived table, PARTITIONED BY cluster_id;
-    - ``sources`` (with ``source_dir``): one row per data file of
-      ``source_dir`` that ``tier.vectors`` read (``_covered``) —
-      (relpath, size, mtime_ns), the entries ``src_fp`` hashes — so a
-      later pure append is told apart by its new files alone
-      (``_tier_verdict``), and a file appended while the tier was
-      built is not recorded as covered.
-
-    ``flat`` persists meta (and ``sources``) only — the raw vectors
-    table IS the index. Each table is swapped in whole and ``meta`` is
-    written last: a killed save never leaves a meta describing a tier
-    that is not there.
-
-    ``source_dir`` (the vectors table's parquet directory, when the
-    caller reads it from one, e.g. KnowledgeBase) pins the cheap
-    dir_fingerprint next to the content fingerprint, so a later load
-    of the UNCHANGED table skips the freshness corpus scan entirely.
-    """
-    spark = tier.vectors.sparkSession
-    listing = _covered(tier.vectors, source_dir)
-    fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
-    if tier.kind != "flat":
-        save_centroids(spark, tier.centroids, f"{path}/centroids")
-        if tier.kind == "ivfpq":
-            save_pq(spark, tier.pq, f"{path}/pq")
-        if tier.kind == "ivfsq":
-            save_sq(spark, tier.sq, f"{path}/sq")
-        PR.swap(f"{path}/indexed", lambda staged: write_ivf_table(tier.indexed, staged))
-    _record(path, dict(kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col), fp, listing)
-
-
-def _record(path: str, meta: dict, fp: str, listing: list | None) -> dict:
-    """Record that the tier at ``path`` covers the vectors whose content
-    fingerprint is ``fp`` and, with a ``listing``, exactly those data
-    files: ``sources``, then ``meta`` last. Returns the new meta."""
+def write_sources(table: str, listing: list | None) -> str | None:
+    """Replace the ``sources`` table at ``table`` by ``listing`` (the
+    files an index covers; nothing when None) and return its digest,
+    for the meta the caller writes last: a ``sources`` table its meta
+    does not hash is ignored (``_appended``)."""
     if listing is not None:
-        _write_sources(f"{path}/sources", listing)
-    meta = {**meta, "fp": fp, "src_fp": _digest(listing)}
-    _write_meta(path, meta)
-    return meta
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    # keys outside the layout (an old meta's ``n``) are dropped
-    PR.replace(pa.Table.from_pylist([meta], schema=_META_SCHEMA), f"{path}/meta")
-
-
-def _write_sources(table: str, listing: list) -> None:
-    """Replace the ``sources`` table at ``table`` by ``listing``."""
-    rows = [dict(zip(_SOURCES_SCHEMA.names, e)) for e in listing]
-    PR.replace(pa.Table.from_pylist(rows, schema=_SOURCES_SCHEMA), table)
+        rows = [dict(zip(_SOURCES_SCHEMA.names, e)) for e in listing]
+        PR.replace(pa.Table.from_pylist(rows, schema=_SOURCES_SCHEMA), table)
+    return _digest(listing)
 
 
 def _appended(table: str, listing: list, src_fp: str | None) -> list | None:
@@ -349,78 +251,159 @@ def _appended(table: str, listing: list, src_fp: str | None) -> list | None:
     return sorted(set(listing) - set(recorded))
 
 
-class _Verdict(NamedTuple):
+class Verdict(NamedTuple):
+    """``judge``'s verdict."""
+
     state: str  # "fresh" | "appendable" | "stale"
-    # from the content rule: the vectors' content fingerprint, and the
-    # ``source_dir`` files of the frame it judged (``_covered``); from
-    # the sources rule: ``source_dir``'s data files as judged, and the
-    # entries of that listing the pure append added
-    fp: str | None = None
-    listing: list | None = None
-    appended: list | None = None
-    vectors: DataFrame | None = None  # the frame the content rule judged
+    fp: str | None = None  # the frame's content fingerprint, when computed
+    listing: list | None = None  # the directory's files judged (content rule: covered)
+    appended: list | None = None  # the paths of the files a pure append added
+    frame: DataFrame | None = None  # the frame the content rule judged
+
+
+def judge(
+    spark: SparkSession, directory: str | None, sources: str, src_fp: str | None,
+    frame: DataFrame | None, id_col: str, col: str, fp: str | None,
+    appendable: Callable[[], bool],
+) -> Verdict:
+    """The freshness rule of an index built from the parquet table
+    ``directory``, each step run only when the one before cannot decide:
+
+    1. the directory's listing hashes to the recorded ``src_fp`` →
+       ``"fresh"``, no scan (parquet files are immutable);
+    2. ``appendable()`` (the index's own conditions) and every file the
+       ``sources`` table records is still there unchanged: a PURE append
+       of the other files → ``"appendable"``, no scan;
+    3. the content fingerprint of ``frame`` (default: read from
+       ``directory``) — not a row count: a rewrite under the same ids
+       must never serve stale results — equals ``fp`` → ``"fresh"``,
+       else ``"stale"``; either carries it and the files ``frame``
+       reads, for the caller to record.
+
+    Frame callers (no ``directory``) and indexes recorded without
+    ``sources`` take step 3."""
+    listing = _listing(directory)
+    if src_fp is not None and _digest(listing) == src_fp:
+        return Verdict("fresh", None, listing)
+    if listing is not None and appendable():
+        new = _appended(sources, listing, src_fp)
+        if new is not None:
+            files = [os.path.join(directory, rel) for rel, _size, _mtime in new]
+            return Verdict("appendable", None, listing, files)
+    if frame is None:
+        frame = spark.read.parquet(directory)
+    fp_now = content_fingerprint(frame, id_col, col)
+    state = "fresh" if fp_now == fp else "stale"
+    return Verdict(state, fp_now, covered(frame, directory), None, frame)
+
+
+# ----------------------------------------------------- the big artifact
+
+
+def write_ivf_table(indexed: DataFrame, path: str) -> None:
+    """Write vectors partitioned by ``cluster_id`` — probe-time cluster
+    filters become partition pruning (no data files read outside the
+    probed clusters; pinned by tests/test_plans.test_ivf_partition_pruning).
+
+    The repartition before the write is load-bearing: a partitionBy
+    from an N-partition frame writes up to N files into EVERY cluster
+    dir (the classic small-files fan-out — measured 8,161 files for a
+    91 MB / 256-cluster table, which put ~8k scheduling-overhead tasks
+    in front of every unpruned scan). Clustering the frame by the
+    partition column first writes one file per cluster per holding
+    partition — n_clusters files total."""
+    indexed.repartition("cluster_id").write.mode("overwrite").partitionBy(
+        "cluster_id"
+    ).parquet(path)
+
+
+# ------------------------------------------------- index-tier lifecycle
+
+
+def save_vector_index(tier, path: str, source_dir: str | None = None) -> None:
+    """Persist a ``VectorIndexTier`` (embedding/auto.py) — the engine's
+    analogue of the reference writing ``<kb>.faiss`` next to the DB
+    (embed_manager.py save path). Layout under ``path``:
+
+    - ``meta``: one row (kind, id/vec column names, the vectors'
+      content fingerprint ``fp`` and directory fingerprint ``src_fp``);
+    - ``centroids`` (ivf/ivfsq/ivfpq), ``sq`` grid (ivfsq), ``pq/``
+      codebooks (ivfpq);
+    - ``indexed``: the derived table, PARTITIONED BY cluster_id;
+    - ``sources`` (with ``source_dir``): one row per data file of
+      ``source_dir`` that ``tier.vectors`` read (``covered``) —
+      (relpath, size, mtime_ns), the entries ``src_fp`` hashes — so a
+      later pure append is told apart by its new files alone
+      (``judge``), and a file appended while the tier was
+      built is not recorded as covered.
+
+    ``flat`` persists meta (and ``sources``) only — the raw vectors
+    table IS the index. Each table is swapped in whole and ``meta`` is
+    written last: a killed save never leaves a meta describing a tier
+    that is not there. ``source_dir`` is the vectors table's parquet
+    directory, when the caller reads it from one (KnowledgeBase).
+    """
+    spark = tier.vectors.sparkSession
+    listing = covered(tier.vectors, source_dir)
+    fp = content_fingerprint(tier.vectors, tier.id_col, tier.vec_col)
+    if tier.kind != "flat":
+        save_centroids(spark, tier.centroids, f"{path}/centroids")
+        if tier.kind == "ivfpq":
+            save_pq(spark, tier.pq, f"{path}/pq")
+        if tier.kind == "ivfsq":
+            save_sq(spark, tier.sq, f"{path}/sq")
+        PR.swap(f"{path}/indexed", lambda staged: write_ivf_table(tier.indexed, staged))
+    _record(path, dict(kind=tier.kind, id_col=tier.id_col, vec_col=tier.vec_col), fp, listing)
+
+
+def _record(path: str, meta: dict, fp: str, listing: list | None) -> dict:
+    """Record that the tier at ``path`` covers the vectors whose content
+    fingerprint is ``fp`` and, with a ``listing``, exactly those data
+    files: ``sources``, then ``meta`` last. Returns the new meta."""
+    meta = {**meta, "fp": fp, "src_fp": write_sources(f"{path}/sources", listing)}
+    _write_meta(path, meta)
+    return meta
+
+
+def _write_meta(path: str, meta: dict) -> None:
+    # keys outside the layout (an old meta's ``n``) are dropped
+    PR.replace(pa.Table.from_pylist([meta], schema=_META_SCHEMA), f"{path}/meta")
 
 
 def _tier_verdict(
     spark: SparkSession, path: str, vectors: DataFrame | None, meta,
     source_dir: str | None = None,
-) -> _Verdict:
-    """The one freshness rule for a saved tier, each step run only when
-    the one before cannot decide:
-
-    1. with ``source_dir`` (the directory ``vectors`` was read from), an
-       unchanged ``dir_fingerprint`` listing proves the content
-       unchanged (parquet files are immutable) → ``"fresh"``, no scan;
-    2. ivf/ivfsq with ``source_dir``: every file the tier's ``sources``
-       record is still there with the same size and mtime, so the
-       change is a PURE append of the other files → ``"appendable"``,
-       those files being the delta (``appended``) — no scan, on the same
-       immutability;
-    3. the content fingerprint — not a row count: vectors re-embedded
-       under the same ids must never serve stale neighbors — equals the
-       saved one → ``"fresh"``;
-    4. ivf/ivfsq only: the previously-indexed ids' content is unchanged,
-       so the change is a pure append → ``"appendable"`` (the delta is
-       the ids the tier lacks). ivfpq is rebuilt instead: its residual
-       codebooks drift fastest as the corpus grows, and a rebuild
-       doubles as the retrain ``index_drift`` would recommend.
-
-    Either ``"appendable"`` is FAISS ``add`` against the frozen
-    centroids / SQ grid (``load_vector_index``). Steps 3-4 are the
-    content rule: frame callers (no ``source_dir``) and tiers saved
-    without ``sources`` take it; with ``source_dir`` a None ``vectors``
-    is read from it there, so steps 1-2 need no frame. Anything else
-    (in-place mutation, pre-fingerprint meta) is ``"stale"``; a flat
-    tier is always ``"fresh"`` (the raw vectors table IS the index).
-    """
-    fp_old, kind = meta.get("fp"), meta["kind"]
+) -> Verdict:
+    """``judge`` of a saved tier against ``vectors`` (read from
+    ``source_dir`` when None), under the tier's own rules: a flat tier
+    is always ``"fresh"`` (the raw vectors table IS the index) and a
+    meta without ``fp`` ``"stale"``; only ivf/ivfsq take an append
+    (FAISS ``add`` against the frozen centroids / SQ grid,
+    ``load_vector_index``), ivfpq is rebuilt instead (its residual
+    codebooks drift fastest as the corpus grows, and a rebuild doubles
+    as the retrain ``index_drift`` would recommend). When the content
+    rule finds the vectors changed, ivf/ivfsq are still
+    ``"appendable"`` if the indexed ids' content is unchanged (the
+    delta being the ids the tier lacks): frame callers and tiers saved
+    without ``sources`` prove a pure append this way."""
+    kind, fp_old = meta["kind"], meta.get("fp")
     if kind == "flat":
-        return _Verdict("fresh")
+        return Verdict("fresh")
     if fp_old is None:
-        return _Verdict("stale")
-    listing = _listing(source_dir)
-    src_fp_old = meta.get("src_fp")
-    if src_fp_old is not None and _digest(listing) == src_fp_old:
-        return _Verdict("fresh")
-    appendable = kind in ("ivf", "ivfsq")
-    if appendable and listing is not None:
-        new = _appended(f"{path}/sources", listing, src_fp_old)
-        if new is not None:
-            return _Verdict("appendable", None, listing, new)
-    if vectors is None:
-        vectors = spark.read.parquet(source_dir)
-    covered = _covered(vectors, source_dir)
+        return Verdict("stale")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    fp_now = content_fingerprint(vectors, id_col, vec_col)
-    if fp_now == fp_old:
-        return _Verdict("fresh", fp_now, covered)
-    if not appendable:
-        return _Verdict("stale")
+    appendable = kind in ("ivf", "ivfsq")
+    verdict = judge(
+        spark, source_dir, f"{path}/sources", meta.get("src_fp"),
+        vectors, id_col, vec_col, fp_old, lambda: appendable,
+    )
+    if verdict.state != "stale" or not appendable:
+        return verdict
     indexed_ids = spark.read.parquet(f"{path}/indexed").select(id_col)
-    old_subset = vectors.join(indexed_ids, id_col, "left_semi")
+    old_subset = verdict.frame.join(indexed_ids, id_col, "left_semi")
     if content_fingerprint(old_subset, id_col, vec_col) == fp_old:
-        return _Verdict("appendable", fp_now, covered, None, vectors)
-    return _Verdict("stale")
+        return verdict._replace(state="appendable")
+    return verdict
 
 
 def index_freshness(
@@ -469,7 +452,7 @@ def load_vector_index(
         if verdict.state == "stale":
             return None
         if verdict.state == "appendable":
-            meta = _absorb(spark, path, meta, verdict, source_dir)
+            meta = _absorb(spark, path, meta, verdict)
         elif verdict.fp is not None and verdict.listing is not None:
             meta = _record(path, meta, verdict.fp, verdict.listing)
         return _load_tier(spark, path, vectors, meta)
@@ -477,7 +460,7 @@ def load_vector_index(
         return None
 
 
-def _absorb(spark, path: str, meta, verdict: _Verdict, source_dir) -> dict:
+def _absorb(spark, path: str, meta, verdict: Verdict) -> dict:
     """FAISS ``add`` of an ``"appendable"`` verdict's delta on the
     driver, then ``sources`` and ``meta`` (last) for the listing judged;
     returns the new meta.
@@ -485,27 +468,24 @@ def _absorb(spark, path: str, meta, verdict: _Verdict, source_dir) -> dict:
     With ``verdict.appended`` the delta is those files, read one at a
     time (driver memory is bounded by the largest), each written under
     its own name so a retry after a kill rewrites its rows instead of
-    adding them twice; the new fingerprint is the old one plus the
-    delta's (one Spark job over the delta rows; the DECIMAL sum is
-    exact, so it equals a full ``content_fingerprint``). Under the
-    content rule the delta is the ids the tier lacks (an anti-join,
-    collected through Arrow) and the fingerprint the verdict's."""
+    adding them twice; the new fingerprint is ``delta_fingerprint``'s.
+    Under the content rule the delta is the ids the tier lacks (an
+    anti-join, collected through Arrow) and the fingerprint the
+    verdict's."""
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cents = load_centroids(spark, f"{path}/centroids")
     sq = load_sq(spark, f"{path}/sq", centroids=cents) if meta["kind"] == "ivfsq" else None
     table_path = f"{path}/indexed"
     if verdict.appended is None:
         indexed_ids = spark.read.parquet(table_path).select(id_col)
-        fresh = verdict.vectors.join(indexed_ids, id_col, "left_anti").toArrow()
+        fresh = verdict.frame.join(indexed_ids, id_col, "left_anti").toArrow()
         _absorb_rows(fresh, table_path, id_col, vec_col, cents, sq)
         fp = verdict.fp
     else:
-        files = [os.path.join(source_dir, rel) for rel, _size, _mtime in verdict.appended]
-        for f in files:
+        for f in verdict.appended:
             rows = pq.read_table(f)
             _absorb_rows(rows, table_path, id_col, vec_col, cents, sq, os.path.basename(f))
-        delta = read_files(spark, files, [id_col, vec_col])
-        fp = str(int(meta["fp"]) + int(content_fingerprint(delta, id_col, vec_col)))
+        fp = delta_fingerprint(spark, meta["fp"], verdict.appended, id_col, vec_col)
     return _record(path, meta, fp, verdict.listing)
 
 

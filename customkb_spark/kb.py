@@ -11,8 +11,8 @@ $VECTORDBS/<name>/ with SQLite+FAISS+NPZ sidecars, SURVEY.md §1.1):
     <kb_dir>/vindex/, postings/, term_stats/, bm25_meta/, bm25_sources/
                           derived indexes; each records the data files
                           and content fingerprint of the table it
-                          covers, and one freshness rule per index
-                          judges it on read
+                          covers, and one freshness rule
+                          (``store.judge``) judges both on read
 
 Semantics preserved from the reference:
 - ``database`` is incremental: already-ingested sources are skipped via
@@ -47,7 +47,6 @@ from __future__ import annotations
 
 import os
 import time
-from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -86,15 +85,6 @@ def _dir_identity(path: str) -> tuple | None:
     except FileNotFoundError:
         return None
     return st.st_ino, st.st_mtime_ns
-
-
-class _BM25State(NamedTuple):
-    """``KnowledgeBase._bm25_freshness``'s verdict."""
-
-    meta: dict | None  # bm25_meta, when the index is fresh or appendable
-    fp: str | None = None  # the chunks' content fingerprint, when computed
-    listing: list | None = None  # the chunks/ files judged (content rule: covered)
-    appended: list | None = None  # the entries of ``listing`` a pure append added
 
 
 class KnowledgeBase:
@@ -155,9 +145,11 @@ class KnowledgeBase:
             docs, lang_col=lang, chunk_size=self.cfg.db_max_tokens,
             language=self.cfg.language,
         ).localCheckpoint()
-        n = chunks.count()
+        pairs = chunks.groupBy("doc_id", "sourcedoc").count().collect()
+        n = sum(r["count"] for r in pairs)
         if n == 0:
             return 0
+        self._refuse_shared_doc_ids([(r.doc_id, r.sourcedoc) for r in pairs])
         if force and self._exists("chunks"):
             # reference semantics (db_manager.py:613-615): delete the
             # re-ingested paths' rows, keep everything else — an
@@ -184,6 +176,28 @@ class KnowledgeBase:
         else:
             chunks.write.mode("append").parquet(self._p("chunks"))
         return n
+
+    def _refuse_shared_doc_ids(self, pairs: list) -> None:
+        """Raise ValueError, naming the id and both sources, when a
+        ``doc_id`` of the new chunks' (doc_id, sourcedoc) ``pairs`` has
+        two sources, in ``pairs`` or with a chunk of ``chunks/`` the call
+        keeps (one of another source): chunk ids are ``doc_id · 2^22 +
+        sid``, so the second document would reuse the first's."""
+        owner: dict = {}
+        for doc, src in pairs:
+            if owner.setdefault(doc, src) != src:
+                raise ValueError(f"doc_id {doc} is given to both {owner[doc]!r} and {src!r}")
+        if self._exists("chunks"):
+            held = pq.read_table(self._p("chunks"), columns=["id", "sourcedoc"])
+            doc = pc.shift_right(held["id"], 22)
+            new = pa.array(list(set(owner.values())))
+            clash = held.filter(pc.and_(
+                pc.is_in(doc, value_set=pa.array(list(owner), pa.int64())),
+                pc.invert(pc.is_in(held["sourcedoc"], value_set=new)),
+            ))
+            if clash.num_rows:
+                d, src = clash["id"][0].as_py() >> 22, clash["sourcedoc"][0].as_py()
+                raise ValueError(f"doc_id {d} is given to both {src!r} and {owner[d]!r}")
 
     # ---------------------------------------------------------- embed
     def embed(self) -> int:
@@ -325,18 +339,18 @@ class KnowledgeBase:
         it covers, so the next check decides from the listing again),
         absorbed after a pure append, otherwise (or with ``force``)
         rebuilt."""
-        state = _BM25State(None) if force else self._bm25_freshness()
-        if state.appended is not None:
-            meta = self._absorb_bm25(state)
-            if meta is not None:
-                return meta, False
-        elif state.meta is not None:
-            if state.fp is not None:
-                return self._commit_bm25("", "bm25_meta", state.meta, state.listing), False
-            return state.meta, False
+        meta, verdict = (None, IS.Verdict("stale")) if force else self._bm25_freshness()
+        if verdict.state == "appendable":
+            absorbed = self._absorb_bm25(meta, verdict)
+            if absorbed is not None:
+                return absorbed, False
+        elif verdict.state == "fresh":
+            if verdict.fp is not None:
+                return self._commit_bm25("", "bm25_meta", meta, verdict.listing), False
+            return meta, False
         chunks = self._read("chunks")
-        listing = IS._covered(chunks, self._p("chunks"))
-        fp = state.fp if state.fp is not None and state.listing == listing else None
+        listing = IS.covered(chunks, self._p("chunks"))
+        fp = verdict.fp if verdict.listing == listing else None
         if fp is None:
             fp = IS.content_fingerprint(chunks, "id", "originaltext")
         return self._write_bm25(chunks, "", "bm25_meta", fp, listing), True
@@ -365,10 +379,8 @@ class KnowledgeBase:
         primary index) the ``chunks/`` files it covers in
         ``bm25_sources``, then ``meta`` last with their hash and that of
         the ``term_stats`` listing. Returns the meta."""
-        if listing is not None:
-            IS._write_sources(self._p("bm25_sources"), listing)
         meta = {
-            **meta, "chunks_src_fp": IS._digest(listing),
+            **meta, "chunks_src_fp": IS.write_sources(self._p("bm25_sources"), listing),
             "term_stats_fp": IS.dir_fingerprint(self._p(f"{prefix}term_stats")),
         }
         PR.replace(
@@ -377,52 +389,31 @@ class KnowledgeBase:
         self._invalidate()
         return meta
 
-    def _bm25_freshness(self, chunks: DataFrame | None = None) -> "_BM25State":
-        """The one BM25 freshness rule, each step run only when the one
-        before cannot decide (``store._tier_verdict``'s, over
-        ``chunks/``):
-
-        1. no index, or one tokenized under another language (postings
-           under another stopword gate are the wrong index) → stale;
-        2. an unchanged ``chunks/`` listing proves the content unchanged
-           (parquet files are immutable) → fresh, no scan;
-        3. every file ``bm25_sources`` records is still there unchanged,
-           and ``term_stats`` is the table the meta recorded (an absorb
-           killed after swapping it leaves another) → a pure append of
-           the other files (``appended``), no scan;
-        4. the content fingerprint of ``chunks`` (default: ``chunks/``)
-           equals the recorded one → fresh; a force re-ingest's rewrite
-           under unchanged ids and counts fails it → stale.
-
-        ``meta`` is the persisted ``bm25_meta`` row when the index is
-        fresh or appendable."""
+    def _bm25_freshness(self, chunks: DataFrame | None = None) -> tuple[dict | None, IS.Verdict]:
+        """(``bm25_meta``, ``store.judge`` verdict) of the primary BM25
+        index over ``chunks/`` (the content rule fingerprints ``chunks``,
+        default: ``chunks/``), under BM25's own rules: no index, or one
+        tokenized under another language (the wrong stopword gate), is
+        stale; a pure append is absorbed only with the totals it adds to
+        (``sum_dl``, ``chunks_fp``) and while ``term_stats`` is the table
+        the meta recorded (an absorb killed after swapping it leaves
+        another)."""
         if not all(
             self._exists(t) for t in ("bm25_meta", "postings", "term_stats")
         ):
-            return _BM25State(None)
+            return None, IS.Verdict("stale")
         meta = PR.read_row(self._p("bm25_meta"))
         if meta.get("language", "en") != self.cfg.language:
-            return _BM25State(None)
-        listing = IS._listing(self._p("chunks"))
-        src_fp = meta.get("chunks_src_fp")
-        if src_fp is not None and IS._digest(listing) == src_fp:
-            return _BM25State(meta, None, listing)
-        if (
-            listing is not None
-            and None not in (meta.get("sum_dl"), meta.get("chunks_fp"))
-            and IS.dir_fingerprint(self._p("term_stats")) == meta.get("term_stats_fp")
-        ):
-            new = IS._appended(self._p("bm25_sources"), listing, src_fp)
-            if new is not None:
-                return _BM25State(meta, None, listing, new)
-        if chunks is None:
-            chunks = self._read("chunks")
-        fp = IS.content_fingerprint(chunks, "id", "originaltext")
-        covered = IS._covered(chunks, self._p("chunks"))
-        return _BM25State(meta if meta.get("chunks_fp") == fp else None, fp, covered)
+            return None, IS.Verdict("stale")
+        return meta, IS.judge(
+            self.spark, self._p("chunks"), self._p("bm25_sources"),
+            meta.get("chunks_src_fp"), chunks, "id", "originaltext", meta.get("chunks_fp"),
+            lambda: None not in (meta.get("sum_dl"), meta.get("chunks_fp"))
+            and IS.dir_fingerprint(self._p("term_stats")) == meta.get("term_stats_fp"),
+        )
 
-    def _absorb_bm25(self, state: "_BM25State") -> dict | None:
-        """Add the ``chunks/`` files of a pure append (``state.appended``)
+    def _absorb_bm25(self, meta: dict, verdict: IS.Verdict) -> dict | None:
+        """Add the ``chunks/`` files of a pure append (``verdict.appended``)
         to the persisted BM25 index, on the driver, from the tokens
         ``database`` stored with them (``bm25_tokens`` / ``doc_length``,
         the ``bm25_token_set`` of ``originaltext`` under the KB's
@@ -431,7 +422,7 @@ class KnowledgeBase:
         instead of adding them twice; ``df`` merged into ``term_stats``
         and ``idf`` derived from it with ``bm25.with_idf`` (one Spark
         job); ``n`` and ``sum_dl`` added up, ``avgdl = sum_dl / n``;
-        ``chunks_fp`` plus the delta's fingerprint (one Spark job);
+        ``chunks_fp`` by ``store.delta_fingerprint`` (one Spark job);
         then ``bm25_sources`` and ``meta`` last. The result equals a
         from-scratch build: the same integers, the same ``idf``
         expression. Returns the new meta, or None when a new file holds
@@ -439,10 +430,8 @@ class KnowledgeBase:
         rebuilds."""
         from customkb_spark.operators import bm25 as B25
 
-        meta = state.meta
-        files = [os.path.join(self._p("chunks"), rel) for rel, _size, _mtime in state.appended]
         new = []
-        for f in files:
+        for f in verdict.appended:
             if not {"bm25_tokens", "doc_length"} <= set(pq.read_schema(f).names):
                 return None
             t = pq.read_table(f, columns=["id", "bm25_tokens", "doc_length"])
@@ -471,10 +460,9 @@ class KnowledgeBase:
             pa.table({"term": merged["term"], "df": merged["df_sum"]})
         )
         self._swap("term_stats", B25.with_idf(term_df, n))
-        delta = IS.read_files(self.spark, files, ["id", "originaltext"])
-        fp = int(meta["chunks_fp"]) + int(IS.content_fingerprint(delta, "id", "originaltext"))
-        meta = {**meta, "n_chunks": n, "avgdl": sum_dl / n, "sum_dl": sum_dl, "chunks_fp": str(fp)}
-        return self._commit_bm25("", "bm25_meta", meta, state.listing)
+        fp = IS.delta_fingerprint(self.spark, meta["chunks_fp"], verdict.appended, "id", "originaltext")
+        meta = {**meta, "n_chunks": n, "avgdl": sum_dl / n, "sum_dl": sum_dl, "chunks_fp": fp}
+        return self._commit_bm25("", "bm25_meta", meta, verdict.listing)
 
     # ---------------------------------------------------------- query
     def _invalidate(self) -> None:
@@ -527,16 +515,17 @@ class KnowledgeBase:
         self._bm25_meta = meta
         # the sources as listed before they were read; the derived
         # tables as this call left them
-        self._index_fp = fp[:2] + self._tables_fp()[2:]
+        self._index_fp = fp[:2] + self._derived_fp()
         # None over the memory budget: then Spark plans serve
         self._resident = RI.ResidentIndex.load(
             self.kb_dir, int(meta["n_chunks"]), float(meta["avgdl"]), self.cfg
         )
 
     def _tables_fp(self) -> tuple:
-        return tuple(IS.dir_fingerprint(self._p(t)) for t in _SOURCES) + tuple(
-            _dir_identity(self._p(t)) for t in _DERIVED
-        )
+        return tuple(IS.dir_fingerprint(self._p(t)) for t in _SOURCES) + self._derived_fp()
+
+    def _derived_fp(self) -> tuple:
+        return tuple(_dir_identity(self._p(t)) for t in _DERIVED)
 
     def _build_index(self) -> HY.HybridIndex:
         """The Spark-plan form of the index over the persisted tables —
@@ -709,7 +698,7 @@ class KnowledgeBase:
         from customkb_spark.plans.migrations import get_current_schema_version
 
         out["schema_version"] = get_current_schema_version(self.spark, self.kb_dir)
-        # persisted-index freshness: the same rules a query applies
+        # persisted-index freshness: the verdicts a query acts on
         # (_bm25_freshness; store._tier_verdict), where "appendable" = a
         # query absorbs the new chunks / vectors files
         if chunks is None:
@@ -717,11 +706,7 @@ class KnowledgeBase:
         elif not self._exists("bm25_meta"):
             out["bm25_index"] = "absent"
         else:
-            state = self._bm25_freshness(chunks)
-            out["bm25_index"] = (
-                "appendable" if state.appended is not None
-                else "fresh" if state.meta is not None else "stale"
-            )
+            out["bm25_index"] = self._bm25_freshness(chunks)[1].state
         if self._exists("vindex") and self._exists("vectors"):
             out["vector_index"] = IS.index_freshness(
                 self.spark, self._p("vindex"), self._read("vectors"),

@@ -52,9 +52,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32 (the driver's local
-    harness); on a real cluster the master is taken from the environment
-    and this arg is ignored.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or the host's CPU count
+    (``os.cpu_count()``); on a real cluster the master is taken from
+    the environment and this arg is ignored.
 
     ``gpus_per_task`` (or $SPARK_GRAFT_GPUS_PER_TASK) sets
     ``spark.task.resource.gpu.amount`` — the cluster-scheduling
@@ -67,7 +67,7 @@ def get_spark(
     = 4 rerank tasks per device — the memory-aware batching the
     reference does per-process). No-op on this CPU-only container.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     builder = SparkSession.builder.appName(app_name)
     if not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")

@@ -50,8 +50,8 @@ def _drop_already_written(batch: DataFrame, table_dir: str, id_col: str) -> Data
     already in the id-keyed output table. foreachBatch gives at-least-
     once delivery to non-idempotent sinks — on a batch/task retry the
     same rows arrive again, and a blind append would duplicate them.
-    The anti-join makes the append a no-op on replay (the streaming
-    twin of batch ``store.incremental_index``'s anti-join)."""
+    The anti-join makes the append a no-op on replay (as
+    ``KnowledgeBase.embed``'s anti-join against ``vectors/`` does)."""
     from pyspark.errors import AnalysisException
 
     spark = batch.sparkSession

@@ -780,3 +780,60 @@ def test_optimize_compacts_postings_and_the_ivf_table(spark, base_kb, tmp_path):
     assert [kb.query(q, log=False) for q in queries] == before
     assert [held.query(q, log=False) for q in queries] == before
     assert kb.verify()["bm25_index"] == kb.verify()["vector_index"] == "fresh"
+
+
+def test_tier_absorb_killed_before_meta_rebuilds_once(spark, base_kb, tmp_path, monkeypatch):
+    """Killed after it replaced ``vindex/sources`` and before ``meta``,
+    the absorb leaves the old meta, which does not hash the new
+    ``sources``; the retry cannot take a pure append from it, and the
+    indexed table already holds the new ids, so the tier is rebuilt:
+    each vector indexed once."""
+    from customkb_spark.functions import parquet_rows as PR
+
+    kb = _appended_kb(spark, base_kb, tmp_path, "killsources")
+    meta = PR.read_row(kb._p("vindex/meta"))
+    real = PR.replace
+
+    def kill(table, directory, *a, **k):
+        real(table, directory, *a, **k)
+        if directory.rstrip("/").endswith(os.path.join("vindex", "sources")):
+            raise _Kill(directory)
+
+    monkeypatch.setattr(PR, "replace", kill)
+    with pytest.raises(_Kill):
+        kb.query("killsources0 walrus beacons", log=False)
+    monkeypatch.undo()
+    assert PR.read_row(kb._p("vindex/meta")) == meta  # sources first, meta last
+
+    retry = KnowledgeBase(spark, kb.kb_dir, KBConfig(**CFG))
+    assert "killsources0" in retry.query("killsources0 walrus beacons", log=False)
+    ids = _indexed_ids(retry)
+    assert len(ids) == len(set(ids)) == retry._read("vectors").count()
+    assert retry.verify()["vector_index"] == "fresh"
+
+
+def test_database_refuses_a_doc_id_held_by_another_source(spark, base_kb, tmp_path):
+    """Chunk ids are ``doc_id · 2^22 + sid``: a doc_id already held by a
+    chunk of another source, or given to two sources in one call, is
+    refused before anything is written; a force re-ingest of the
+    holding source itself is not."""
+    kb = KnowledgeBase(spark, _copy(base_kb, tmp_path), KBConfig(**CFG))
+
+    def doc(doc_id, source, text="collision walrus beacons"):
+        return (doc_id, f"{text} {source}", source)
+
+    def docs(*rows):
+        return spark.createDataFrame(list(rows), ["doc_id", "text", "source"])
+
+    assert kb.database(docs(doc(9300, "a.txt"))) > 0
+    n = kb._read("chunks").count()
+    held = [doc(9300, "b.txt")]
+    twice = [doc(9301, "c.txt"), doc(9301, "d.txt")]
+    for rows, sources in ((held, ("a.txt", "b.txt")), (twice, ("c.txt", "d.txt"))):
+        with pytest.raises(ValueError, match=f"doc_id {rows[0][0]} ") as err:
+            kb.database(docs(*rows))
+        assert all(src in str(err.value) for src in sources)
+        assert kb._read("chunks").count() == n
+    assert kb.database(docs(doc(9300, "a.txt", "rewritten walrus")), force=True) > 0
+    ids = kb._read("chunks").select("id")
+    assert ids.count() == ids.distinct().count()

@@ -33,31 +33,6 @@ def test_pq_round_trip_same_search_results(spark, embeddings, tmp_path):
     assert a == b
 
 
-def test_incremental_index_matches_full_rebuild(spark, embeddings, tmp_path):
-    cents = train_centroids(embeddings, "embedding", nlist=8)
-    first = embeddings.filter(F.col("vec_id") % 2 == 0)
-    rest = embeddings  # includes already-indexed ids → anti-join drops them
-    path = str(tmp_path / "ivf")
-
-    S.write_ivf_table(assign_clusters(first, cents, "embedding"), path)
-    appended = S.incremental_index(rest, path, cents, id_col="vec_id", vec_col="embedding")
-    assert appended == embeddings.count() - first.count()
-
-    # idempotent: nothing new on a second pass
-    assert S.incremental_index(rest, path, cents, id_col="vec_id", vec_col="embedding") == 0
-
-    # the incrementally-built table equals a full rebuild (id → cluster)
-    full = {
-        (r.vec_id, r.cluster_id)
-        for r in assign_clusters(embeddings, cents, "embedding").select("vec_id", "cluster_id").collect()
-    }
-    inc = {
-        (r.vec_id, r.cluster_id)
-        for r in spark.read.parquet(path).select("vec_id", "cluster_id").collect()
-    }
-    assert inc == full
-
-
 def test_search_identical_after_persistence(spark, embeddings, tmp_path):
     cents = train_centroids(embeddings, "embedding", nlist=8)
     path = str(tmp_path / "ivf2")

@@ -408,8 +408,10 @@ class KnowledgeBase:
         return meta, IS.judge(
             self.spark, self._p("chunks"), self._p("bm25_sources"),
             meta.get("chunks_src_fp"), chunks, "id", "originaltext", meta.get("chunks_fp"),
-            lambda: None not in (meta.get("sum_dl"), meta.get("chunks_fp"))
-            and IS.dir_fingerprint(self._p("term_stats")) == meta.get("term_stats_fp"),
+            lambda: (
+                None not in (meta.get("sum_dl"), meta.get("chunks_fp"))
+                and IS.dir_fingerprint(self._p("term_stats")) == meta.get("term_stats_fp")
+            ),
         )
 
     def _absorb_bm25(self, meta: dict, verdict: IS.Verdict) -> dict | None:
